@@ -1,6 +1,6 @@
 package graft.query
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -112,49 +112,48 @@ object Geofence {
       Seq.empty[(String, Option[String], Double, Double, Double)]
         .toDF("collection", "fence_key", "flat", "flon", "fradius")
 
+    /** Read with the known schema: no schema-inference job per read. */
     def load(): DataFrame =
       if (java.nio.file.Files.exists(java.nio.file.Paths.get(path)))
-        spark.read.parquet(path)
+        spark.read.schema(emptyTable.schema).parquet(path)
       else emptyTable
 
-    private def write(df: DataFrame): Unit = {
-      // fence tables are tiny: collect-rewrite keeps the overwrite atomic
-      // even though the source of the new table is the table itself
-      val rows = df.collect().toSeq
-      spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), df.schema)
-        .write.mode("overwrite").parquet(path)
-    }
+    /** Every stored row, in one job; fence tables are broadcast-scale. */
+    private def all(): Seq[Row] = load().collect().toSeq
 
-    def collectionExists(name: String): Boolean =
-      load().filter(col("collection") === name).limit(1).count() > 0
+    private def write(rows: Seq[Row]): Unit =
+      // the new table is built on the driver from the collected old one,
+      // so the overwrite never reads the files it replaces
+      spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), emptyTable.schema)
+        .write.mode("overwrite").parquet(path)
+
+    private def inCollection(name: String)(r: Row): Boolean = r.getString(0) == name
+
+    def collectionExists(name: String): Boolean = all().exists(inCollection(name))
 
     def addCollection(name: String): Unit = {
-      require(!collectionExists(name), s"fence already exists: $name")
-      write(load().unionByName(
-        Seq((name, Option.empty[String], 0.0, 0.0, 0.0))
-          .toDF("collection", "fence_key", "flat", "flon", "fradius")))
+      val rows = all()
+      require(!rows.exists(inCollection(name)), s"fence already exists: $name")
+      write(rows :+ Row(name, null, 0.0, 0.0, 0.0))
     }
 
     def deleteCollection(name: String): Unit =
-      write(load().filter(col("collection") =!= name))
+      write(all().filterNot(inCollection(name)))
 
     /** MERGE by (collection, fence_key): the new circle wins. */
     def upsertFencePoint(name: String, fence: Fence): Unit = {
-      require(collectionExists(name), s"FenceIndex does not contain fence $name")
-      val kept = load().filter(
-        col("collection") =!= name || col("fence_key").isNull ||
-          col("fence_key") =!= fence.key)
-      write(kept.unionByName(
-        Seq((name, Option(fence.key), fence.lat, fence.lon, fence.radiusKm))
-          .toDF("collection", "fence_key", "flat", "flon", "fradius")))
+      val rows = all()
+      require(rows.exists(inCollection(name)), s"FenceIndex does not contain fence $name")
+      val kept = rows.filterNot(r => inCollection(name)(r) && r.getString(1) == fence.key)
+      write(kept :+ Row(name, fence.key, fence.lat, fence.lon, fence.radiusKm))
     }
 
     def fences(name: String): Seq[Fence] = {
-      require(collectionExists(name), s"FenceIndex does not contain fence $name")
-      load().filter(col("collection") === name && col("fence_key").isNotNull)
-        .collect()
+      val rows = all().filter(inCollection(name))
+      require(rows.nonEmpty, s"FenceIndex does not contain fence $name")
+      rows.filterNot(_.isNullAt(1))
         .map(r => Fence(r.getString(1), r.getDouble(2), r.getDouble(3), r.getDouble(4)))
-        .sortBy(_.key).toSeq
+        .sortBy(_.key)
     }
 
     /** FenceIndex.Search recast for batch: status of a track against the

@@ -41,7 +41,9 @@ object ScoringConstants {
  *
  * Query plan shape: the query-term set is tiny -> `isin` filter on the
  * postings table (partition/row-group prunable on term), per-field stats
- * are scalar literals, scoring is pure column arithmetic, and the final
+ * and query-term multiplicities are literals, df is a broadcast of the
+ * query terms' rows of the stored vocabulary, scoring is pure column
+ * arithmetic, and the final
  * `orderBy(desc(score)).limit(k)` becomes TakeOrderedAndProject — a true
  * distributed top-k, never a full sort at scale.
  */
@@ -80,41 +82,58 @@ class SearchIndex(docs: DataFrame, idCol: String, nameCol: String, addrCol: Stri
   private def termFilter(terms: Seq[String])(df: DataFrame): DataFrame =
     df.filter(col("term").isin(terms: _*))
 
-  /** df over the union of both fields' docs (scoring.go:26-51). */
-  private def dfBothFields(terms: Seq[String]): DataFrame =
-    postingsName.transform(termFilter(terms)).select("term", "doc_id")
-      .unionByName(postingsAddr.transform(termFilter(terms)).select("term", "doc_id"))
-      .distinct()
-      .groupBy("term").agg(count(lit(1)).as("df"))
+  /** Per-occurrence multiplicity of each query term, a literal map looked
+   *  up by the row's term: NULL for a term outside `terms`. */
+  private def multiplicity(terms: Seq[String]): Column =
+    typedLit(terms.groupBy(identity).map { case (t, l) => (t, l.size) }).apply(col("term"))
+
+  /** df of `terms` from the stored [[vocabulary]] — the count of distinct
+   *  (term, doc_id) pairs over both fields (scoring.go:26-51) — built once
+   *  with the index, never recomputed from the postings per request. */
+  private def storedDf(terms: Seq[String]): DataFrame =
+    broadcast(vocabulary.transform(termFilter(terms)).select("term", "df"))
 
   import ScoringConstants._
 
-  /** BM25F scores: (doc_id, score), descending. `terms` keeps duplicates —
-   *  the reference accumulates once per query-term occurrence. */
-  def bm25f(terms: Seq[String]): DataFrame = {
-    val qdf = dfBothFields(terms.distinct)
-    // per-occurrence multiplicity of each query term
-    val multiplicity = terms.groupBy(identity).map { case (t, l) => (t, l.size) }
-    val multDf = docs.sparkSession.createDataFrame(multiplicity.toSeq)
-      .toDF("term", "qmult")
-    val idf = log10(col("docs_n") - col("df") + 0.5) - log10(col("df") + 0.5)
+  /** BM25F scores: (doc_id, score). `terms` keeps duplicates — the
+   *  reference accumulates once per query-term occurrence. */
+  def bm25f(terms: Seq[String]): DataFrame = bm25fMax(Seq(terms))
 
-    def fieldScore(postings: DataFrame, lens: DataFrame, weight: Double,
-                   b: Double, avgLen: Double): DataFrame =
-      postings.transform(termFilter(terms.distinct))
+  /**
+   * Per-doc maximum of [[bm25f]] over `queries`, in ONE pass over the
+   * postings of their combined terms: each (term, doc, field) contribution
+   * is computed once and summed per query under that query's literal
+   * multiplicity map; the doc's score is the greatest per-query sum. A doc
+   * none of a query's terms hit has a NULL sum for that query (not 0), so
+   * a negative-idf query still wins its docs exactly as the per-query
+   * plans' union + max did.
+   */
+  def bm25fMax(queries: Seq[Seq[String]]): DataFrame = {
+    if (queries.isEmpty) return bm25fMax(Seq(Nil))
+    val terms = queries.flatten.distinct
+    val idf = log10(lit(docsCount.toDouble) - col("df") + 0.5) - log10(col("df") + 0.5)
+
+    // w/(K1+w) per field; idf joins once, after the fields' union
+    def fieldSat(postings: DataFrame, lens: DataFrame, weight: Double,
+                 b: Double, avgLen: Double): DataFrame = {
+      val w = lit(weight) * col("tf") /
+        (lit(1.0) + lit(b) * (col("len") / lit(avgLen) - lit(1.0)))
+      postings.transform(termFilter(terms))
         .join(lens, Seq("doc_id"))
-        .join(broadcast(qdf), Seq("term"))
-        .join(broadcast(multDf), Seq("term"))
-        .withColumn("docs_n", lit(docsCount.toDouble))
-        .withColumn("w", lit(weight) * col("tf") /
-          (lit(1.0) + lit(b) * (col("len") / lit(avgLen) - lit(1.0))))
-        .withColumn("contrib",
-          (col("w") / (lit(K1Bm25f) + col("w"))) * idf * col("qmult"))
-        .select(col("doc_id"), col("contrib"))
+        .select(col("doc_id"), col("term"), (w / (lit(K1Bm25f) + w)).as("sat"))
+    }
 
-    fieldScore(postingsName, lenName, NameWeight, NameB, avgLenName)
-      .unionByName(fieldScore(postingsAddr, lenAddr, AddressWeight, NameB, avgLenAddr))
-      .groupBy("doc_id").agg(sum(col("contrib")).as("score"))
+    val perQuery = queries.zipWithIndex.map { case (q, i) =>
+      sum(col("contrib") * multiplicity(q)).as(s"s$i")
+    }
+    val sums = perQuery.indices.map(i => col(s"s$i"))
+    val best = if (sums.size == 1) sums.head else greatest(sums: _*)
+    fieldSat(postingsName, lenName, NameWeight, NameB, avgLenName)
+      .unionByName(fieldSat(postingsAddr, lenAddr, AddressWeight, NameB, avgLenAddr))
+      .join(storedDf(terms), Seq("term"))
+      .withColumn("contrib", col("sat") * idf)
+      .groupBy("doc_id").agg(perQuery.head, perQuery.tail: _*)
+      .select(col("doc_id"), best.as("score"))
   }
 
   /** BM25+ over merged name++address postings (scoring.go:143-181). */
@@ -122,18 +141,14 @@ class SearchIndex(docs: DataFrame, idCol: String, nameCol: String, addrCol: Stri
     val merged = postingsName.transform(termFilter(terms.distinct))
       .unionByName(postingsAddr.transform(termFilter(terms.distinct)))
       .groupBy("term", "doc_id").agg(sum("tf").as("tf"))
-    val dfT = merged.groupBy("term").agg(count(lit(1)).as("df"))
     val idf = log10(lit(docsCount.toDouble) + 1.0) - log10(col("df"))
-    val multiplicity = terms.groupBy(identity).map { case (t, l) => (t, l.size) }
-    val multDf = docs.sparkSession.createDataFrame(multiplicity.toSeq).toDF("term", "qmult")
     merged
-      .join(broadcast(dfT), Seq("term"))
-      .join(broadcast(multDf), Seq("term"))
+      .join(storedDf(terms.distinct), Seq("term"))
       .join(docLen, Seq("doc_id"))
       .withColumn("contrib", idf * (lit(Delta) +
         ((lit(K1 + 1.0) + col("tf")) /
           (lit(K1) * (lit(1.0 - B) + lit(B) * col("dl") / lit(avgDocLen)) + col("tf")))) *
-        col("qmult"))
+        multiplicity(terms))
       .groupBy("doc_id").agg(sum(col("contrib")).as("score"))
   }
 
@@ -142,15 +157,11 @@ class SearchIndex(docs: DataFrame, idCol: String, nameCol: String, addrCol: Stri
     val merged = postingsName.transform(termFilter(terms.distinct))
       .unionByName(postingsAddr.transform(termFilter(terms.distinct)))
       .groupBy("term", "doc_id").agg(sum("tf").as("tf"))
-    val dfT = merged.groupBy("term").agg(count(lit(1)).as("df"))
-    val queryCounts = terms.groupBy(identity).map { case (t, l) => (t, l.size) }
-    val qDf = docs.sparkSession.createDataFrame(queryCounts.toSeq).toDF("term", "qcount")
     val idf = log10(lit(docsCount.toDouble)) - log10(col("df"))
     merged
-      .join(broadcast(dfT), Seq("term"))
-      .join(broadcast(qDf), Seq("term"))
+      .join(storedDf(terms.distinct), Seq("term"))
       .withColumn("tfidf_doc", (lit(1.0) + log10(col("tf"))) * idf)
-      .withColumn("tfidf_query", (lit(1.0) + log10(col("qcount"))) * idf)
+      .withColumn("tfidf_query", (lit(1.0) + log10(multiplicity(terms))) * idf)
       .withColumn("contrib", col("tfidf_doc") * col("tfidf_query"))
       .groupBy("doc_id").agg(sum(col("contrib")).as("score"))
   }
@@ -165,9 +176,14 @@ class SearchIndex(docs: DataFrame, idCol: String, nameCol: String, addrCol: Stri
       case "bm25plus" => bm25plus(terms)
       case "tfidf" => tfidf(terms)
     }
+    topK(scores, k, offset)
+  }
+
+  /** Distributed top-k of (doc_id, score), then the top-k hydration join
+   *  (J6): k ids vs the doc table -> broadcast. */
+  private[query] def topK(scores: DataFrame, k: Int, offset: Int): DataFrame = {
     val ranked = scores.orderBy(desc("score"), col("doc_id"))
       .limit(k + offset).offset(offset)
-    // top-k hydration join (J6): k ids vs the doc table -> broadcast
     broadcast(ranked).join(docs.withColumnRenamed(idCol, "doc_id"), Seq("doc_id"))
   }
 
@@ -180,23 +196,21 @@ class SearchIndex(docs: DataFrame, idCol: String, nameCol: String, addrCol: Stri
 
   /**
    * Autocomplete (searcher.go:207-399): last token is treated as a prefix;
-   * up to 3 candidate queries are scored BM25F and unioned, then globally
-   * ranked. (Candidate ranking by ngram-LM happens in SpellCorrector; here
-   * the frequency-ranked prefix expansion reproduces the no-typo path.)
+   * up to 3 candidate queries are scored BM25F in one pass, each doc keeping
+   * its best candidate's score, then globally ranked. (Candidate ranking by
+   * ngram-LM happens in SpellCorrector; here the frequency-ranked prefix
+   * expansion reproduces the no-typo path.) An empty query ranks nothing
+   * and returns an empty frame of the usual schema.
    */
   def autocomplete(query: String, k: Int, offset: Int = 0): DataFrame = {
     val terms = Tokenizer.tokenize(query)
-    if (terms.isEmpty) return docs.sparkSession.emptyDataFrame
-    val completions = prefixCandidates(terms.last, max = 3)
     val candidateQueries =
-      if (completions.isEmpty) Seq(terms)
-      else completions.map(c => terms.init :+ c)
-    val scored = candidateQueries.map(bm25f)
-      .reduce(_ unionByName _)
-      .groupBy("doc_id").agg(max("score").as("score"))
-    val ranked = scored.orderBy(desc("score"), col("doc_id"))
-      .limit(k + offset).offset(offset)
-    broadcast(ranked).join(docs.withColumnRenamed(idCol, "doc_id"), Seq("doc_id"))
+      if (terms.isEmpty) Nil
+      else prefixCandidates(terms.last, max = 3) match {
+        case Seq() => Seq(terms)
+        case completions => completions.map(c => terms.init :+ c)
+      }
+    topK(bm25fMax(candidateQueries), k, offset)
   }
 }
 

@@ -2,6 +2,7 @@ package graft.query
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.index.{NGramLM, TextIndex}
 import graft.spell.{SpellCorrector, SpellJoin}
@@ -17,8 +18,8 @@ import graft.spell.{SpellCorrector, SpellJoin}
  *  - [[autocomplete]] = /api/autocomplete (searcher.go:207-399): the last
  *    token is completed by prefix ∪ edit1 ∪ edit2 candidates, candidate
  *    queries ranked by the same LM+edit probability, TOP 3 kept
- *    (kAutoComplete=3, spell_corrector.go:406-408), each scored BM25F,
- *    unioned, globally ranked.
+ *    (kAutoComplete=3, spell_corrector.go:406-408), scored BM25F in one
+ *    pass (each doc keeps its best candidate's score), globally ranked.
  *
  * Model-state lifecycle (mirrors the reference's index artifacts:
  * ngram_lm.go:386-423 persists the LM, spell_corrector.go:453-490 the
@@ -33,9 +34,12 @@ import graft.spell.{SpellCorrector, SpellJoin}
  * Scale split (SURVEY §3.1): the reference holds the vocabulary, n-gram
  * counts and confusion matrices in server RAM (searcher.go:37-73). The
  * engine mirrors that ONLY while the vocabulary fits `maxDriverVocab`
- * terms (the collected [[NGramLM.Model]]); past the budget every
- * model-sized structure stays distributed and each request runs exactly
- * two key-pruned probe jobs:
+ * terms: the collected [[NGramLM.Model]] plus one driver table of
+ * (term, freq, lmid) ([[Searcher.DriverVocab]]) that answers membership,
+ * LM ids, prefix and edit candidates — candidate generation and ranking
+ * then run ZERO Spark jobs. Past the budget every model-sized structure
+ * stays distributed and candidate generation + ranking run exactly two
+ * key-pruned probe jobs:
  *  1. candidate generation — ONE `del_key IN (...)` probe of the
  *     neighborhood table for ALL the request's tokens at once
  *     ([[SpellJoin.candidatesBatch]]; LM ids ride along on the rows), and
@@ -44,8 +48,8 @@ import graft.spell.{SpellCorrector, SpellJoin}
  *     ([[NGramLM.probeModel]]).
  * Driver-resident data on the distributed path is bounded by the
  * per-request candidate set (the reference's own per-request scale), never
- * by the corpus. Scoring/top-k/hydration are distributed jobs in both
- * modes.
+ * by the corpus. In both modes each request then runs ONE scoring plan
+ * (BM25F with df from the stored vocabulary, top-k, hydration).
  */
 class Searcher(docs: DataFrame, idCol: String, nameCol: String, addrCol: String,
                spellErrorLines: Iterable[String] = Nil,
@@ -88,12 +92,12 @@ class Searcher(docs: DataFrame, idCol: String, nameCol: String, addrCol: String,
 
   // ---- collected-mode state (reference-faithful, vocab <= budget) --------
 
-  /** term -> LM id for the whole vocabulary (hapax already <UNK> in dict). */
-  private lazy val lmIdMap: Map[String, Long] =
-    dict.select("t", "lmid").collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
+  /** The whole vocabulary on the driver, collected once: membership, LM
+   *  ids (hapax already <UNK> in dict), prefix and edit candidates. */
+  private lazy val driverVocab: Searcher.DriverVocab =
+    Searcher.DriverVocab.collect(index.vocabulary, dict)
 
-  private def lmTermId(t: String): Long = lmIdMap.getOrElse(t, NGramLM.UnkId)
+  private def lmTermId(t: String): Long = driverVocab.lmid(t).getOrElse(NGramLM.UnkId)
 
   /** The reference's in-RAM LM (searcher.go:37-73), collected once from
    *  the same count tables the distributed path probes. */
@@ -161,13 +165,13 @@ class Searcher(docs: DataFrame, idCol: String, nameCol: String, addrCol: String,
         .flatMap(c => c.lmid.map(c.term -> _)).toMap
       rankDistributed(candidates, tokens, 1, knownIds).head
     } else {
-      // lmIdMap keys the WHOLE vocabulary (hapax terms carry lmid=<UNK> but
-      // are present), so membership is a driver map hit
+      // candidates come in term order, so the candidate cap truncates the
+      // same way however the vocabulary was built or loaded
       val perToken = tokens.map { t =>
-        if (lmIdMap.contains(t)) Seq(t)
+        if (driverVocab.lmid(t).isDefined) Seq(t)
         else {
-          val c1 = SpellCorrector.editCandidates(index.vocabulary, t, 1)
-          val cs = if (c1.nonEmpty) c1 else SpellCorrector.editCandidates(index.vocabulary, t, 2)
+          val c1 = driverVocab.edits(t, 1)
+          val cs = if (c1.nonEmpty) c1 else driverVocab.edits(t, 2)
           if (cs.nonEmpty) cs else Seq(t)
         }
       }
@@ -182,38 +186,84 @@ class Searcher(docs: DataFrame, idCol: String, nameCol: String, addrCol: String,
 
   /** /api/autocomplete with the reference's full candidate set for the last
    *  token: prefix ∪ edit1 ∪ edit2, deduped (searcher.go:284-315), candidate
-   *  queries ranked by LM+edit, top 3 scored and unioned. */
+   *  queries ranked by LM+edit, the top 3 scored in one BM25F pass
+   *  ([[SearchIndex.bm25fMax]]). An empty query returns an empty frame of
+   *  the usual schema. */
   def autocomplete(query: String, k: Int, offset: Int = 0): DataFrame = {
     val tokens = Tokenizer.tokenize(query)
-    if (tokens.isEmpty) return docs.sparkSession.emptyDataFrame
+    if (tokens.isEmpty) return index.topK(index.bm25fMax(Nil), k, offset)
     val last = tokens.last
-    val (edits, knownIds) =
+    val (completions, knownIds) =
       if (distributed) {
-        val probe = batchCandidates(Seq(last))
-        val rows = probe.getOrElse(last, Seq.empty)
-        (rows.map(_.term),
+        val rows = batchCandidates(Seq(last)).getOrElse(last, Seq.empty)
+        (index.prefixCandidates(last, max = 10) ++ rows.map(_.term),
           rows.flatMap(c => c.lmid.map(c.term -> _)).toMap)
       } else
-        (SpellCorrector.editCandidates(index.vocabulary, last, 1) ++
-          SpellCorrector.editCandidates(index.vocabulary, last, 2),
+        (driverVocab.prefix(last, max = 10) ++ driverVocab.edits(last, 2),
           Map.empty[String, Long])
-    val completions = (index.prefixCandidates(last, max = 10) ++ edits).distinct
-    val candidateQueries =
-      if (completions.isEmpty) Seq(tokens)
-      else completions.map(c => tokens.init :+ c)
+    val candidateQueries = completions.distinct match {
+      case Seq() => Seq(tokens)
+      case cs => cs.map(c => tokens.init :+ c)
+    }
     val top3 =
       if (distributed)
         rankDistributed(candidateQueries, tokens, SpellCorrector.KAutocomplete, knownIds)
       else rankCollected(candidateQueries, tokens, SpellCorrector.KAutocomplete)
-    val scored = top3.map(index.bm25f).reduce(_ unionByName _)
-      .groupBy("doc_id").agg(max("score").as("score"))
-    val ranked = scored.orderBy(desc("score"), col("doc_id"))
-      .limit(k + offset).offset(offset)
-    broadcast(ranked).join(docs.withColumnRenamed(idCol, "doc_id"), Seq("doc_id"))
+    index.topK(index.bm25fMax(top3), k, offset)
   }
 }
 
 object Searcher {
+  /**
+   * The collected-mode driver table: (term, freq, lmid) for the whole
+   * vocabulary, sorted by term in Spark's binary string order. It answers
+   * with no Spark job what the distributed path probes for: membership and
+   * LM ids, prefix candidates (the same rows and order as
+   * [[SearchIndex.prefixCandidates]]) and edit candidates through
+   * `UTF8String.levenshteinDistance(other, threshold)` — the function
+   * Spark's `levenshtein(col, lit, threshold)` evaluates, so the set is
+   * the vocabulary filter's.
+   */
+  final class DriverVocab private (terms: Array[UTF8String], freqs: Array[Long],
+                                   lmids: Array[Long]) {
+    private def lowerBound(t: UTF8String): Int = {
+      val i = java.util.Arrays.binarySearch(terms.asInstanceOf[Array[AnyRef]], t)
+      if (i >= 0) i else -i - 1
+    }
+
+    /** The term's LM id, or None when it is not in the vocabulary. */
+    def lmid(t: String): Option[Long] = {
+      val u = UTF8String.fromString(t)
+      val i = lowerBound(u)
+      if (i < terms.length && terms(i) == u) Some(lmids(i)) else None
+    }
+
+    /** Up to `max` terms starting with `pre`, by (freq desc, term). */
+    def prefix(pre: String, max: Int): Seq[String] = {
+      val p = UTF8String.fromString(pre)
+      Iterator.from(lowerBound(p)).takeWhile(i => i < terms.length && terms(i).startsWith(p))
+        .toSeq.sortBy(i => (-freqs(i), i)).take(max).map(terms(_).toString)
+    }
+
+    /** Terms within edit distance `maxDist` of `token`, in term order. */
+    def edits(token: String, maxDist: Int): Seq[String] = {
+      val u = UTF8String.fromString(token)
+      terms.iterator.filter(_.levenshteinDistance(u, maxDist) >= 0).map(_.toString).toSeq
+    }
+  }
+
+  object DriverVocab {
+    /** One collect of (term, freq) from `vocab` joined with `dict`'s LM ids. */
+    def collect(vocab: DataFrame, dict: DataFrame): DriverVocab = {
+      val rows = vocab.select(col("term"), col("freq"))
+        .join(dict.select(col("t").as("term"), col("lmid")), Seq("term"))
+        .collect()
+        .map(r => (UTF8String.fromString(r.getString(0)), r.getLong(1), r.getLong(2)))
+        .sortBy(_._1)
+      new DriverVocab(rows.map(_._1), rows.map(_._2), rows.map(_._3))
+    }
+  }
+
   /** Vocabulary budget for holding the LM/dictionary on the driver — the
    *  reference's in-RAM regime. OSM-scale vocabularies are far below it;
    *  a web-scale caption corpus trips it and every model structure stays

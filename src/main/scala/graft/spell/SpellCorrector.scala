@@ -1,7 +1,6 @@
 package graft.spell
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 import graft.index.NGramLM
 
@@ -17,8 +16,9 @@ import graft.index.NGramLM
  *    from `correct: typo1, typo2` lines
  *  - candidate generation at edit distance <= 2: the reference intersects a
  *    Levenshtein DFA with an FST over the vocabulary (:273-302); the engine
- *    uses the relational equivalent — `levenshtein()` against the
- *    broadcast-sized vocabulary DataFrame (built-in, codegen'd)
+ *    scans the driver-held vocabulary with Spark's bounded levenshtein
+ *    (`Searcher.DriverVocab`) or, past the driver budget, probes the
+ *    deletion neighborhood ([[SpellJoin]])
  *  - candidate query ranking (:323-356, :410-451): LM log-prob + edit
  *    log-prob, argmax (search) or top-3 (autocomplete, kAutoComplete=3)
  */
@@ -145,16 +145,6 @@ object SpellCorrector {
       }.toMap
     NoisyModel(uni, bi, ec)
   }
-
-  /**
-   * Edit-distance candidates from the vocabulary — the FST x Levenshtein-DFA
-   * walk (:273-302) recast as a filter on the broadcast-sized vocab
-   * DataFrame using Spark's built-in levenshtein (with its max-distance
-   * short-circuit, codegen'd).
-   */
-  def editCandidates(vocab: DataFrame, token: String, maxDist: Int): Seq[String] =
-    vocab.filter(levenshtein(col("term"), lit(token), maxDist) >= 0)
-      .select("term").collect().map(_.getString(0)).toSeq
 
   /** Cartesian candidate-query expansion (GetCorrectQueryCandidates :305-321),
    *  capped to keep the product tractable. */

@@ -9,11 +9,11 @@ import org.apache.spark.sql.functions._
  * FST x Levenshtein-DFA walk
  * (/root/reference/pkg/searcher/spell_corrector.go:273-302).
  *
- * [[SpellCorrector.editCandidates]] filters the whole vocabulary with
- * `levenshtein(term, token)` — a full scan per token, fine at the
- * reference's OSM vocabulary but a real ceiling when the vocabulary of a
- * 100-TB caption corpus is not driver- or scan-per-query-sized. The
- * neighborhood recasts it as an index lookup:
+ * The driver-held vocabulary scan (`Searcher.DriverVocab`) applies
+ * `levenshtein(term, token)` to every term — fine at the reference's OSM
+ * vocabulary but a real ceiling when the vocabulary of a 100-TB caption
+ * corpus is not driver- or scan-per-query-sized. The neighborhood recasts
+ * it as an index lookup:
  *
  *  - INDEX TIME: every vocab term is exploded into its <=maxDel-deletion
  *    variants — (del_key, term, freq), ~(1 + L + L^2/2) rows per term —
@@ -70,8 +70,8 @@ object SpellJoin {
    * Edit-distance <= maxDist candidates of `token` from the neighborhood
    * table: key-equality probe + exact levenshtein refine. Returns
    * (term, freq, dist) — the same shape (and, by the SymSpell property,
-   * the same rows) as the brute-force scan in
-   * [[SpellCorrector.editCandidates]] / the t4_spell query.
+   * the same rows) as a brute-force `levenshtein` scan of the vocabulary /
+   * the t4_spell query.
    */
   def candidates(neighborhood: DataFrame, token: String, maxDist: Int = MaxDeletes): DataFrame = {
     require(maxDist <= MaxDeletes, s"neighborhood is built for <=$MaxDeletes deletions")

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.query.Searcher
+import graft.query.{Geofence, SearchIndexStore, Searcher}
 
 /**
  * The composed /api/search and /api/autocomplete lifecycles vs the
@@ -23,12 +23,14 @@ class SearcherSpec extends AnyFunSuite {
     (6L, "Taman Suropati", "Menteng Jakarta Pusat")
   ).toDF("doc_id", "name", "address")
 
+  val spellLines = Seq(
+    "dunia: duniu, dunai",
+    "fantasi: fsntaso, fantasy",
+    "binatang: bibatqng",
+    "ragunan: raginan")
+
   lazy val searcher = new Searcher(docs, "doc_id", "name", "address",
-    spellErrorLines = Seq(
-      "dunia: duniu, dunai",
-      "fantasi: fsntaso, fantasy",
-      "binatang: bibatqng",
-      "ragunan: raginan"))
+    spellErrorLines = spellLines)
 
   test("exact query: 'Dunia Fantasi' top-1 is doc 2 (searcher_test.go:56-66)") {
     val top = searcher.freeFormQuery("Dunia Fantasi", 3).select("doc_id", "name").collect()
@@ -63,7 +65,8 @@ class SearcherSpec extends AnyFunSuite {
   }
 
   test("empty query returns empty (reference errors on empty, searcher_test.go:103-110)") {
-    assert(searcher.autocomplete("", 3).isEmpty)
+    assert(searcher.autocomplete("", 3).select("doc_id", "score").isEmpty)
+    assert(searcher.index.autocomplete("", 3).select("doc_id", "score").isEmpty)
     assert(searcher.correct("") == Seq.empty)
   }
 
@@ -115,6 +118,56 @@ class SearcherSpec extends AnyFunSuite {
     assert(jobs <= 2,
       s"expected at most 2 probe jobs (neighborhood + LM), saw $jobs — " +
         "a corpus-scale aggregation is running per query")
+  }
+
+  test("collected mode: a WARM searcher generates candidates with no Spark job — " +
+    "0 jobs per misspelled correct(), one scoring plan per search/autocomplete") {
+    val warm = new Searcher(docs, "doc_id", "name", "address", spellErrorLines = spellLines)
+    assert(!warm.distributed)
+    // warm: first use caches the index and collects the driver vocabulary + LM
+    warm.freeFormQuery("Duniu Fsntaso", 3).collect()
+    warm.autocomplete("Monumen Nasi", 3).collect()
+    val (corrected, correctJobs) = TestSpark.jobsOf(warm.correct("Kebun Bibatqng Raginan"))
+    assert(corrected == Seq("kebun", "binatang", "ragunan"))
+    assert(correctJobs == 0, s"misspelled correct() ran $correctJobs jobs")
+    val (top, searchJobs) = TestSpark.jobsOf(
+      warm.freeFormQuery("Kebun Bibatqng Raginan", 3).select("name").collect())
+    assert(top.head.getString(0) == "Kebun Binatang Ragunan")
+    assert(searchJobs <= 6, s"search ran $searchJobs jobs")
+    val (ac, acJobs) = TestSpark.jobsOf(
+      warm.autocomplete("Taman Min", 3).select("name").collect())
+    assert(ac.exists(_.getString(0).contains("Taman Mini")))
+    assert(acJobs <= 6, s"autocomplete ran $acJobs jobs")
+
+    val fences = new Geofence.FenceStore(spark,
+      java.nio.file.Files.createTempDirectory("fence-jobs").toString)
+    fences.addCollection("jakarta")
+    fences.upsertFencePoint("jakarta", Geofence.Fence("a", -6.2, 106.8, 2.0))
+    val (fs, fenceJobs) = TestSpark.jobsOf(fences.fences("jakarta"))
+    assert(fs.map(_.key) == Seq("a"))
+    assert(fenceJobs <= 1, s"FenceStore.fences ran $fenceJobs jobs")
+  }
+
+  test("collected-mode correction is deterministic: fresh, store-served and " +
+    "distributed searchers agree where the candidate cap truncates") {
+    // 'kz' has the ten edit-1 candidates ka..kj, so 'kz kz kz' expands to
+    // 1000 candidate queries and SpellCorrector.queryCandidates keeps 512:
+    // which ones depends on the candidates' order
+    val letters = 'a' to 'j'
+    val capDocs = letters.zipWithIndex.flatMap { case (c, i) =>
+      (0 to i).map(n => (i * 100L + n, s"k$c k${letters(9 - i)} k$c", ""))
+    }.toDF("doc_id", "name", "address")
+    val dir = java.nio.file.Files.createTempDirectory("searcher-cap").toString
+    SearchIndexStore.write(spark, capDocs, "doc_id", "name", "address", dir)
+    val fresh = new Searcher(capDocs, "doc_id", "name", "address")
+    val served = Searcher.fromStore(spark, dir)
+    val dist = new Searcher(capDocs, "doc_id", "name", "address", maxDriverVocab = 1L)
+    assert(!fresh.distributed && !served.distributed && dist.distributed)
+    val q = "kz kz kz"
+    val want = fresh.correct(q)
+    assert(want.size == 3 && want.forall(t => t.length == 2 && t.head == 'k'))
+    assert(served.correct(q) == want)
+    assert(dist.correct(q) == want)
   }
 
   test("distributed mode scores the UNK-thresholded LM identically (hapax -> <UNK>)") {

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.index.TextIndex
-import graft.spell.{SpellCorrector, SpellJoin}
+import graft.spell.SpellJoin
 
 /**
  * Deletion-neighborhood candidate generation (SymSpell recast of the
@@ -39,7 +39,7 @@ class SpellJoinSpec extends AnyFunSuite {
   test("join candidates == brute-force scan candidates for typo'd tokens") {
     val nbr = SpellJoin.neighborhood(vocab)
     for (typo <- Seq("spqrk", "vektor", "windoe", "jakrata")) {
-      val brute = SpellCorrector.editCandidates(vocab, typo, 2).toSet
+      val brute = SpellReference.editCandidates(vocab, typo, 2).toSet
       val joined = SpellJoin.candidates(nbr, typo, 2)
         .select("term").collect().map(_.getString(0)).toSet
       assert(joined == brute, s"candidate sets differ for '$typo'")

@@ -5,6 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.index.{NGramLM, TextIndex}
 import graft.spell.SpellCorrector
 import graft.spell.SpellCorrector._
+import graft.SpellReference.editCandidates
 import graft.query.Tokenizer
 
 /**

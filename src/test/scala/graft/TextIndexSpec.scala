@@ -82,4 +82,31 @@ class TextIndexSpec extends AnyFunSuite {
     assert(v("jalan") == 4L) // 1 name + 3 addresses
     assert(v("taman") == 2L)
   }
+
+  test("bm25fMax: one pass over several queries = per-doc max of separate bm25f calls") {
+    // a 7th doc puts 'jalan' in 4 of 7 docs: negative idf, so the docs
+    // only 'jalan' hits must keep a negative best score, not the other
+    // queries' 0
+    val idx = new SearchIndex(docs.union(Seq((7L, "Jalan Baru", "")).toDF()),
+      "doc_id", "name", "address")
+    def scores(df: org.apache.spark.sql.DataFrame): Map[Long, Double] =
+      df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val cases = Seq(
+      Seq(Seq("taman", "mini"), Seq("taman", "suropati"), Seq("jalan")),
+      Seq(Seq("jalan", "jalan", "timur"), Seq("jakarta", "timur")), // duplicated term
+      Seq(Seq("jalan", "zzabsent"), Seq("zzabsent")),                // term not in the vocabulary
+      Seq(Seq(), Seq("pusat")),                                       // empty query
+      Seq(Seq("monumen", "nasional")))
+    for (qs <- cases) {
+      val want = qs.map(q => scores(idx.bm25f(q)))
+        .reduce((a, b) => (a.keySet ++ b.keySet).map { d =>
+          d -> (a.get(d) ++ b.get(d)).max
+        }.toMap)
+      val got = scores(idx.bm25fMax(qs))
+      assert(got.keySet == want.keySet && got.nonEmpty, qs)
+      got.foreach { case (d, s) => assert(math.abs(s - want(d)) < 1e-9, (qs, d)) }
+    }
+    assert(scores(idx.bm25f(Seq("jalan"))).values.forall(_ < 0))
+    assert(idx.bm25fMax(Nil).isEmpty && idx.bm25f(Nil).isEmpty)
+  }
 }
