@@ -97,19 +97,8 @@ object AnnStore {
       Ann.probeLists(coarse, query, nprobe))
   }
 
-  /** Completed delta stages appended by [[appendIvf]], in append order. */
-  def ivfDeltaNames(dir: String): Seq[String] = {
-    val root = java.nio.file.Paths.get(dir)
-    if (!java.nio.file.Files.isDirectory(root)) return Seq.empty
-    // close the directory stream deterministically (fd-per-call leak
-    // otherwise — the Incremental.stateNames lesson)
-    scala.util.Using.resource(java.nio.file.Files.list(root)) { s =>
-      scala.jdk.CollectionConverters.IteratorHasAsScala(s.iterator()).asScala
-        .map(_.getFileName.toString)
-        .filter(n => n.startsWith("ann_ivf_lists_d") && TableIO.isComplete(dir, n))
-        .toSeq
-    }.sorted
-  }
+  /** Stage-name prefix of the delta tables [[appendIvf]] stages. */
+  val IvfDeltaPrefix = "ann_ivf_lists_d"
 
   /**
    * Append a batch of NEW vectors to the persisted plain-IVF index WITHOUT
@@ -128,7 +117,7 @@ object AnnStore {
                 vecs: DataFrame, idCol: String, vecCol: String): DataFrame = {
     require(batchName.nonEmpty && batchName.forall(c => c.isLetterOrDigit),
       s"batch name must be alphanumeric: $batchName")
-    val name = s"ann_ivf_lists_d$batchName"
+    val name = IvfDeltaPrefix + batchName
     // resume path unchanged: a completed batch is read back, never
     // recomputed. The write path returns the assigned rows it just staged
     // (identical by the write's contract) instead of re-listing the fresh
@@ -148,7 +137,8 @@ object AnnStore {
                    k: Int, nprobe: Int): DataFrame = {
     val centroids = centroidRows(spark, dir, "ann_ivf_centroids")
       .sortBy(_._1).map(_._2)
-    val lists = (s"$dir/ann_ivf_lists" +: ivfDeltaNames(dir).map(n => s"$dir/$n"))
+    val lists = (s"$dir/ann_ivf_lists" +:
+        TableIO.stages(dir, IvfDeltaPrefix).map(n => s"$dir/$n"))
       .map(p => spark.read.parquet(p).select(col("vec_id"), col("vec"), col("list")))
       .reduce(_ unionByName _)
     Ann.ivfTopK(lists, centroids, query, k, nprobe)

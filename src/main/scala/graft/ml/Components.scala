@@ -127,10 +127,7 @@ object Components {
     var labels = materializeRound(ids.select(col("id"), col("id").as("label")))
     var changedCount = 1L
     var iter = 0
-    val debug = nodes.sparkSession.conf
-      .getOption("spark.graft.components.debug").contains("true")
     while (changedCount > 0 && iter < maxIters) {
-      val t0 = System.nanoTime()
       val viaNeighbor = sym
         .join(maybeBroadcast(labels.withColumnRenamed("id", "id2")
           .withColumnRenamed("label", "nlabel")), Seq("id2"))
@@ -164,8 +161,6 @@ object Components {
       roundRdds.tail.foreach(_.unpersist(blocking = false))
       roundRdds = List(keep)
       iter += 1
-      if (debug)
-        println(f"components iter=$iter changed=$changedCount wall=${(System.nanoTime() - t0) / 1e9}%.2f s")
     }
     // loop inputs are no longer needed; rounds were already pruned to the
     // final one, which BACKS the returned DataFrame and stays persisted
@@ -301,10 +296,7 @@ object Components {
     var prevRdd = eRdd
     var stable = e.isEmpty
     var rounds = 0
-    val debug = nodes.sparkSession.conf
-      .getOption("spark.graft.components.debug").contains("true")
     while (!stable && rounds < maxIters) {
-      val t0 = System.nanoTime()
       val (l, lRdd) = persisted(largeStar(e))
       val (s, sRdd) = persisted(smallStar(l))
       // converged when a full large+small pass leaves the edge set fixed
@@ -314,8 +306,6 @@ object Components {
       e = s
       prevRdd = sRdd
       rounds += 1
-      if (debug)
-        println(f"starComponents round=$rounds wall=${(System.nanoTime() - t0) / 1e9}%.2f s")
     }
     if (!stable) {
       idsRdd.unpersist(blocking = false)

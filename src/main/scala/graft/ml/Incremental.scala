@@ -70,24 +70,6 @@ object Incremental {
       .agg(min(col(idCol)).as("id"), count(lit(1)).as("n_dups"))
       .select(xxhash64(col("text")).as("h"), col("id"), col("text"), col("n_dups"))
 
-  /** Completed state stages under `stateDir` with the given name prefix,
-   *  in ingest order (stage names are listed from the filesystem, ordered
-   *  by the zero-padded sequence number each batch gets on write). */
-  def stateNames(stateDir: String, prefix: String = StatePrefix): Seq[String] = {
-    val root = Paths.get(stateDir)
-    if (!Files.isDirectory(root)) return Seq.empty
-    // close the directory stream deterministically: stateNames runs on
-    // every ingest of a long-running loop, and an unclosed Files.list
-    // leaks a directory fd per call until GC
-    val names = scala.util.Using.resource(Files.list(root)) { s =>
-      scala.jdk.CollectionConverters.IteratorHasAsScala(s.iterator()).asScala
-        .map(_.getFileName.toString)
-        .filter(n => n.startsWith(prefix) && TableIO.isComplete(stateDir, n))
-        .toSeq
-    }
-    names.sorted
-  }
-
   /** Free a localCheckpoint'ed DataFrame's storage blocks: `Dataset
    *  .unpersist` only clears CacheManager entries, but an eager local
    *  checkpoint lives as persisted partitions of the RDD inside the
@@ -131,7 +113,7 @@ object Incremental {
       s"batch name must be [A-Za-z0-9.-]+: $batchName")
     require(!batchName.startsWith("compact"),
       s"batch names starting with 'compact' are reserved for [[compact]]: $batchName")
-    val prior = stateNames(stateDir)
+    val prior = TableIO.stages(stateDir, StatePrefix)
     prior.find(_.split("_", 3).last == batchName) match {
       case Some(existing) => return stateTable(spark, stateDir, existing)
       case None => ()
@@ -165,7 +147,7 @@ object Incremental {
    *  (what a one-shot [[Dedup.exact]] over all ingested rows would keep,
    *  with cross-batch ties resolved by arrival order). */
   def accepted(spark: SparkSession, stateDir: String): DataFrame = {
-    val names = stateNames(stateDir)
+    val names = TableIO.stages(stateDir, StatePrefix)
     require(names.nonEmpty, s"no completed state stages under $stateDir")
     names.map(stateTable(spark, stateDir, _)).reduce(_ unionByName _)
   }
@@ -224,8 +206,8 @@ object Incremental {
     require(batchName.nonEmpty && batchName.forall(c =>
         c.isLetterOrDigit || c == '-' || c == '.'),
       s"batch name must be [A-Za-z0-9.-]+: $batchName")
-    val ndocPrior = stateNames(stateDir, NdocPrefix)
-    val nsigPrior = stateNames(stateDir, NsigPrefix)
+    val ndocPrior = TableIO.stages(stateDir, NdocPrefix)
+    val nsigPrior = TableIO.stages(stateDir, NsigPrefix)
     def batchOf(n: String) = n.split("_", 3).last
     val ownSuffix = ndocPrior.find(n => batchOf(n) == batchName)
       .map(_.stripPrefix(NdocPrefix))
@@ -258,18 +240,9 @@ object Incremental {
         "nsig_/ndoc_ stages — re-ingest those batches (same name, same rows) " +
         "to complete them before ingesting a new batch")
 
-    // phase timers (stdout, gated): SPARK_GRAFT_INGEST_DIAG=1
-    val diag = sys.env.get("SPARK_GRAFT_INGEST_DIAG").contains("1")
-    var tPhase = System.nanoTime()
-    def phase(name: String): Unit = if (diag) {
-      val now = System.nanoTime()
-      println(f"INGESTDIAG $batchName $name ${(now - tPhase) / 1e9}%.1f s")
-      tPhase = now
-    }
     val b = batch.select(col(idCol).as("doc_id"), col(textCol).as("text"))
       .localCheckpoint(true)
     val sigs = Dedup.minhashSignatures(b, "doc_id", "text").localCheckpoint(true)
-    phase("sigs")
     // in-batch candidate pairs: reject the larger id of every refined pair
     val inPairs = Dedup.minhashCandidates(sigs, maxBucket)
     var cands: DataFrame = null
@@ -336,8 +309,6 @@ object Incremental {
           probe.join(state, Seq("band", "band_key"))
             .select(col("id1"), col("doc_id").as("id2"))
         }.reduce(_ unionByName _).distinct().localCheckpoint(true)
-        if (diag) println(s"INGESTDIAG $batchName cands_rows=${cands.count()}")
-        phase("probe")
         // refine only the candidate partners: state text via doc_id
         // semi-joins against the bucketed ndoc tables, never a full rescan
         val partnerIds = cands.select(col("id1").as("doc_id")).distinct()
@@ -352,7 +323,6 @@ object Incremental {
         // grows with the stage count — measured 74 s -> 135 s per added
         // stage at 20k docs/batch before this leaf, flat after
         refineIn = b.unionByName(partners).localCheckpoint(true)
-        if (diag) println(s"INGESTDIAG $batchName refine_in_rows=${refineIn.count()}")
         // in-batch and cross pairs are disjoint (cross id1 is an accepted
         // EARLIER-batch doc; the cross-batch id-uniqueness contract above)
         // and individually distinct, so the union stays distinct — the
@@ -365,13 +335,11 @@ object Incremental {
       }
       val ndoc = TableIO.bucketedStage(spark, stateDir, ndocName, "doc_id",
         DefaultBuckets) { accepted.select(col("doc_id"), col("text")) }
-      phase("ndoc")
       TableIO.bucketedStage(spark, stateDir, nsigName, "band_key", DefaultBuckets) {
         Dedup.minhashBands(
           sigs.join(ndoc.select(col("doc_id")), Seq("doc_id"), "left_semi"))
           .select(col("band_key"), col("band"), col("doc_id"))
       }
-      phase("nsig")
       ndoc
     } finally {
       spark.conf.set(kReq, prev)
@@ -401,16 +369,15 @@ object Incremental {
    * aggregate over the BATCH only. Each batch stages as `pack_<seq>_<batch>`
    * PARTITIONED BY shard — a dataloader reading shard k directory-prunes
    * every stage (the delta-read pattern shared with [[graft.ml.AnnStore]]).
-   * The stream total and max id come from a per-stage stats sidecar
-   * (`_pack_stats.json`, written with the stage): reading them back is
-   * driver-side file IO, so ingest cost no longer grows with the stage
-   * count (guide §1.2: don't recompute what the write already knew — the
-   * previous Σ per-stage sum(toks) re-scan was one Spark aggregate per
-   * prior stage per ingest). A stage whose sidecar is missing (pre-upgrade
-   * state, or a crash between the two writes) falls back to the aggregate
-   * once; [[compact]]-style retirement is unaffected because retired stages
-   * drop out of `stateNames`. Idempotent by batch name. Returns the
-   * batch's packed rows (id, toks, off, shard).
+   * The stream total and max id are stats each stage declares in its
+   * TableIO manifest (`sum_toks`, `max_id`): reading them back is
+   * driver-side file IO, so ingest cost does not grow with the stage count
+   * (guide §1.2: don't recompute what the write already knew). The
+   * manifest is also the stage's completion marker, so every stage
+   * [[TableIO.stages]] lists has its stats; a stage cut before its
+   * manifest is unlisted and re-ingesting its batch rewrites it.
+   * Idempotent by batch name. Returns the batch's packed rows
+   * (id, toks, off, shard).
    */
   def ingestPack(spark: SparkSession, stateDir: String, batchName: String,
                  batch: DataFrame, idCol: String, toksCol: String,
@@ -418,7 +385,7 @@ object Incremental {
     require(batchName.nonEmpty && batchName.forall(c =>
         c.isLetterOrDigit || c == '-' || c == '.'),
       s"batch name must be [A-Za-z0-9.-]+: $batchName")
-    val prior = stateNames(stateDir, PackPrefix)
+    val prior = TableIO.stages(stateDir, PackPrefix)
     prior.find(_.split("_", 3).last == batchName) match {
       case Some(existing) =>
         // partition-directory type inference narrows shard to int — restore
@@ -429,12 +396,13 @@ object Incremental {
     }
     Files.createDirectories(Paths.get(stateDir))
     val (base, maxPrior) = prior.foldLeft((0L, Long.MinValue)) { case ((b, m), st) =>
-      val (s, x) = readPackStats(spark, stateDir, st, idCol)
-      (b + s, math.max(m, x))
+      val stats = TableIO.manifest(stateDir, st).stats
+      def stat(k: String) = stats.getOrElse(k, sys.error(s"pack stage $st declares no $k"))
+      (b + stat("sum_toks"), math.max(m, stat("max_id")))
     }
     // one bounded aggregate over the batch: min id for the monotonic-id
-    // contract, sum/max recorded in the stage's stats sidecar so LATER
-    // ingests never re-scan this stage. The empty-batch require runs
+    // contract, sum/max declared in the stage's manifest so LATER ingests
+    // never re-scan this stage. The empty-batch require runs
     // regardless of stream state — an empty FIRST batch would otherwise
     // stage an empty table and make the next ingest fail obscurely.
     val statRow = batch.agg(min(col(idCol)), max(col(idCol)),
@@ -454,10 +422,8 @@ object Incremental {
         idCol, "toks", budget)
       .withColumn("off", col("off") + lit(base))
       .withColumn("shard", expr(s"off div ${budget}L"))
-    TableIO.stageWrite(spark, stateDir, name, partitionBy = Seq("shard")) { packed }
-    Files.write(Paths.get(stateDir, name, PackStatsFile),
-      s"""{"sum_toks": $sumToks, "max_id": $maxId}"""
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    TableIO.stageWrite(spark, stateDir, name, partitionBy = Seq("shard"),
+      stats = Map("sum_toks" -> sumToks, "max_id" -> maxId)) { packed }
     // return the rows just computed (tokenBudgetShards materializes its
     // range layout, so this re-reads a local checkpoint, not the pipeline):
     // the staged read-back re-opened every shard file of the stage just
@@ -467,28 +433,6 @@ object Incremental {
     // entry) still reads from disk above; rows are identical by the stage
     // write's own contract.
     packed.select(col(idCol), col("toks"), col("off"), col("shard"))
-  }
-
-  /** Stats sidecar name for [[ingestPack]] stages. */
-  val PackStatsFile = "_pack_stats.json"
-
-  /** (sum of toks, max id) of a completed pack stage: from the sidecar when
-   *  present (driver-side file read), else the one-off aggregate fallback. */
-  private def readPackStats(spark: SparkSession, stateDir: String,
-                            stage: String, idCol: String): (Long, Long) = {
-    val p = Paths.get(stateDir, stage, PackStatsFile)
-    if (Files.exists(p)) {
-      val s = Files.readString(p)
-      def field(n: String): Option[Long] =
-        (s""""$n": (-?\\d+)""").r.findFirstMatchIn(s).map(_.group(1).toLong)
-      (field("sum_toks"), field("max_id")) match {
-        case (Some(a), Some(b)) => return (a, b)
-        case _ => () // corrupt sidecar: fall through to the aggregate
-      }
-    }
-    val r = spark.read.parquet(s"$stateDir/$stage")
-      .agg(sum(col("toks")), max(col(idCol))).head()
-    (r.getLong(0), r.getLong(1))
   }
 
   /**
@@ -506,7 +450,7 @@ object Incremental {
    * subset-co-partition trick as ingest — left as the documented upgrade.
    */
   def compact(spark: SparkSession, stateDir: String): DataFrame = {
-    val names = stateNames(stateDir)
+    val names = TableIO.stages(stateDir, StatePrefix)
     require(names.nonEmpty, s"no completed state stages under $stateDir")
     if (names.size == 1) return stateTable(spark, stateDir, names.head)
     val seq = nextSeq(names)

@@ -1,8 +1,12 @@
 package graft.pipeline
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 
+import com.fasterxml.jackson.annotation.JsonInclude
+import com.fasterxml.jackson.databind.PropertyNamingStrategies
+import com.fasterxml.jackson.databind.annotation.JsonDeserialize
+import com.fasterxml.jackson.databind.json.JsonMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -18,21 +22,85 @@ import org.apache.spark.sql.functions._
  *
  * A stage is: `TableIO.stage(spark, dir, "postings") { compute }` —
  * if the stage's manifest + _SUCCESS exist, the computed DataFrame is NOT
- * recomputed; the persisted table is read back. Otherwise the stage runs,
- * writes atomically (tmp dir + rename), records per-partition row counts,
- * total rows, wall time and schema into the manifest, then returns the
- * persisted table. Idempotent re-runs skip completed stages.
+ * recomputed; the persisted table is read back. Otherwise the stage runs
+ * and commits in this order: Spark's file committer writes the data and
+ * then `_SUCCESS`; the [[Manifest]] (per-file row counts from the parquet
+ * footers, total rows, wall time, schema, layout and the caller's declared
+ * stats) is written to a temporary file and atomically renamed to
+ * `_lineage.json`. The manifest is the completion marker, so a complete
+ * stage never has a truncated or missing manifest, and a crash anywhere
+ * before the rename leaves an incomplete stage that the next run rewrites.
+ * This object is the only code that knows the manifest format and the rule
+ * for listing completed stages ([[stages]]).
  */
 object TableIO {
 
-  private def esc(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    }
+  /** Rows of one physical file of a stage, path relative to the stage dir. */
+  final case class FileRows(file: String, rows: Long)
+
+  /** A completed stage's `_lineage.json`: what the write produced. `stats`
+   *  holds aggregates the writer declared (e.g. a pack stage's token sum),
+   *  so later readers answer them from the manifest instead of the data.
+   *  Bucketed stages record their layout and DDL schema for re-registration. */
+  final case class Manifest(
+      stage: String,
+      rows: Long,
+      wallSec: Double,
+      schema: String,
+      partitionBy: Seq[String],
+      bucketKey: Option[String],
+      nBuckets: Option[Int],
+      bucketDdlSchema: Option[String],
+      // without the content type, Jackson boxes small numbers as Integer
+      // behind the erased Long and the first unboxing throws
+      @JsonDeserialize(contentAs = classOf[java.lang.Long]) stats: Map[String, Long],
+      partitions: Seq[FileRows])
+
+  private val Mapper = JsonMapper.builder()
+    .addModule(DefaultScalaModule)
+    .propertyNamingStrategy(PropertyNamingStrategies.SNAKE_CASE)
+    .serializationInclusion(JsonInclude.Include.NON_ABSENT)
+    .build()
 
   def manifestPath(dir: String, name: String): java.nio.file.Path =
     Paths.get(dir, name, "_lineage.json")
+
+  /** The manifest of a completed stage. */
+  def manifest(dir: String, name: String): Manifest =
+    Mapper.readValue(manifestPath(dir, name).toFile, classOf[Manifest])
+
+  /** Completed stages directly under `dir` whose names start with `prefix`,
+   *  sorted by name (writers that append stages name them with a zero-padded
+   *  sequence number, so this is write order). A stage whose write was cut
+   *  before its manifest rename is not listed. */
+  def stages(dir: String, prefix: String): Seq[String] = {
+    val root = Paths.get(dir)
+    if (!Files.isDirectory(root)) return Seq.empty
+    // close the directory stream deterministically: ingest loops list on
+    // every batch, and an unclosed Files.list leaks a directory fd per call
+    scala.util.Using.resource(Files.list(root)) { s =>
+      scala.jdk.CollectionConverters.IteratorHasAsScala(s.iterator()).asScala
+        .map(_.getFileName.toString)
+        .filter(n => n.startsWith(prefix) && isComplete(dir, n))
+        .toVector
+    }.sorted
+  }
+
+  /** Commit a stage whose data Spark has just written: per-file lineage,
+   *  then the manifest via a temporary file and an atomic rename. */
+  private def commit(dir: String, name: String, t0: Long, df: DataFrame,
+                     partitionBy: Seq[String], bucket: Option[(String, Int)],
+                     stats: Map[String, Long]): Unit = {
+    val perFile = lineage(s"$dir/$name")
+    val m = Manifest(stage = name, rows = perFile.map(_._2).sum,
+      wallSec = (System.nanoTime() - t0) / 1e9, schema = df.schema.simpleString,
+      partitionBy = partitionBy, bucketKey = bucket.map(_._1),
+      nBuckets = bucket.map(_._2), bucketDdlSchema = bucket.map(_ => df.schema.toDDL),
+      stats = stats, partitions = perFile.map { case (f, n) => FileRows(f, n) }.toSeq)
+    val tmp = Paths.get(dir, name, "_lineage.json.tmp")
+    Mapper.writerWithDefaultPrettyPrinter().writeValue(tmp.toFile, m)
+    Files.move(tmp, manifestPath(dir, name), StandardCopyOption.ATOMIC_MOVE)
+  }
 
   /** Per-partition lineage: rows per physical file of the persisted table,
    *  read from the PARQUET FOOTERS (driver-side, ~KB of metadata per file)
@@ -86,9 +154,7 @@ object TableIO {
 
   /**
    * Run (or resume past) a stage. `partitionBy` columns become the table's
-   * physical partitioning (cell-bucket pruning at read time); `sortBy`
-   * orders within files so min/max row-group stats prune (the Parquet
-   * stand-in for Iceberg sort orders).
+   * physical partitioning (cell-bucket pruning at read time).
    */
   def stage(spark: SparkSession, dir: String, name: String,
             partitionBy: Seq[String] = Nil)
@@ -105,9 +171,10 @@ object TableIO {
    *  measured ~1 s for a 470-shard stage on tmpfs), which a caller that
    *  already holds the computed rows and only needs the stage AT REST
    *  (ingest state appends) never uses. Identical layout, manifest and
-   *  completeness semantics; does nothing when the stage is complete. */
+   *  completeness semantics; does nothing when the stage is complete.
+   *  `stats` are recorded in the manifest as declared (see [[Manifest]]). */
   def stageWrite(spark: SparkSession, dir: String, name: String,
-                 partitionBy: Seq[String] = Nil)
+                 partitionBy: Seq[String] = Nil, stats: Map[String, Long] = Map.empty)
                 (compute: => DataFrame): Unit = {
     val path = s"$dir/$name"
     if (isComplete(dir, name)) return
@@ -129,21 +196,7 @@ object TableIO {
     val writer0 = out.write.mode("overwrite")
     val writer = if (partitionBy.nonEmpty) writer0.partitionBy(partitionBy: _*) else writer0
     writer.parquet(path)
-    val perFile = lineage(path)
-    val totalRows = perFile.map(_._2).sum
-    val perFileJson = perFile.map { case (f, n) => s"""{"file": "${esc(f)}", "rows": $n}""" }
-    val wallSec = (System.nanoTime() - t0) / 1e9
-    val manifest =
-      s"""{
-         |  "stage": "${esc(name)}",
-         |  "rows": $totalRows,
-         |  "wall_sec": $wallSec,
-         |  "schema": "${esc(df.schema.simpleString)}",
-         |  "partition_by": [${partitionBy.map(p => s""""${esc(p)}"""").mkString(", ")}],
-         |  "partitions": [${perFileJson.mkString(", ")}]
-         |}""".stripMargin
-    Files.write(manifestPath(dir, name), manifest.getBytes(StandardCharsets.UTF_8),
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
+    commit(dir, name, t0, df, partitionBy, None, stats)
   }
 
   /**
@@ -156,7 +209,7 @@ object TableIO {
    * `cell`). At warehouse scale the catalog is the metastore and the
    * registration outlives every session; here the catalog is session-local,
    * so a fresh session re-registers over the existing files from the DDL
-   * recorded in the manifest (`bucket_ddl`) — the data itself is never
+   * recorded in the manifest (`bucket_ddl_schema`) — the data itself is never
    * rewritten on resume.
    *
    * Returns `spark.table(...)`, the bucket-aware handle (a plain
@@ -169,37 +222,6 @@ object TableIO {
    * trusting (or dropping) it, so a table-name hash collision fails loudly
    * rather than racing two stages onto one path.
    */
-  /** Reverse of [[esc]] for manifest string fields. */
-  private def unesc(s: String): String = {
-    val b = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      if (s.charAt(i) == '\\' && i + 1 < s.length) s.charAt(i + 1) match {
-        case '"' => b += '"'; i += 2
-        case '\\' => b += '\\'; i += 2
-        case 'n' => b += '\n'; i += 2
-        case 'u' =>
-          // a truncated/garbled \u escape means manifest corruption — fail
-          // with a descriptive error, not an index/number exception
-          if (i + 6 > s.length) sys.error(s"corrupt manifest escape in: $s")
-          val hex = s.substring(i + 2, i + 6)
-          require(hex.forall(c => Character.digit(c, 16) >= 0),
-            s"corrupt manifest escape \\u$hex")
-          b += Integer.parseInt(hex, 16).toChar; i += 6
-        case c => b += c; i += 2
-      } else { b += s.charAt(i); i += 1 }
-    }
-    b.toString
-  }
-
-  /** JSON string field extractor that respects escapes (a naive non-greedy
-   *  `.*?` would stop at the first escaped quote). */
-  private def manifestField(manifest: String, field: String): Option[String] =
-    (s""""$field": "((?:[^"\\\\]|\\\\.)*)"""").r
-      .findFirstMatchIn(manifest).map(m => unesc(m.group(1)))
-  private def manifestLong(manifest: String, field: String): Option[Long] =
-    (s""""$field": (\\d+)""").r.findFirstMatchIn(manifest).map(_.group(1).toLong)
-
   def bucketedStage(spark: SparkSession, dir: String, name: String,
                     key: String, nBuckets: Int)
                    (compute: => DataFrame): DataFrame = {
@@ -212,19 +234,20 @@ object TableIO {
       s"""CREATE TABLE $tbl ($schema) USING parquet
          |CLUSTERED BY ($key) SORTED BY ($key) INTO $nBuckets BUCKETS
          |LOCATION '$path'""".stripMargin
-    def requireLayout(manifest: String): Unit = {
+    def requireLayout(): Manifest = {
       // the physical files are bucketed by the RECORDED layout; declaring a
       // different one would make Spark elide shuffles it must not elide
       // (silently wrong joins), so a mismatch fails loudly
-      val mKey = manifestField(manifest, "bucket_key")
-      val mN = manifestLong(manifest, "n_buckets")
-      require(mKey.contains(key) && mN.contains(nBuckets.toLong),
-        s"stage $name at $path is bucketed by (${mKey.orNull}, ${mN.orNull}) " +
-          s"but was requested as ($key, $nBuckets); delete the stage to re-bucket")
+      val m = manifest(dir, name)
+      require(m.bucketKey.contains(key) && m.nBuckets.contains(nBuckets),
+        s"stage $name at $path is bucketed by (${m.bucketKey.orNull}, " +
+          s"${m.nBuckets.getOrElse("none")}) but was requested as ($key, $nBuckets); " +
+          "delete the stage to re-bucket")
+      m
     }
     val registered = spark.catalog.tableExists(tbl)
     if (registered && isComplete(dir, name)) {
-      requireLayout(Files.readString(manifestPath(dir, name)))
+      requireLayout()
       // the hash-suffixed name is collision-resistant, not collision-free:
       // verify the registered table really points at THIS stage directory
       val loc = spark.sessionState.catalog
@@ -236,9 +259,7 @@ object TableIO {
     }
     if (!registered && isComplete(dir, name)) {
       // resume in a fresh session: re-register over the existing files
-      val manifest = Files.readString(manifestPath(dir, name))
-      requireLayout(manifest)
-      val schemaDdl = manifestField(manifest, "bucket_ddl_schema")
+      val schemaDdl = requireLayout().bucketDdlSchema
         .getOrElse(sys.error(s"stage $name exists but has no bucket_ddl_schema"))
       spark.sql(ddl(schemaDdl))
       return spark.table(tbl)
@@ -269,25 +290,7 @@ object TableIO {
       .bucketBy(nBuckets, key).sortBy(key)
       .option("path", path)
       .saveAsTable(tbl)
-    val written = spark.table(tbl)
-    // same per-partition lineage as stage() — footer metadata, no re-read
-    val perFile = lineage(path)
-    val totalRows = perFile.map(_._2).sum
-    val perFileJson = perFile.map { case (f, n) => s"""{"file": "${esc(f)}", "rows": $n}""" }
-    val wallSec = (System.nanoTime() - t0) / 1e9
-    val manifest =
-      s"""{
-         |  "stage": "${esc(name)}",
-         |  "rows": $totalRows,
-         |  "wall_sec": $wallSec,
-         |  "schema": "${esc(df.schema.simpleString)}",
-         |  "bucket_key": "${esc(key)}",
-         |  "n_buckets": $nBuckets,
-         |  "bucket_ddl_schema": "${esc(df.schema.toDDL)}",
-         |  "partitions": [${perFileJson.mkString(", ")}]
-         |}""".stripMargin
-    Files.write(manifestPath(dir, name), manifest.getBytes(StandardCharsets.UTF_8),
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-    written
+    commit(dir, name, t0, df, Nil, Some((key, nBuckets)), Map.empty)
+    spark.table(tbl)
   }
 }

@@ -41,13 +41,9 @@ object Raster {
    * the component.
    */
   def vectorize(raster: DataFrame, threshold: Long, maxIters: Int = 256): DataFrame = {
-    val debug0 = raster.sparkSession.conf
-      .getOption("spark.graft.raster.debug").contains("true")
-    val tc0 = System.nanoTime()
     val cells = raster.filter(col("value") >= threshold)
       .select(col("cell"), col("x"), col("y"), col("value"))
       .localCheckpoint(eager = true)
-    if (debug0) println(f"vectorize cells ckpt ${(System.nanoTime() - tc0) / 1e9}%.2f s")
 
     // undirected 4-neighbor edges, built by equi-joining on shifted grid
     // coordinates (no theta join): right/down neighbors; symmetrization and

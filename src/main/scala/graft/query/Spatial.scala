@@ -191,20 +191,16 @@ object Spatial {
     // synced job per call at every parallelism level. Round 0 runs
     // optimistically; an empty query set yields an empty broadcast side,
     // which AQE collapses to an empty join without scanning the points, and
-    // the round's own pending count then exits the loop. (The debug line
-    // reports -1 for the unknown initial count.)
+    // the round's own pending count then exits the loop.
     var pendingCount = Long.MaxValue
     var acc: Option[DataFrame] = None
     var r = initialR
     var round = 0
-    val debug = spark.conf.getOption("spark.graft.knn.debug").contains("true")
     while (round < roundBudget && pendingCount > 0) {
       val (lvl, rad) = effectiveDisk(probeLevel, r)
       // disk(lvl, 2) at lvl <= 1 is the whole grid: every point is a
       // candidate, the round is exact by construction
       val fullCover = lvl <= 1 && rad >= 2
-      if (debug) println(s"knnJoin round=$round r=$r lvl=$lvl rad=$rad pending=" +
-        (if (pendingCount == Long.MaxValue) -1 else pendingCount))
       val qCells = pending
         .withColumn("qcell", cellEncode(col("qlat"), col("qlon"), lit(lvl)))
         .withColumn("jcell", explode(cellDisk(col("qcell"), lit(rad))))
@@ -343,8 +339,9 @@ object Spatial {
       return left.limit(0).select(col("id").as("lid"))
         .crossJoin(right.limit(0).select(col("id").as("rid")))
         .withColumn("dist_km", lit(0.0))
-    val bandLat = math.min(89.9,
-      math.max(math.abs(l.getDouble(0)), math.abs(l.getDouble(1))) + maxKm / Cells.KmPerDegLat)
+    val rawBand =
+      math.max(math.abs(l.getDouble(0)), math.abs(l.getDouble(1))) + maxKm / Cells.KmPerDegLat
+    val bandLat = math.min(89.9, rawBand)
     def radAt(lv: Int): Int = math.max(1, math.ceil(maxKm /
       math.min(Cells.cellWidthKm(bandLat, lv), Cells.cellHeightKm(lv))).toInt)
     val (lvl, r) = coarsen(level, radAt)
@@ -362,13 +359,16 @@ object Spatial {
     // within the band by the lat bound), so thresholds derived by
     // inverting those bounds — with 1e-9 relative slack against float
     // rounding — can only keep extra rows, never drop a within-radius
-    // pair; the exact dist filter below is unchanged. (Raw lon differences
-    // assume a non-antimeridian-wrapping table, the same assumption every
-    // bbox/cover helper here makes.)
+    // pair; the exact dist filter below is unchanged. Δλ is the wrapped
+    // difference least(|Δλ|, 360 - |Δλ|): the cell disk wraps across the
+    // antimeridian, so raw differences near 360 are close pairs. The lon
+    // bound only holds while the band is uncapped — once lats may reach
+    // the pole, cos(band) has no positive lower bound and the lon filter
+    // is off.
     val latThreshDeg = maxKm / Cells.KmPerDegLat * (1.0 + 1e-9)
     val cosBand = math.cos(graft.core.GeoMath.degToRad(bandLat))
     val lonThreshDeg =
-      if (cosBand <= 0) 360.0
+      if (rawBand >= 89.9) 360.0
       else 2.0 * math.toDegrees(math.asin(math.min(1.0,
         maxKm / (2.0 * graft.core.GeoMath.EarthRadiusKm * cosBand)))) * (1.0 + 1e-9)
     // nearest pick via the bounded TopK aggregate (k=1) rather than
@@ -381,9 +381,10 @@ object Spatial {
     // the output is row-identical. Measured together with the prefilter:
     // materialized join 8.7 -> 6.9 s, bench-shaped count 2.4 -> 1.4 s at
     // sf0.1 (J2Probe).
+    val dLon = abs(col("llon") - col("rlon"))
     lhs.join(rhs, Seq("jcell"))
       .filter(abs(col("llat") - col("rlat")) <= latThreshDeg &&
-        abs(col("llon") - col("rlon")) <= lonThreshDeg)
+        least(dLon, lit(360.0) - dLon) <= lonThreshDeg)
       .withColumn("dist_km", haversineKm(col("llat"), col("llon"), col("rlat"), col("rlon")))
       .filter(col("dist_km") <= maxKm)
       .groupBy(col("lid"), col("llat"), col("llon"))

@@ -6,8 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.ml.Dedup
 
 /** Where do d6_dup_clusters' ~2.5 s go? Phase breakdown at sf0.01:
- *  signatures+candidates vs the components loop (with per-round telemetry
- *  via spark.graft.components.debug). */
+ *  signatures+candidates vs the components loop. */
 object D6Diag {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
@@ -15,7 +14,6 @@ object D6Diag {
       .master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.graft.components.debug", "true")
       // this diagnostic measures the DISTRIBUTED loop's per-round cost;
       // production small graphs take the driver fast path instead
       .config("spark.graft.components.driverMax", "0")

@@ -221,7 +221,8 @@ class AnnSpec extends AnyFunSuite {
       emb.filter(col("vec_id") >= 250 && col("vec_id") % 2 === 1), "vec_id", "embedding")
     AnnStore.appendIvf(spark, dir, "b2",
       emb.filter(col("vec_id") >= 250 && col("vec_id") % 2 === 1), "vec_id", "embedding") // idempotent
-    assert(AnnStore.ivfDeltaNames(dir) == Seq("ann_ivf_lists_db1", "ann_ivf_lists_db2"))
+    assert(graft.pipeline.TableIO.stages(dir, AnnStore.IvfDeltaPrefix) ==
+      Seq("ann_ivf_lists_db1", "ann_ivf_lists_db2"))
 
     // full probe over base + deltas == brute force over the WHOLE corpus:
     // no vector lost, none duplicated, routing quality irrelevant

@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.ml.{Dedup, Incremental}
+import graft.pipeline.TableIO
 
 class IncrementalSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -61,7 +62,7 @@ class IncrementalSpec extends AnyFunSuite {
     val again = Incremental.ingestExact(spark, dir, "b1",
       b1.toDF("doc_id", "text"), "doc_id", "text")
     assert(again.select("id").as[Long].collect().toSet == Set(20L, 31L))
-    assert(Incremental.stateNames(dir).size == 3)
+    assert(TableIO.stages(dir, Incremental.StatePrefix).size == 3)
   }
 
   test("state side of the anti-join is bucketed: no Exchange above its scan") {
@@ -81,8 +82,8 @@ class IncrementalSpec extends AnyFunSuite {
       // build the SECOND ingest's plan without executing the write:
       // replicate the operator's join against the staged state
       val firsts = Incremental.batchFirsts(b1.toDF("doc_id", "text"), "doc_id", "text")
-      val state = graft.pipeline.TableIO.bucketedStage(spark, dir,
-          Incremental.stateNames(dir).head, "h", Incremental.DefaultBuckets) {
+      val state = TableIO.bucketedStage(spark, dir,
+          TableIO.stages(dir, Incremental.StatePrefix).head, "h", Incremental.DefaultBuckets) {
         sys.error("state must already be staged")
       }.select(col("h").as("s_h"), col("text").as("s_text"))
       val joined = firsts.join(state,
@@ -191,8 +192,8 @@ class IncrementalSpec extends AnyFunSuite {
         Seq((20L, tA2), (21L, tY)).toDF("doc_id", "text"), "doc_id", "text", 0.7)
       .select("doc_id").as[Long].collect().toSet
     assert(again == Set(21L))
-    assert(Incremental.stateNames(dir, Incremental.NsigPrefix).size == 2)
-    assert(Incremental.stateNames(dir, Incremental.NdocPrefix).size == 2)
+    assert(TableIO.stages(dir, Incremental.NsigPrefix).size == 2)
+    assert(TableIO.stages(dir, Incremental.NdocPrefix).size == 2)
   }
 
   test("near-dup state probe: signature index side is bucketed, no Exchange") {
@@ -206,8 +207,8 @@ class IncrementalSpec extends AnyFunSuite {
     try {
       val probe = graft.ml.Dedup.minhashBands(graft.ml.Dedup.minhashSignatures(
         Seq((20L, tA2)).toDF("doc_id", "text"), "doc_id", "text"))
-      val state = graft.pipeline.TableIO.bucketedStage(spark, dir,
-          Incremental.stateNames(dir, Incremental.NsigPrefix).head, "band_key",
+      val state = TableIO.bucketedStage(spark, dir,
+          TableIO.stages(dir, Incremental.NsigPrefix).head, "band_key",
           Incremental.DefaultBuckets) {
         sys.error("nsig must already be staged")
       }.select(col("band"), col("band_key"), col("doc_id").as("id1"))
@@ -270,7 +271,7 @@ class IncrementalSpec extends AnyFunSuite {
     val before = Incremental.accepted(spark, dir)
       .select("id", "n_dups").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     Incremental.compact(spark, dir)
-    val names = Incremental.stateNames(dir)
+    val names = TableIO.stages(dir, Incremental.StatePrefix)
     assert(names.size == 1 && names.head.contains("compact"), names.toString)
     val after = Incremental.accepted(spark, dir)
       .select("id", "n_dups").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -282,14 +283,14 @@ class IncrementalSpec extends AnyFunSuite {
     val out = Incremental.ingestExact(spark, dir, "b3", b3, "doc_id", "text")
       .select("id").as[Long].collect().toSet
     assert(out == Set(51L))
-    assert(Incremental.stateNames(dir).size == 2)
+    assert(TableIO.stages(dir, Incremental.StatePrefix).size == 2)
   }
 
   test("near-dup ingest enforces orphan recovery: new batch over a half-completed one fails") {
     val dir = freshDir("orphan")
     assert(ingestNear(dir, 0, Seq((10L, tA), (11L, tX))) == Set(10L, 11L))
     // simulate a crash between the two stage writes: drop n0's nsig half
-    val nsig = Incremental.stateNames(dir, Incremental.NsigPrefix)
+    val nsig = TableIO.stages(dir, Incremental.NsigPrefix)
     assert(nsig.size == 1)
     org.apache.commons.io.FileUtils.deleteQuietly(
       new java.io.File(s"$dir/${nsig.head}"))
@@ -302,20 +303,36 @@ class IncrementalSpec extends AnyFunSuite {
     // ...while re-ingesting the SAME batch completes the orphan half and
     // the stream continues
     assert(ingestNear(dir, 0, Seq((10L, tA), (11L, tX))) == Set(10L, 11L))
-    assert(Incremental.stateNames(dir, Incremental.NsigPrefix).size == 1)
+    assert(TableIO.stages(dir, Incremental.NsigPrefix).size == 1)
     assert(ingestNear(dir, 1, Seq((20L, tA), (21L, tY))) == Set(21L))
   }
 
-  test("pack stats sidecar: missing sidecar falls back to the aggregate, same offsets") {
-    val dir = freshDir("packstats")
+  test("pack crash window: a stage without its manifest is unlisted and re-ingested") {
+    val dir = freshDir("packcrash")
     val b0 = Seq((1L, 5L), (2L, 7L)).toDF("doc_id", "toks")
-    graft.ml.Incremental.ingestPack(spark, dir, "p0", b0, "doc_id", "toks", 10L)
-    // drop the sidecar (pre-upgrade stage / crash between the two writes)
-    val st = Incremental.stateNames(dir, Incremental.PackPrefix).head
-    assert(new java.io.File(s"$dir/$st/${Incremental.PackStatsFile}").delete())
-    val p1 = graft.ml.Incremental.ingestPack(spark, dir, "p1",
-        Seq((10L, 4L)).toDF("doc_id", "toks"), "doc_id", "toks", 10L)
-      .collect().map(r => (r.getLong(0), r.getLong(2), r.getLong(3))).toSet
-    assert(p1 == Set((10L, 12L, 1L))) // base 12 re-derived by the aggregate
+    val b1 = Seq((10L, 4L)).toDF("doc_id", "toks")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(2), r.getLong(3))).toSet
+    Incremental.ingestPack(spark, dir, "p0", b0, "doc_id", "toks", 10L)
+    val st = TableIO.stages(dir, Incremental.PackPrefix).head
+    assert(TableIO.manifest(dir, st).stats == Map("sum_toks" -> 12L, "max_id" -> 2L))
+    // crash after the data commit (_SUCCESS written), before the manifest
+    assert(TableIO.manifestPath(dir, st).toFile.delete())
+    assert(new java.io.File(s"$dir/$st/_SUCCESS").exists())
+    assert(TableIO.stages(dir, Incremental.PackPrefix).isEmpty)
+    val p0 = rows(Incremental.ingestPack(spark, dir, "p0", b0, "doc_id", "toks", 10L))
+    assert(TableIO.stages(dir, Incremental.PackPrefix) == Seq(st))
+    val (p1df, jobs) = TestSpark.jobsOf(
+      Incremental.ingestPack(spark, dir, "p1", b1, "doc_id", "toks", 10L))
+    val p1 = rows(p1df)
+    assert(p0 ++ p1 == rows(graft.ml.Packing.tokenBudgetShards(
+      b0.unionByName(b1), "doc_id", "toks", 10L)))
+    assert(p1 == Set((10L, 12L, 1L)))
+    // p1's base comes from p0's manifest: the ingest runs exactly the jobs
+    // the same batch runs as the first batch of an empty stream, none over
+    // p0's files
+    val (_, firstJobs) = TestSpark.jobsOf(Incremental.ingestPack(spark,
+      freshDir("packcrash-first"), "p1", b1, "doc_id", "toks", 10L))
+    assert(jobs == firstJobs, s"p1 ingest ran $jobs jobs, a first batch $firstJobs")
   }
 }

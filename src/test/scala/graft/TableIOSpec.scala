@@ -24,9 +24,9 @@ class TableIOSpec extends AnyFunSuite {
     assert(first.count() == 100)
     assert(computeRuns == 1)
     assert(TableIO.isComplete(dir, "s1"))
-    val manifest = Files.readString(TableIO.manifestPath(dir, "s1"))
-    assert(manifest.contains("\"rows\": 100"))
-    assert(manifest.contains("\"partitions\""))
+    val manifest = TableIO.manifest(dir, "s1")
+    assert(manifest.rows == 100)
+    assert(manifest.partitions.nonEmpty && manifest.partitions.map(_.rows).sum == 100)
     // resume: compute must NOT run again
     val second = TableIO.stage(spark, dir, "s1")(build())
     assert(second.count() == 100)
@@ -92,7 +92,28 @@ class TableIOSpec extends AnyFunSuite {
       TableIO.bucketedStage(spark, dir, "postings_b", "doc_id", 8)(build())
     }
     // per-partition lineage is recorded for bucketed stages too
-    val manifest = java.nio.file.Files.readString(TableIO.manifestPath(dir, "postings_b"))
-    assert(manifest.contains("\"partitions\"") && manifest.contains("\"rows\": 2000"))
+    val manifest = TableIO.manifest(dir, "postings_b")
+    assert(manifest.partitions.nonEmpty && manifest.rows == 2000)
+  }
+
+  test("bucketed stage whose schema DDL needs escaping re-registers in a fresh catalog") {
+    val dir = Files.createTempDirectory("graft_stage_esc").toString
+    val odd = "we\"ird\\col"
+    var computeRuns = 0
+    def build() = {
+      computeRuns += 1
+      (1 to 200).map(i => (s"t${i % 13}", i.toLong)).toDF("term", odd)
+    }
+    val first = TableIO.bucketedStage(spark, dir, "esc_b", "term", 4)(build())
+    assert(first.columns.toSeq == Seq("term", odd) && computeRuns == 1)
+    assert(TableIO.manifest(dir, "esc_b").bucketDdlSchema.exists(_.contains(odd)))
+    val tbl = spark.catalog.listTables().collect().map(_.name)
+      .find(_.startsWith("graft_esc_b_by_term")).get
+    spark.sql(s"DROP TABLE $tbl")
+    val resumed = TableIO.bucketedStage(spark, dir, "esc_b", "term", 4)(build())
+    assert(computeRuns == 1, "bucketed stage recomputed despite completed manifest")
+    assert(resumed.columns.toSeq == Seq("term", odd))
+    assert(resumed.agg(sum(col(odd))).head().getLong(0) ==
+      (1 to 200).sum.toLong)
   }
 }

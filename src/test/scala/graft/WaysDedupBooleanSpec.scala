@@ -53,6 +53,27 @@ class WaysDedupBooleanSpec extends AnyFunSuite {
     assert(noLeft.count() == 0)
   }
 
+  // the bbox prefilter must stay conservative where longitude stops bounding
+  // distance: above the latitude-band cap, and across the antimeridian
+  private def nearestPair(l: (Double, Double), r: (Double, Double), maxKm: Double): Unit = {
+    val left = Seq((1L, l._1, l._2)).toDF("id", "lat", "lon")
+    val right = Seq((2L, r._1, r._2)).toDF("id", "lat", "lon")
+    val got = Spatial.nearestJoin(left, right, maxKm).collect()
+    val brute = GeoMath.haversineKm(l._1, l._2, r._1, r._2)
+    assert(brute <= maxKm, s"fixture drift: $brute km")
+    assert(got.length == 1, s"pair at $brute km dropped")
+    assert(got.head.getAs[Long]("rid") == 2L)
+    assert(math.abs(got.head.getAs[Double]("dist_km") - brute) < 1e-9)
+  }
+
+  test("nearestJoin keeps a within-radius pair near the pole") {
+    nearestPair((89.95, 0.0), (89.95, 90.0), maxKm = 10.0)
+  }
+
+  test("nearestJoin keeps a within-radius pair across the antimeridian") {
+    nearestPair((0.0, 179.99), (0.0, -179.99), maxKm = 5.0)
+  }
+
   test("nearestWayJoin endpointsOnly reproduces GetFullAdress' single-segment projection (indexer.go:1004-1022)") {
     val ways = Derived.ways(spark, TestSpark.Sf).collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getSeq[Double](2).toArray))
