@@ -121,37 +121,30 @@ object Cells {
 
   /**
    * Cells at Chebyshev grid distance exactly `r` from `cell` (the ring);
-   * r=0 returns the cell itself. Longitude wraps; latitude clamps at the
-   * poles (out-of-range rows are dropped).
+   * r=0 returns the cell itself. Same wrapping as [[box]].
    */
-  def ring(cell: Long, r: Int): Array[Long] = {
+  def ring(cell: Long, r: Int): Array[Long] =
+    if (r == 0) Array(cell) else box(cell, r, r).diff(box(cell, r - 1, r - 1))
+
+  /**
+   * All cells within `rx` columns and `ry` rows of `cell`. Longitude wraps
+   * modulo 2^level, and a box at least as wide as the grid takes every
+   * column once; latitude clamps at the poles (out-of-range rows are
+   * dropped). Each cell appears once.
+   */
+  def box(cell: Long, rx: Int, ry: Int): Array[Long] = {
     val l = level(cell); val n = 1L << l
     val cx = x(cell); val cy = y(cell)
-    if (r == 0) return Array(cell)
-    val out = new ArrayBuffer[Long](8 * r)
-    var dx = -r
-    while (dx <= r) {
-      var dy = -r
-      while (dy <= r) {
-        if (math.max(math.abs(dx), math.abs(dy)) == r) {
-          val ny = cy + dy
-          if (ny >= 0 && ny < n) {
-            val nx = ((cx + dx) % n + n) % n // wrap longitude
-            out += fromXY(nx, ny, l)
-          }
-        }
-        dy += 1
-      }
-      dx += 1
-    }
-    out.distinct.toArray
+    val xs = if (2L * rx + 1 >= n) 0L until n else (-rx.toLong to rx).map(dx => ((cx + dx) % n + n) % n)
+    val ys = math.max(0L, cy - ry) to math.min(n - 1, cy + ry)
+    (for (yy <- ys; xx <- xs) yield fromXY(xx, yy, l)).toArray
   }
 
   /** All cells at Chebyshev distance <= r (the disk). */
-  def disk(cell: Long, r: Int): Array[Long] =
-    (0 to r).flatMap(ring(cell, _)).distinct.toArray
+  def disk(cell: Long, r: Int): Array[Long] = box(cell, r, r)
 
-  /** Cell IDs covering a lat/lon bbox at `level`. */
+  /** Cell IDs covering a lat/lon bbox at `level`. A box with
+   *  lonMin > lonMax is empty: it does not wrap across the antimeridian. */
   def coverBBox(latMin: Double, lonMin: Double, latMax: Double, lonMax: Double, level: Int): Array[Long] = {
     val x0 = xIndex(lonMin, level); val x1 = xIndex(lonMax, level)
     val y0 = yIndex(latMin, level); val y1 = yIndex(latMax, level)
@@ -163,14 +156,6 @@ object Cells {
       xx += 1
     }
     out.toArray
-  }
-
-  /** Cells covering a radius around a point (conservative superset). */
-  def coverCircle(lat: Double, lon: Double, radiusKm: Double, level: Int): Array[Long] = {
-    val dLat = radiusKm / KmPerDegLat
-    val cosLat = math.max(0.01, math.cos(GeoMath.degToRad(lat)))
-    val dLon = radiusKm / (KmPerDegLat * cosLat)
-    coverBBox(lat - dLat, lon - dLon, lat + dLat, lon + dLon, level)
   }
 
   private def segmentIntersectsRect(aLat: Double, aLon: Double, bLat: Double, bLon: Double,
@@ -257,15 +242,6 @@ object Cells {
     360.0 / (1L << level) * KmPerDegLat * math.max(0.0, math.cos(GeoMath.degToRad(lat)))
 
   /**
-   * Lower bound on the distance from (lat, lon) to any point OUTSIDE the
-   * disk of radius `r` around its cell. Any point outside the disk is at
-   * least `r` cells away along one axis, minus the query's offset within
-   * its own cell — conservatively (r - 1) * min(cellHeight, cellWidth)
-   * plus the distance to the near edge (>= 0). Used as the kNN ring-loop
-   * stop test: once kth-distance <= this bound, the top-k is exact
-   * (equivalent to the reference R-tree's minDist pruning, rtree.go:543-568).
-   */
-  /**
    * Band-conservative variant of [[minDistOutsideDiskKm]]: a lower bound
    * valid for EVERY point whose |lat| <= maxAbsLat, dropping the per-point
    * in-cell offsets (>= 0) and using the band's worst-case cos(lat). Lets a
@@ -286,6 +262,15 @@ object Cells {
     math.min(bLat, bLon)
   }
 
+  /**
+   * Lower bound on the distance from (lat, lon) to any point OUTSIDE the
+   * disk of radius `r` around its cell. Any point outside the disk is at
+   * least `r` cells away along one axis, minus the query's offset within
+   * its own cell — conservatively (r - 1) * min(cellHeight, cellWidth)
+   * plus the distance to the near edge (>= 0). Used as the kNN ring-loop
+   * stop test: once kth-distance <= this bound, the top-k is exact
+   * (equivalent to the reference R-tree's minDist pruning, rtree.go:543-568).
+   */
   def minDistOutsideDiskKm(lat: Double, lon: Double, level: Int, r: Int): Double = {
     if (r <= 0) return 0.0
     val cell = encode(lat, lon, level)

@@ -69,16 +69,18 @@ case class CellCoordExpr(child: Expression, isX: Boolean) extends UnaryExpressio
     copy(child = newChild)
 }
 
-/** cell_disk(cell, r): all cell IDs at Chebyshev distance <= r — the ring-join
- *  generator (explode(cell_disk(...))) replacing R-tree descent. */
-case class CellDiskExpr(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
+/** cell_disk(cell, rx, ry): all cell IDs within `rx` columns and `ry` rows
+ *  of the cell ([[graft.core.Cells.box]]) — the cover generator
+ *  (explode(cell_disk(...))) replacing R-tree descent. */
+case class CellDiskExpr(first: Expression, second: Expression, third: Expression)
+    extends TernaryExpression with CodegenFallback {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "cell_disk"
-  override def nullSafeEval(cell: Any, r: Any): Any =
-    new GenericArrayData(Cells.disk(cell.asInstanceOf[Long], r.asInstanceOf[Int]))
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
+  override def nullSafeEval(cell: Any, rx: Any, ry: Any): Any =
+    new GenericArrayData(Cells.box(cell.asInstanceOf[Long], rx.asInstanceOf[Int], ry.asInstanceOf[Int]))
+  override protected def withNewChildrenInternal(
+      newFirst: Expression, newSecond: Expression, newThird: Expression): Expression =
+    copy(first = newFirst, second = newSecond, third = newThird)
 }
 
 /**
@@ -262,8 +264,10 @@ object GeoFunctions {
   def cellEncode(lat: Column, lon: Column, level: Int): Column =
     cellEncode(lat, lon, lit(level))
 
-  def cellDisk(cell: Column, r: Column): Column =
-    toCol(CellDiskExpr(toExpr(cell.cast(LongType)), toExpr(r.cast(IntegerType))))
+  def cellDisk(cell: Column, rx: Column, ry: Column): Column =
+    toCol(CellDiskExpr(toExpr(cell.cast(LongType)), toExpr(rx.cast(IntegerType)),
+      toExpr(ry.cast(IntegerType))))
+  def cellDisk(cell: Column, r: Column): Column = cellDisk(cell, r, r)
 
   def minDistOutsideDisk(lat: Column, lon: Column, level: Int, r: Int): Column =
     toCol(MinDistOutsideDiskExpr(toExpr(lat.cast(DoubleType)), toExpr(lon.cast(DoubleType)), level, r))
@@ -288,7 +292,7 @@ object GeoFunctions {
    *  duplicated its whole radians/cos subtree, and because the caller's
    *  CASE evaluates the `crossed` branch lazily, codegen subexpression
    *  elimination could not factor them — measured as ~3.2 s of the st2
-   *  status projection at sf0.1 (GeoProbe), vs ~0.3 s for everything else.
+   *  status projection at sf0.1, vs ~0.3 s for everything else.
    *  Semantics are unchanged: the scalar twin is the same equirectangular-
    *  projection quadratic; its Java division yields Inf/NaN on a
    *  zero-length segment (alpha = 0), whose comparisons are false — the

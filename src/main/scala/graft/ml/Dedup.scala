@@ -132,7 +132,7 @@ object Dedup {
    * Formulation note (optimization round): an un-exploded variant that
    * attaches per-doc shingle SETS to each pair and intersects with
    * `size(array_intersect)` was measured 2.6x SLOWER (18.5 s vs 6.8 s on
-   * 167k candidate pairs, graft.tools.RefineProbe) despite shipping far
+   * 167k candidate pairs) despite shipping far
    * fewer rows — the per-pair array materialization and intersect eval
    * lose to the exploded join + count aggregate, whose every operator is
    * whole-stage-codegen'd. Keeping the exploded form is the measured

@@ -9,6 +9,7 @@ import com.fasterxml.jackson.databind.json.JsonMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /**
  * Stage-boundary table IO with per-partition lineage + metrics, enabling
@@ -25,8 +26,8 @@ import org.apache.spark.sql.functions._
  * recomputed; the persisted table is read back. Otherwise the stage runs
  * and commits in this order: Spark's file committer writes the data and
  * then `_SUCCESS`; the [[Manifest]] (per-file row counts from the parquet
- * footers, total rows, wall time, schema, layout and the caller's declared
- * stats) is written to a temporary file and atomically renamed to
+ * footers, total rows, wall time, read-back schema, layout and the caller's
+ * declared stats) is written to a temporary file and atomically renamed to
  * `_lineage.json`. The manifest is the completion marker, so a complete
  * stage never has a truncated or missing manifest, and a crash anywhere
  * before the rename leaves an incomplete stage that the next run rewrites.
@@ -38,10 +39,14 @@ object TableIO {
   /** Rows of one physical file of a stage, path relative to the stage dir. */
   final case class FileRows(file: String, rows: Long)
 
-  /** A completed stage's `_lineage.json`: what the write produced. `stats`
-   *  holds aggregates the writer declared (e.g. a pack stage's token sum),
-   *  so later readers answer them from the manifest instead of the data.
-   *  Bucketed stages record their layout and DDL schema for re-registration. */
+  /** A completed stage's `_lineage.json`: what the write produced. `schema`
+   *  is the DDL of the data columns as Spark reads them back (every Parquet
+   *  column is nullable); reading with it skips Parquet schema inference,
+   *  one job per read, and Spark still appends the `partitionBy` columns
+   *  typed from the directory names, as an inferring read does. Bucketed
+   *  stages re-register from it and their recorded layout. `stats` holds
+   *  aggregates the writer declared (e.g. a pack stage's token sum), so
+   *  later readers answer them from the manifest instead of the data. */
   final case class Manifest(
       stage: String,
       rows: Long,
@@ -50,7 +55,6 @@ object TableIO {
       partitionBy: Seq[String],
       bucketKey: Option[String],
       nBuckets: Option[Int],
-      bucketDdlSchema: Option[String],
       // without the content type, Jackson boxes small numbers as Integer
       // behind the erased Long and the first unboxing throws
       @JsonDeserialize(contentAs = classOf[java.lang.Long]) stats: Map[String, Long],
@@ -92,11 +96,12 @@ object TableIO {
                      partitionBy: Seq[String], bucket: Option[(String, Int)],
                      stats: Map[String, Long]): Unit = {
     val perFile = lineage(s"$dir/$name")
+    val dataColumns = df.schema.filterNot(f => partitionBy.contains(f.name))
     val m = Manifest(stage = name, rows = perFile.map(_._2).sum,
-      wallSec = (System.nanoTime() - t0) / 1e9, schema = df.schema.simpleString,
+      wallSec = (System.nanoTime() - t0) / 1e9,
+      schema = StructType(dataColumns.map(_.copy(nullable = true))).toDDL,
       partitionBy = partitionBy, bucketKey = bucket.map(_._1),
-      nBuckets = bucket.map(_._2), bucketDdlSchema = bucket.map(_ => df.schema.toDDL),
-      stats = stats, partitions = perFile.map { case (f, n) => FileRows(f, n) }.toSeq)
+      nBuckets = bucket.map(_._2), stats = stats, partitions = perFile.map { case (f, n) => FileRows(f, n) }.toSeq)
     val tmp = Paths.get(dir, name, "_lineage.json.tmp")
     Mapper.writerWithDefaultPrettyPrinter().writeValue(tmp.toFile, m)
     Files.move(tmp, manifestPath(dir, name), StandardCopyOption.ATOMIC_MOVE)
@@ -159,10 +164,8 @@ object TableIO {
   def stage(spark: SparkSession, dir: String, name: String,
             partitionBy: Seq[String] = Nil)
            (compute: => DataFrame): DataFrame = {
-    val path = s"$dir/$name"
-    if (isComplete(dir, name)) return spark.read.parquet(path)
     stageWrite(spark, dir, name, partitionBy)(compute)
-    spark.read.parquet(path)
+    spark.read.schema(manifest(dir, name).schema).parquet(s"$dir/$name")
   }
 
   /** The write half of [[stage]] without the read-back: constructing the
@@ -209,7 +212,7 @@ object TableIO {
    * `cell`). At warehouse scale the catalog is the metastore and the
    * registration outlives every session; here the catalog is session-local,
    * so a fresh session re-registers over the existing files from the DDL
-   * recorded in the manifest (`bucket_ddl_schema`) — the data itself is never
+   * recorded in the manifest (`schema`) — the data itself is never
    * rewritten on resume.
    *
    * Returns `spark.table(...)`, the bucket-aware handle (a plain
@@ -259,9 +262,7 @@ object TableIO {
     }
     if (!registered && isComplete(dir, name)) {
       // resume in a fresh session: re-register over the existing files
-      val schemaDdl = requireLayout().bucketDdlSchema
-        .getOrElse(sys.error(s"stage $name exists but has no bucket_ddl_schema"))
-      spark.sql(ddl(schemaDdl))
+      spark.sql(ddl(requireLayout().schema))
       return spark.table(tbl)
     }
     // registered but NOT complete: a previous attempt died between

@@ -59,14 +59,31 @@ class CellsSpec extends AnyFunSuite {
     }
   }
 
-  test("coverCircle is a superset of cells holding points within the radius") {
-    val (qLat, qLon, rKm) = (-7.25, 108.5, 37.0)
-    val cover = Cells.coverCircle(qLat, qLon, rKm, 13).toSet
+  test("box covers every point within a capped radius, at the poles and across the antimeridian") {
     for (_ <- 1 to 2000) {
-      val b = rnd.nextDouble() * 360
-      val d = rnd.nextDouble() * rKm
-      val (pLat, pLon) = GeoMath.destinationPoint(qLat, qLon, b, d)
-      assert(cover.contains(Cells.encode(pLat, pLon, 13)))
+      val (qLat, qLon) = rnd.nextInt(3) match {
+        case 0 => (randLat(), randLon())
+        case 1 => ((89.5 + rnd.nextDouble() * 0.5) * (if (rnd.nextBoolean()) 1 else -1), randLon())
+        case _ => (rnd.nextDouble() * 120 - 60, (180.0 - rnd.nextDouble() * 0.05) * (if (rnd.nextBoolean()) 1 else -1))
+      }
+      val km = 0.05 + rnd.nextDouble() * 40
+      val (pLat, pLon) = GeoMath.destinationPoint(qLat, qLon, rnd.nextDouble() * 360, rnd.nextDouble() * km)
+      // the capped plan's bounds: rows from the latitude cap, columns from
+      // the haversine inverse over the query's latitude band
+      val dLat = km / Cells.KmPerDegLat
+      val band = math.abs(qLat) + dLat
+      val span =
+        if (band >= 90) 360.0
+        else 2 * math.toDegrees(math.asin(math.min(1.0,
+          math.sin(km / (2 * GeoMath.EarthRadiusKm)) / math.cos(math.toRadians(band)))))
+      val rawDLon = math.abs(qLon - pLon)
+      assert(math.abs(qLat - pLat) <= dLat + 1e-9 && math.min(rawDLon, 360 - rawDLon) <= span + 1e-9,
+        s"($pLat, $pLon) outside the bounds of ($qLat, $qLon) at $km km")
+      val level = (13 to 1 by -1).find(l => math.ceil(km / Cells.cellHeightKm(l)) <= 2).get
+      val rx = math.ceil(span / (360.0 / (1L << level))).toInt
+      val ry = math.ceil(km / Cells.cellHeightKm(level)).toInt
+      assert(Cells.box(Cells.encode(qLat, qLon, level), rx, ry).contains(Cells.encode(pLat, pLon, level)),
+        s"($pLat, $pLon) outside the box of ($qLat, $qLon) at $km km, level $level")
     }
   }
 

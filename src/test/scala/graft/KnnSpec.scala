@@ -111,5 +111,8 @@ class KnnSpec extends AnyFunSuite {
     val brute = o.filter(col("lat").between(-7.8, -6.9) && col("lon").between(107.2, 108.8))
       .select("id").collect().map(_.getLong(0)).toSet
     assert(got == brute)
+    // lonMin > lonMax does not wrap across the antimeridian: the box is empty
+    assert(Spatial.rangeSearch(o, -7.8, 108.8, -6.9, 107.2).count() == 0)
+    assert(Cells.coverBBox(-7.8, 108.8, -6.9, 107.2, Cells.DefaultLevel).isEmpty)
   }
 }

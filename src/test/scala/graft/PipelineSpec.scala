@@ -38,6 +38,16 @@ class PipelineSpec extends AnyFunSuite {
     val m2 = Pipeline.run(spark, Sf, out)
     assert(m2.forall(_._4), "second run must resume every stage")
     assert(m2.map(m => m._1 -> m._2) === m1.map(m => m._1 -> m._2))
+
+    // a resumed stage reads with its recorded schema: no Parquet schema
+    // inference job before an action, and the same columns and types as
+    // an inferring read
+    for (name <- m1.map(_._1)) {
+      val (resumed, jobs) = jobsOf(TableIO.stage(spark, out, name)(sys.error(s"$name must be complete")))
+      assert(jobs == 0, s"resuming $name ran $jobs jobs")
+      val fresh = spark.read.parquet(s"$out/$name")
+      assert(resumed.schema.map(f => f.name -> f.dataType) == fresh.schema.map(f => f.name -> f.dataType), name)
+    }
   }
 
   test("curation chain: checkpointed run == pure plan, and a re-run resumes idempotently") {

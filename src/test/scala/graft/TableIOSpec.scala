@@ -106,7 +106,7 @@ class TableIOSpec extends AnyFunSuite {
     }
     val first = TableIO.bucketedStage(spark, dir, "esc_b", "term", 4)(build())
     assert(first.columns.toSeq == Seq("term", odd) && computeRuns == 1)
-    assert(TableIO.manifest(dir, "esc_b").bucketDdlSchema.exists(_.contains(odd)))
+    assert(TableIO.manifest(dir, "esc_b").schema.contains(odd))
     val tbl = spark.catalog.listTables().collect().map(_.name)
       .find(_.startsWith("graft_esc_b_by_term")).get
     spark.sql(s"DROP TABLE $tbl")
