@@ -59,6 +59,38 @@ class CellsSpec extends AnyFunSuite {
     }
   }
 
+  // the capped plan's bounds: rows from the latitude cap, columns from the
+  // haversine inverse over the query's latitude band (all longitudes once
+  // the band reaches a pole)
+  private def capBounds(qLat: Double, km: Double): (Double, Double) = {
+    val dLat = km / Cells.KmPerDegLat
+    val band = math.abs(qLat) + dLat
+    val span =
+      if (band >= 90) 360.0
+      else 2 * math.toDegrees(math.asin(math.min(1.0,
+        math.sin(km / (2 * GeoMath.EarthRadiusKm)) / math.cos(math.toRadians(band)))))
+    (dLat, span)
+  }
+
+  private def capBox(qLat: Double, qLon: Double, km: Double, level: Int): Array[Long] = {
+    val rx = math.ceil(capBounds(qLat, km)._2 / (360.0 / (1L << level))).toInt
+    val ry = math.ceil(km / Cells.cellHeightKm(level)).toInt
+    Cells.box(Cells.encode(qLat, qLon, level), rx, ry)
+  }
+
+  // the circle cover is now the capped plan's box (Cells.coverCircle, which
+  // missed cells at the poles and the antimeridian, is gone)
+  test("coverCircle is a superset of cells holding points within the radius") {
+    val (qLat, qLon, rKm) = (-7.25, 108.5, 37.0)
+    val cover = capBox(qLat, qLon, rKm, 13).toSet
+    for (_ <- 1 to 2000) {
+      val b = rnd.nextDouble() * 360
+      val d = rnd.nextDouble() * rKm
+      val (pLat, pLon) = GeoMath.destinationPoint(qLat, qLon, b, d)
+      assert(cover.contains(Cells.encode(pLat, pLon, 13)))
+    }
+  }
+
   test("box covers every point within a capped radius, at the poles and across the antimeridian") {
     for (_ <- 1 to 2000) {
       val (qLat, qLon) = rnd.nextInt(3) match {
@@ -68,21 +100,12 @@ class CellsSpec extends AnyFunSuite {
       }
       val km = 0.05 + rnd.nextDouble() * 40
       val (pLat, pLon) = GeoMath.destinationPoint(qLat, qLon, rnd.nextDouble() * 360, rnd.nextDouble() * km)
-      // the capped plan's bounds: rows from the latitude cap, columns from
-      // the haversine inverse over the query's latitude band
-      val dLat = km / Cells.KmPerDegLat
-      val band = math.abs(qLat) + dLat
-      val span =
-        if (band >= 90) 360.0
-        else 2 * math.toDegrees(math.asin(math.min(1.0,
-          math.sin(km / (2 * GeoMath.EarthRadiusKm)) / math.cos(math.toRadians(band)))))
+      val (dLat, span) = capBounds(qLat, km)
       val rawDLon = math.abs(qLon - pLon)
       assert(math.abs(qLat - pLat) <= dLat + 1e-9 && math.min(rawDLon, 360 - rawDLon) <= span + 1e-9,
         s"($pLat, $pLon) outside the bounds of ($qLat, $qLon) at $km km")
       val level = (13 to 1 by -1).find(l => math.ceil(km / Cells.cellHeightKm(l)) <= 2).get
-      val rx = math.ceil(span / (360.0 / (1L << level))).toInt
-      val ry = math.ceil(km / Cells.cellHeightKm(level)).toInt
-      assert(Cells.box(Cells.encode(qLat, qLon, level), rx, ry).contains(Cells.encode(pLat, pLon, level)),
+      assert(capBox(qLat, qLon, km, level).contains(Cells.encode(pLat, pLon, level)),
         s"($pLat, $pLon) outside the box of ($qLat, $qLon) at $km km, level $level")
     }
   }
