@@ -20,7 +20,8 @@ import graft.sources.Derived
  * exactly Spark's partial aggregation + shuffle merge (Tungsten spills);
  * no operator code is needed for them. Postings store (term, doc_id, tf)
  * — computing tf at build time removes the reference's query-time recount
- * (scoring.go:29-47).
+ * (scoring.go:29-47); the scoring form ([[postingsWithLen]]) adds the
+ * field length, which the reference reads by direct lookup.
  *
  * Scale notes: the postings table is hash-partitioned by term at the
  * groupBy shuffle; persisted form should be bucketed by term so query-time
@@ -35,6 +36,18 @@ object TextIndex {
     docs.select(col(idCol).as("doc_id"), explode(Derived.tokens(col(textCol))).as("term"))
       .groupBy(col("term"), col("doc_id"))
       .agg(count(lit(1)).as("tf"))
+
+  /** Per-field postings with the field length on every row: (term, doc_id,
+   *  tf, len). `len` is the [[fieldLengths]] value, taken from the same
+   *  tokenized row, so BM25 saturation reads it off the posting instead of
+   *  joining a length table. */
+  def postingsWithLen(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    docs.select(col(idCol).as("doc_id"), Derived.tokens(col(textCol)).as("toks"))
+      .select(col("doc_id"), size(col("toks")).cast("long").as("len"),
+        explode(col("toks")).as("term"))
+      .groupBy(col("term"), col("doc_id"), col("len"))
+      .agg(count(lit(1)).as("tf"))
+      .select("term", "doc_id", "tf", "len")
 
   /** Per-doc field length (token count). Docs with zero tokens keep len=0. */
   def fieldLengths(docs: DataFrame, idCol: String, textCol: String): DataFrame =

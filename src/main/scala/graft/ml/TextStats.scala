@@ -37,16 +37,23 @@ object TextStats {
    *  (the bare en priority), any hit gives best >= 8, so
    *  idx = (best >= 8) * (best mod 8 + 1) is 0 for 'und' and prio+1
    *  otherwise — every subexpression is unconditional, so the tokenizer
-   *  and the four hit counts evaluate once per row. */
+   *  and the four hit counts evaluate once per row.
+   *
+   *  NULL text gives 'es', as in the oracle's [[langIdSqlCase]]: there
+   *  every hit count is NULL, so each WHEN compares NULL and the CASE falls
+   *  through to ELSE 'es'. Here NULL tokens make `best` NULL, and the
+   *  `coalesce` (whose first argument codegen still shares subexpressions
+   *  in, unlike a CASE branch) maps it to 'es'. Empty text has no hits:
+   *  'und'. */
   def langIdCol(textCol: Column): Column = {
     val toks = Derived.tokens(textCol)
     val prio = Stopwords.length - 1 to 0 by -1 // en=3, de=2, fr=1, es=0
     val best = greatest(Stopwords.zip(prio).map { case ((_, ws), p) =>
       size(filter(toks, t => t.isin(ws: _*))).cast("long") * 8 + p
     }: _*)
-    element_at(
+    coalesce(element_at(
       typedLit(Seq("und", "es", "fr", "de", "en")),
-      ((best >= 8).cast("long") * (pmod(best, lit(8L)) + 1) + 1).cast("int"))
+      ((best >= 8).cast("long") * (pmod(best, lit(8L)) + 1) + 1).cast("int")), lit("es"))
   }
 
   def langId(docs: DataFrame, idCol: String, textCol: String): DataFrame =

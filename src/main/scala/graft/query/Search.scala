@@ -39,13 +39,16 @@ object ScoringConstants {
  *    tf_q)*idf summed; norms computed but never applied — faithful bug,
  *    reproduced by simply not dividing.
  *
- * Query plan shape: the query-term set is tiny -> `isin` filter on the
- * postings table (partition/row-group prunable on term), per-field stats
- * and query-term multiplicities are literals, df is a broadcast of the
- * query terms' rows of the stored vocabulary, scoring is pure column
- * arithmetic, and the final
- * `orderBy(desc(score)).limit(k)` becomes TakeOrderedAndProject — a true
- * distributed top-k, never a full sort at scale.
+ * Query plan shape: every posting row carries what scoring needs —
+ * (term, doc_id, tf, len, df), the field length and the term's df over
+ * both fields — built once with the index (one cached table per field
+ * fresh, the `idx_postings_*` stages at rest). A BM25F request is then
+ * one term-pruned scan of both fields' postings (`isin` on term,
+ * partition/row-group prunable), per-row saturation and idf as column
+ * arithmetic under literal per-field stats and query-term multiplicities,
+ * a partial aggregate per doc, and `orderBy(desc(score)).limit(k)` as
+ * TakeOrderedAndProject — a true distributed top-k, never a full sort at
+ * scale — with no per-request join or broadcast of lengths or df.
  */
 class SearchIndex(docs: DataFrame, idCol: String, nameCol: String, addrCol: String,
                   prebuilt: Option[SearchIndex.Tables] = None) {
@@ -54,14 +57,25 @@ class SearchIndex(docs: DataFrame, idCol: String, nameCol: String, addrCol: Stri
   // (ownership: the TextQueries/Searcher memoizer holds the index for the
   // session). Loaded from an at-rest store ([[SearchIndexStore]]): the
   // bucketed tables ARE the index — no cache, term lookups prune at scan.
-  val postingsName: DataFrame = prebuilt.map(_.postingsName)
-    .getOrElse(TextIndex.postings(docs, idCol, nameCol).cache())
-  val postingsAddr: DataFrame = prebuilt.map(_.postingsAddr)
-    .getOrElse(TextIndex.postings(docs, idCol, addrCol).cache())
-  val lenName: DataFrame = prebuilt.map(_.lenName)
-    .getOrElse(TextIndex.fieldLengths(docs, idCol, nameCol).cache())
-  val lenAddr: DataFrame = prebuilt.map(_.lenAddr)
-    .getOrElse(TextIndex.fieldLengths(docs, idCol, addrCol).cache())
+
+  /** Vocabulary across both fields (term, freq, df). Fresh build: cached
+   *  in-session. Loaded from a store: the bucketed `idx_vocab` table is
+   *  served as-is (term lookups prune at scan, no rebuild). */
+  lazy val vocabulary: DataFrame = prebuilt.map(_.vocab).getOrElse(
+    SearchIndex.vocabOf(TextIndex.postingsWithLen(docs, idCol, nameCol),
+      TextIndex.postingsWithLen(docs, idCol, addrCol)).cache())
+
+  /** Scoring postings per field: (term, doc_id, tf, len, df). */
+  val postingsName: DataFrame = prebuilt.map(_.postingsName).getOrElse(SearchIndex
+    .withDf(TextIndex.postingsWithLen(docs, idCol, nameCol), vocabulary).cache())
+  val postingsAddr: DataFrame = prebuilt.map(_.postingsAddr).getOrElse(SearchIndex
+    .withDf(TextIndex.postingsWithLen(docs, idCol, addrCol), vocabulary).cache())
+  // every doc's field length, zero-token docs included: read once for the
+  // per-field averages and doc count, and by BM25+'s merged doc length
+  private val lenName: DataFrame = prebuilt.map(_.lenName)
+    .getOrElse(TextIndex.fieldLengths(docs, idCol, nameCol))
+  private val lenAddr: DataFrame = prebuilt.map(_.lenAddr)
+    .getOrElse(TextIndex.fieldLengths(docs, idCol, addrCol))
 
   lazy val (avgLenName: Double, docsCount: Long) = TextIndex.fieldStats(lenName)
   lazy val avgLenAddr: Double = TextIndex.fieldStats(lenAddr)._1
@@ -71,14 +85,6 @@ class SearchIndex(docs: DataFrame, idCol: String, nameCol: String, addrCol: Stri
     .select(col("doc_id"), (col("nlen") + col("alen")).as("dl")).cache()
   lazy val avgDocLen: Double = docLen.agg(avg(col("dl"))).head().getDouble(0)
 
-  /** Vocabulary across both fields (term, freq, df). Fresh build: cached
-   *  in-session. Loaded from a store: the bucketed `idx_vocab` table is
-   *  served as-is (term lookups prune at scan, no rebuild). */
-  lazy val vocabulary: DataFrame = prebuilt.flatMap(_.vocab).getOrElse(
-    TextIndex.vocab(postingsName.unionByName(postingsAddr)
-      .groupBy("term", "doc_id").agg(sum("tf").as("tf")))
-      .cache())
-
   private def termFilter(terms: Seq[String])(df: DataFrame): DataFrame =
     df.filter(col("term").isin(terms: _*))
 
@@ -86,12 +92,6 @@ class SearchIndex(docs: DataFrame, idCol: String, nameCol: String, addrCol: Stri
    *  up by the row's term: NULL for a term outside `terms`. */
   private def multiplicity(terms: Seq[String]): Column =
     typedLit(terms.groupBy(identity).map { case (t, l) => (t, l.size) }).apply(col("term"))
-
-  /** df of `terms` from the stored [[vocabulary]] — the count of distinct
-   *  (term, doc_id) pairs over both fields (scoring.go:26-51) — built once
-   *  with the index, never recomputed from the postings per request. */
-  private def storedDf(terms: Seq[String]): DataFrame =
-    broadcast(vocabulary.transform(termFilter(terms)).select("term", "df"))
 
   import ScoringConstants._
 
@@ -102,25 +102,25 @@ class SearchIndex(docs: DataFrame, idCol: String, nameCol: String, addrCol: Stri
   /**
    * Per-doc maximum of [[bm25f]] over `queries`, in ONE pass over the
    * postings of their combined terms: each (term, doc, field) contribution
-   * is computed once and summed per query under that query's literal
-   * multiplicity map; the doc's score is the greatest per-query sum. A doc
-   * none of a query's terms hit has a NULL sum for that query (not 0), so
-   * a negative-idf query still wins its docs exactly as the per-query
-   * plans' union + max did.
+   * is computed once, off the posting row, and summed per query under that
+   * query's literal multiplicity map; the doc's score is the greatest
+   * per-query sum. A doc none of a query's terms hit has a NULL sum for
+   * that query (not 0), so a negative-idf query still wins its docs
+   * exactly as the per-query plans' union + max did.
    */
   def bm25fMax(queries: Seq[Seq[String]]): DataFrame = {
     if (queries.isEmpty) return bm25fMax(Seq(Nil))
     val terms = queries.flatten.distinct
+    // df over both fields (scoring.go:26-51), from the row
     val idf = log10(lit(docsCount.toDouble) - col("df") + 0.5) - log10(col("df") + 0.5)
 
-    // w/(K1+w) per field; idf joins once, after the fields' union
-    def fieldSat(postings: DataFrame, lens: DataFrame, weight: Double,
-                 b: Double, avgLen: Double): DataFrame = {
+    // w/(K1+w) * idf per (term, doc, field)
+    def fieldContrib(postings: DataFrame, weight: Double, b: Double,
+                     avgLen: Double): DataFrame = {
       val w = lit(weight) * col("tf") /
         (lit(1.0) + lit(b) * (col("len") / lit(avgLen) - lit(1.0)))
       postings.transform(termFilter(terms))
-        .join(lens, Seq("doc_id"))
-        .select(col("doc_id"), col("term"), (w / (lit(K1Bm25f) + w)).as("sat"))
+        .select(col("doc_id"), col("term"), ((w / (lit(K1Bm25f) + w)) * idf).as("contrib"))
     }
 
     val perQuery = queries.zipWithIndex.map { case (q, i) =>
@@ -128,22 +128,25 @@ class SearchIndex(docs: DataFrame, idCol: String, nameCol: String, addrCol: Stri
     }
     val sums = perQuery.indices.map(i => col(s"s$i"))
     val best = if (sums.size == 1) sums.head else greatest(sums: _*)
-    fieldSat(postingsName, lenName, NameWeight, NameB, avgLenName)
-      .unionByName(fieldSat(postingsAddr, lenAddr, AddressWeight, NameB, avgLenAddr))
-      .join(storedDf(terms), Seq("term"))
-      .withColumn("contrib", col("sat") * idf)
+    fieldContrib(postingsName, NameWeight, NameB, avgLenName)
+      .unionByName(fieldContrib(postingsAddr, AddressWeight, NameB, avgLenAddr))
       .groupBy("doc_id").agg(perQuery.head, perQuery.tail: _*)
       .select(col("doc_id"), best.as("score"))
   }
 
+  /** (term, doc_id, tf, df) of `terms` over merged name++address postings
+   *  (tf summed across the fields). */
+  private def mergedPostings(terms: Seq[String]): DataFrame = {
+    def field(p: DataFrame) =
+      p.transform(termFilter(terms.distinct)).select("term", "doc_id", "tf", "df")
+    field(postingsName).unionByName(field(postingsAddr))
+      .groupBy("term", "doc_id", "df").agg(sum("tf").as("tf"))
+  }
+
   /** BM25+ over merged name++address postings (scoring.go:143-181). */
   def bm25plus(terms: Seq[String]): DataFrame = {
-    val merged = postingsName.transform(termFilter(terms.distinct))
-      .unionByName(postingsAddr.transform(termFilter(terms.distinct)))
-      .groupBy("term", "doc_id").agg(sum("tf").as("tf"))
     val idf = log10(lit(docsCount.toDouble) + 1.0) - log10(col("df"))
-    merged
-      .join(storedDf(terms.distinct), Seq("term"))
+    mergedPostings(terms)
       .join(docLen, Seq("doc_id"))
       .withColumn("contrib", idf * (lit(Delta) +
         ((lit(K1 + 1.0) + col("tf")) /
@@ -154,12 +157,8 @@ class SearchIndex(docs: DataFrame, idCol: String, nameCol: String, addrCol: Stri
 
   /** TF-IDF "cosine" without norm division — faithful to scoring.go:183-228. */
   def tfidf(terms: Seq[String]): DataFrame = {
-    val merged = postingsName.transform(termFilter(terms.distinct))
-      .unionByName(postingsAddr.transform(termFilter(terms.distinct)))
-      .groupBy("term", "doc_id").agg(sum("tf").as("tf"))
     val idf = log10(lit(docsCount.toDouble)) - log10(col("df"))
-    merged
-      .join(storedDf(terms.distinct), Seq("term"))
+    mergedPostings(terms)
       .withColumn("tfidf_doc", (lit(1.0) + log10(col("tf"))) * idf)
       .withColumn("tfidf_query", (lit(1.0) + log10(multiplicity(terms))) * idf)
       .withColumn("contrib", col("tfidf_doc") * col("tfidf_query"))
@@ -215,11 +214,20 @@ class SearchIndex(docs: DataFrame, idCol: String, nameCol: String, addrCol: Stri
 }
 
 object SearchIndex {
-  /** Prebuilt index artifacts for the at-rest path; `vocab` rides along
-   *  when the store persisted it (older stores rebuild it on access). */
+  /** Prebuilt index artifacts for the at-rest path. */
   case class Tables(postingsName: DataFrame, postingsAddr: DataFrame,
-                    lenName: DataFrame, lenAddr: DataFrame,
-                    vocab: Option[DataFrame] = None)
+                    lenName: DataFrame, lenAddr: DataFrame, vocab: DataFrame)
+
+  /** Vocabulary (term, freq, df) of two fields' postings: df counts the
+   *  distinct (term, doc_id) pairs over both fields (scoring.go:26-51). */
+  def vocabOf(name: DataFrame, addr: DataFrame): DataFrame =
+    TextIndex.vocab(name.select("term", "doc_id", "tf")
+      .unionByName(addr.select("term", "doc_id", "tf"))
+      .groupBy("term", "doc_id").agg(sum("tf").as("tf")))
+
+  /** A field's scoring postings: each row joined with its term's df. */
+  def withDf(postings: DataFrame, vocab: DataFrame): DataFrame =
+    postings.join(vocab.select("term", "df"), Seq("term"))
 }
 
 /**
@@ -228,10 +236,11 @@ object SearchIndex {
  * and serves, /root/reference/pkg/index): postings for both fields are
  * persisted as EXTERNAL BUCKETED tables keyed by `term` (query-term
  * lookups prune buckets and push `term IN (...)` to the scan), field
- * lengths and the doc table bucketed by `doc_id` (score joins co-locate),
- * all under one directory with lineage manifests. [[load]] in any later
- * session re-registers from the manifests and serves WITHOUT rebuilding —
- * [[graft.pipeline.TableIO.bucketedStage]] resume semantics.
+ * lengths and the doc table bucketed by `doc_id`, all under one directory
+ * with lineage manifests. [[load]] in any later session re-registers from
+ * the manifests and serves WITHOUT rebuilding —
+ * [[graft.pipeline.TableIO.bucketedStage]] resume semantics. A store whose
+ * postings lack the `len` and `df` columns fails [[load]] by name.
  */
 object SearchIndexStore {
   import graft.pipeline.TableIO
@@ -240,7 +249,17 @@ object SearchIndexStore {
 
   /**
    * Build and persist every index artifact; idempotent (completed stages
-   * are skipped on re-run). Beyond the scoring tables, the MODEL artifacts
+   * are skipped on re-run). The scoring tables:
+   *  - `idx_postings_name`, `idx_postings_addr` (term, doc_id, tf, len,
+   *    df), bucketed by term: each row carries its field length and its
+   *    term's df over both fields, so a request scores off one term-pruned
+   *    scan with no join;
+   *  - `idx_len_name`, `idx_len_addr` (doc_id, len), bucketed by doc_id:
+   *    every doc's field length, zero-token docs included, for the
+   *    per-field averages, the doc count and BM25+'s doc length;
+   *  - `idx_docs`, bucketed by doc_id, for the top-k hydration.
+   * The vocabulary is staged before the postings, which join its df.
+   * Beyond the scoring tables, the MODEL artifacts
    * of the composed [[Searcher]] are persisted too — the engine twin of
    * the reference's ngram.index (ngram_lm.go:386-423), noisy_model.index
    * (spell_corrector.go:453-490) and term map (indexer.go:872-903):
@@ -258,23 +277,24 @@ object SearchIndexStore {
     TableIO.bucketedStage(spark, dir, "idx_docs", "doc_id", NBuckets) {
       docs.withColumnRenamed(idCol, "doc_id")
     }
-    val pn = TableIO.bucketedStage(spark, dir, "idx_postings_name", "term", NBuckets) {
-      TextIndex.postings(docs, idCol, nameCol)
+    // the vocabulary comes from the unstaged postings first, so each
+    // field's staged postings carry their terms' df
+    val pn = TextIndex.postingsWithLen(docs, idCol, nameCol)
+    val pa = TextIndex.postingsWithLen(docs, idCol, addrCol)
+    val vocab = TableIO.bucketedStage(spark, dir, "idx_vocab", "term", NBuckets) {
+      SearchIndex.vocabOf(pn, pa)
     }
-    val pa = TableIO.bucketedStage(spark, dir, "idx_postings_addr", "term", NBuckets) {
-      TextIndex.postings(docs, idCol, addrCol)
+    TableIO.bucketedStage(spark, dir, "idx_postings_name", "term", NBuckets) {
+      SearchIndex.withDf(pn, vocab)
+    }
+    TableIO.bucketedStage(spark, dir, "idx_postings_addr", "term", NBuckets) {
+      SearchIndex.withDf(pa, vocab)
     }
     TableIO.bucketedStage(spark, dir, "idx_len_name", "doc_id", NBuckets) {
       TextIndex.fieldLengths(docs, idCol, nameCol)
     }
     TableIO.bucketedStage(spark, dir, "idx_len_addr", "doc_id", NBuckets) {
       TextIndex.fieldLengths(docs, idCol, addrCol)
-    }
-    // model artifacts derive from the STAGED postings (bucketed by term:
-    // the term,doc_id grouping below re-uses the bucketing — no shuffle)
-    val vocab = TableIO.bucketedStage(spark, dir, "idx_vocab", "term", NBuckets) {
-      TextIndex.vocab(pn.unionByName(pa)
-        .groupBy("term", "doc_id").agg(sum("tf").as("tf")))
     }
     val dict = TableIO.bucketedStage(spark, dir, "idx_dict", "t", NBuckets) {
       Searcher.dictOf(vocab)
@@ -302,15 +322,17 @@ object SearchIndexStore {
    *  stages re-register from their manifests. */
   def load(spark: SparkSession, dir: String): SearchIndex = {
     val t = served(spark, dir) _
-    val docs = t("idx_docs", "doc_id")
-    // vocab stage is optional for backward compatibility with stores
-    // written before the model artifacts existed
-    val vocab = if (TableIO.isComplete(dir, "idx_vocab"))
-      Some(t("idx_vocab", "term")) else None
-    new SearchIndex(docs, "doc_id", "", "",
-      prebuilt = Some(SearchIndex.Tables(
-        t("idx_postings_name", "term"), t("idx_postings_addr", "term"),
-        t("idx_len_name", "doc_id"), t("idx_len_addr", "doc_id"), vocab)))
+    val Seq(pn, pa) = Seq("idx_postings_name", "idx_postings_addr").map { name =>
+      val p = t(name, "term")
+      require(Seq("len", "df").forall(p.columns.contains),
+        s"stage $name under $dir has columns (${p.columns.mkString(", ")}), not " +
+          "(term, doc_id, tf, len, df): it was written before postings carried the " +
+          "field length and df; delete the store and run SearchIndexStore.write again")
+      p
+    }
+    new SearchIndex(t("idx_docs", "doc_id"), "doc_id", "", "",
+      prebuilt = Some(SearchIndex.Tables(pn, pa,
+        t("idx_len_name", "doc_id"), t("idx_len_addr", "doc_id"), t("idx_vocab", "term"))))
   }
 
   /** Serve the COMPOSED [[Searcher]] from the persisted artifacts — the

@@ -49,7 +49,8 @@ import graft.spell.{SpellCorrector, SpellJoin}
  * Driver-resident data on the distributed path is bounded by the
  * per-request candidate set (the reference's own per-request scale), never
  * by the corpus. In both modes each request then runs ONE scoring plan
- * (BM25F with df from the stored vocabulary, top-k, hydration).
+ * (BM25F off the postings rows, which carry tf, field length and df;
+ * top-k; hydration).
  */
 class Searcher(docs: DataFrame, idCol: String, nameCol: String, addrCol: String,
                spellErrorLines: Iterable[String] = Nil,

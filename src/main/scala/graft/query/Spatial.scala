@@ -17,8 +17,9 @@ import graft.functions.TopK
  *    nearby places searcher.go:461, rtree.go:656-682) -> ONE capped plan,
  *    [[knnJoin]] with `maxKm`: a per-query cell box that provably holds
  *    every point within the cap, one equi-join, an exact bbox prefilter,
- *    the haversine cap and a bounded top-k. [[knn]], [[reverseGeocode]]
- *    and [[nearestJoin]] are thin wrappers over it;
+ *    a bounded top-k and the haversine cap. [[reverseGeocode]] and
+ *    [[nearestJoin]] are thin wrappers over it; [[knn]] folds the same
+ *    bounds for its one literal query into a filter over the points;
  *  - incremental nearest-neighbour without a cap (rtree.go:685-723) ->
  *    [[knnJoin]] without `maxKm`: ring-expansion rounds with a distance
  *    lower-bound stop test ([[Cells.minDistOutsideDiskKm]]);
@@ -40,8 +41,9 @@ object Spatial {
   /** Single-point kNN: (id, dist_km) of the k nearest points after the
    *  first `offset`, ordered by (dist, id), plus a constant `feature`
    *  column when `feature` filters the points. With `radiusKm` it is the
-   *  capped plan of [[knnJoin]] up to its per-query top-k: one query needs
-   *  no shuffle, so its pairs go straight to one ordered limit. Without it,
+   *  capped plan of [[knnJoin]] for one literal query: its bounds fold to
+   *  constants, so the exact bbox prefilter filters the points (no cover,
+   *  no join) and one ordered limit replaces the per-query top-k. Without it,
    *  the exact ring-expansion rounds, whose results equal the R-tree's
    *  incremental-NN output (rtree_test.go:281-290 parity is asserted in
    *  KnnSpec). */
@@ -51,11 +53,20 @@ object Spatial {
           feature: Option[String] = None,
           offset: Int = 0): DataFrame = {
     import points.sparkSession.implicits._
-    val query = Seq((0L, lat, lon)).toDF("qid", "qlat", "qlon")
     val candidates = feature.fold(points)(f => points.filter(col("feature") === f))
-    val nn = radiusKm.fold(knnJoin(candidates, query, k + offset, level))(
-        cappedPairs(candidates, query, level, _))
-      .orderBy(col("dist_km"), col("id")).limit(k + offset).offset(offset)
+    val pairs = radiusKm match {
+      // a literal query: the cap's bounds fold to constants, so the exact
+      // prefilter is a filter over the points, with no cover and no join
+      case Some(r) =>
+        candidates.filter(capPrefilter(lit(lat), lit(lon), capLonSpanDeg(lit(lat), r), r))
+          .select(col("id"), haversineKm(lit(lat), lit(lon), col("lat"), col("lon")).as("dist_km"))
+      case None =>
+        knnJoin(candidates, Seq((0L, lat, lon)).toDF("qid", "qlat", "qlon"), k + offset, level)
+    }
+    // the cap applies after the ordered limit (points within it sort
+    // first), so the haversine is evaluated once per candidate
+    val nn = pairs.orderBy(col("dist_km"), col("id")).limit(k + offset).offset(offset)
+      .filter(radiusKm.fold(lit(true))(col("dist_km") <= _))
       .select(col("id"), col("dist_km"))
     feature.fold(nn)(f => nn.withColumn("feature", lit(f)))
   }
@@ -94,7 +105,7 @@ object Spatial {
    *
    * With `maxKm` only points within `maxKm` count, and the answer is ONE
    * plan with no rounds and no driver step: [[cappedPairs]], then the
-   * per-query top-k.
+   * per-query top-k, then the cap.
    *
    * Without it, one shuffle-free broadcast join per round; per-query
    * convergence is checked against the ring lower bound and unconverged
@@ -118,7 +129,10 @@ object Spatial {
   def knnJoin(points: DataFrame, queries: DataFrame, k: Int,
               level: Int = Cells.DefaultLevel,
               maxKm: Option[Double] = None): DataFrame = {
+    // the cap applies after the top-k (points within it rank first), so
+    // the haversine is evaluated once per prefiltered candidate
     if (maxKm.isDefined) return nearest(cappedPairs(points, queries, level, maxKm.get), k, col("qid"))
+      .filter(col("dist_km") <= maxKm.get)
     val spark = points.sparkSession
     // Probe-level choice (guide §1.2 step 1: candidate volume is the
     // distributed-algorithm cost here): a round's work is one point-table
@@ -249,42 +263,59 @@ object Spatial {
 
   /**
    * The capped plan of [[knnJoin]] up to the top-k: cell cover -> equi-join
-   * -> exact bbox prefilter -> haversine <= maxKm, as (qid, id, dist_km).
+   * -> exact bbox prefilter, as (qid, id, dist_km) for every candidate that
+   * may lie within `maxKm` (the caller applies the cap itself).
    * The cap bounds each query's search region before the join runs (as in
    * Distributed Stream KNN Join, SIGMOD 2021), so one cover per query is
    * provably enough: no rounds, no checkpoint, no driver step.
    *
    * The level comes from the cap and the cell height alone ([[coarsen]]):
-   * ry = ceil(cap / cellHeight) rows. Within the cap |Δφ| <= cap/R, so both
-   * latitudes lie in the band |φ| <= |qlat| + cap/R where cos φ >= cos(band),
-   * and haversine gives sin(Δλ/2) <= sin(cap/2R) / cos(band) for the wrapped
-   * Δλ. That per-row span sets the box's rx columns ([[Cells.box]] wraps
-   * them) and the prefilter's longitude bound; once the band reaches a pole
-   * every longitude counts. Covers are built for the cap plus 1 m, above the
-   * haversine expression's float error (< 0.3 m).
+   * ry = ceil(cap / cellHeight) rows. The box's rx columns come from the
+   * per-row longitude span of [[capLonSpanDeg]] ([[Cells.box]] wraps them),
+   * which also bounds the prefilter ([[capPrefilter]]).
    */
   private def cappedPairs(points: DataFrame, queries: DataFrame,
                           level: Int, maxKm: Double): DataFrame = {
-    val coverKm = maxKm + 1e-3
     val (lvl, ry) = coarsen(level,
-      lv => math.max(1, math.ceil(coverKm / Cells.cellHeightKm(lv)).toInt))
-    val dLatDeg = coverKm / Cells.KmPerDegLat
-    val band = abs(col("qlat")) + dLatDeg
-    val lonSpanDeg = when(band >= 90.0, lit(360.0)).otherwise(degrees(asin(least(lit(1.0),
-      lit(math.sin(coverKm / (2.0 * GeoMath.EarthRadiusKm))) / cos(radians(band))))) * 2.0)
+      lv => math.max(1, math.ceil(capCoverKm(maxKm) / Cells.cellHeightKm(lv)).toInt))
     val cellWidthDeg = 360.0 / (1L << lvl)
-    val cover = queries.select(col("qid"), col("qlat"), col("qlon"), lonSpanDeg.as("qspan"))
+    val cover = queries.select(col("qid"), col("qlat"), col("qlon"),
+        capLonSpanDeg(col("qlat"), maxKm).as("qspan"))
       .withColumn("jcell", explode(cellDisk(cellEncode(col("qlat"), col("qlon"), lit(lvl)),
         ceil(col("qspan") / cellWidthDeg), lit(ry))))
-    val dLon = abs(col("qlon") - col("lon"))
     points.select(col("id"), col("lat"), col("lon"),
         cellEncode(col("lat"), col("lon"), lit(lvl)).as("jcell"))
       .join(cover, Seq("jcell"))
-      .filter(abs(col("qlat") - col("lat")) <= dLatDeg &&
-        least(dLon, lit(360.0) - dLon) <= col("qspan"))
-      .withColumn("dist_km", haversineKm(col("qlat"), col("qlon"), col("lat"), col("lon")))
-      .filter(col("dist_km") <= maxKm)
-      .select(col("qid"), col("id"), col("dist_km"))
+      .filter(capPrefilter(col("qlat"), col("qlon"), col("qspan"), maxKm))
+      .select(col("qid"), col("id"),
+        haversineKm(col("qlat"), col("qlon"), col("lat"), col("lon")).as("dist_km"))
+  }
+
+  /** The radius every cap bound is built for: the cap plus 1 m, above the
+   *  haversine expression's float error (< 0.3 m). */
+  private def capCoverKm(maxKm: Double): Double = maxKm + 1e-3
+
+  /**
+   * Longitude span (degrees) holding every point within `maxKm` of a query
+   * at `qlat`. Within the cap |Δφ| <= cap/R, so both latitudes lie in the
+   * band |φ| <= |qlat| + cap/R where cos φ >= cos(band), and haversine gives
+   * sin(Δλ/2) <= sin(cap/2R) / cos(band) for the wrapped Δλ; once the band
+   * reaches a pole every longitude counts. A literal `qlat` folds it to a
+   * constant.
+   */
+  private def capLonSpanDeg(qlat: Column, maxKm: Double): Column = {
+    val coverKm = capCoverKm(maxKm)
+    val band = abs(qlat) + coverKm / Cells.KmPerDegLat
+    when(band >= 90.0, lit(360.0)).otherwise(degrees(asin(least(lit(1.0),
+      lit(math.sin(coverKm / (2.0 * GeoMath.EarthRadiusKm))) / cos(radians(band))))) * 2.0)
+  }
+
+  /** The exact bbox prefilter of the cap for the point columns (lat, lon):
+   *  latitude within cap/R of `qlat`, wrapped Δλ within `qspan`. */
+  private def capPrefilter(qlat: Column, qlon: Column, qspan: Column, maxKm: Double): Column = {
+    val dLon = abs(qlon - col("lon"))
+    abs(qlat - col("lat")) <= capCoverKm(maxKm) / Cells.KmPerDegLat &&
+      least(dLon, lit(360.0) - dLon) <= qspan
   }
 
   /** Range (bbox) search — R-tree Search equivalent (rtree.go:505-531).

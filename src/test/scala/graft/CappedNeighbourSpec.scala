@@ -134,6 +134,17 @@ class CappedNeighbourSpec extends AnyFunSuite {
     assert(rev.length == 1 && revJobs <= 3, s"reverseGeocode ran $revJobs jobs")
     val (places, knnJobs) = TestSpark.jobsOf(
       Spatial.knn(objs, lat, lon, 5, radiusKm = Some(3.0), feature = Some(feature)).collect())
-    assert(places.nonEmpty && knnJobs <= 2, s"knn with a radius ran $knnJobs jobs")
+    assert(places.nonEmpty && knnJobs <= 1, s"knn with a radius ran $knnJobs jobs")
+  }
+
+  test("the capped plans evaluate the haversine once per candidate") {
+    val objs = Derived.objects(spark, TestSpark.Sf)
+    val query = Seq((1L, -6.2, 106.8)).toDF("qid", "qlat", "qlon")
+    // the haversine is the only SQRT in either plan
+    def sqrts(df: org.apache.spark.sql.DataFrame) =
+      "SQRT\\(".r.findAllMatchIn(df.queryExecution.executedPlan.toString).size
+    assert(sqrts(Spatial.reverseGeocode(objs, query)) == 1,
+      Spatial.reverseGeocode(objs, query).queryExecution.executedPlan.toString)
+    assert(sqrts(Spatial.knn(objs, -6.2, 106.8, 5, radiusKm = Some(3.0))) == 1)
   }
 }

@@ -122,6 +122,21 @@ class SearchIndexStoreSpec extends AnyFunSuite {
     assert(lmPlan.contains("In(gram_key"), s"LM probe not pushed down:\n$lmPlan")
   }
 
+  test("a store whose postings lack len and df fails load, naming the stage") {
+    import graft.index.TextIndex
+    import graft.pipeline.TableIO
+    val dir = java.nio.file.Files.createTempDirectory("graft-idx-old").toString
+    SearchIndexStore.write(spark, searcherDocs, "doc_id", "name", "address", dir)
+    // the name postings as stores wrote them before: (term, doc_id, tf)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$dir/idx_postings_name"))
+    TableIO.bucketedStage(spark, dir, "idx_postings_name", "term", SearchIndexStore.NBuckets) {
+      TextIndex.postings(searcherDocs, "doc_id", "name")
+    }
+    val e = intercept[IllegalArgumentException] { SearchIndexStore.load(spark, dir) }
+    assert(e.getMessage.contains("stage idx_postings_name") && e.getMessage.contains("len, df"),
+      e.getMessage)
+  }
+
   test("loading a missing store fails loudly") {
     val empty = java.nio.file.Files.createTempDirectory("graft-idx-missing").toString
     val e = intercept[RuntimeException] { SearchIndexStore.load(spark, empty) }

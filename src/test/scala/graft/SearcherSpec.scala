@@ -120,24 +120,34 @@ class SearcherSpec extends AnyFunSuite {
         "a corpus-scale aggregation is running per query")
   }
 
-  test("collected mode: a WARM searcher generates candidates with no Spark job — " +
-    "0 jobs per misspelled correct(), one scoring plan per search/autocomplete") {
-    val warm = new Searcher(docs, "doc_id", "name", "address", spellErrorLines = spellLines)
+  /** A warm collected-mode searcher: 0 jobs per misspelled correct(), and
+   *  search and autocomplete each one scan of the scoring postings, the
+   *  top-k and the hydration, at most 3 jobs. */
+  private def assertWarmJobs(warm: Searcher, form: String): Unit = {
     assert(!warm.distributed)
     // warm: first use caches the index and collects the driver vocabulary + LM
     warm.freeFormQuery("Duniu Fsntaso", 3).collect()
     warm.autocomplete("Monumen Nasi", 3).collect()
     val (corrected, correctJobs) = TestSpark.jobsOf(warm.correct("Kebun Bibatqng Raginan"))
     assert(corrected == Seq("kebun", "binatang", "ragunan"))
-    assert(correctJobs == 0, s"misspelled correct() ran $correctJobs jobs")
+    assert(correctJobs == 0, s"$form: misspelled correct() ran $correctJobs jobs")
     val (top, searchJobs) = TestSpark.jobsOf(
       warm.freeFormQuery("Kebun Bibatqng Raginan", 3).select("name").collect())
     assert(top.head.getString(0) == "Kebun Binatang Ragunan")
-    assert(searchJobs <= 6, s"search ran $searchJobs jobs")
+    assert(searchJobs <= 3, s"$form: search ran $searchJobs jobs")
     val (ac, acJobs) = TestSpark.jobsOf(
       warm.autocomplete("Taman Min", 3).select("name").collect())
     assert(ac.exists(_.getString(0).contains("Taman Mini")))
-    assert(acJobs <= 6, s"autocomplete ran $acJobs jobs")
+    assert(acJobs <= 3, s"$form: autocomplete ran $acJobs jobs")
+  }
+
+  test("collected mode: a WARM searcher generates candidates with no Spark job — " +
+    "0 jobs per misspelled correct(), one scoring plan per search/autocomplete") {
+    assertWarmJobs(new Searcher(docs, "doc_id", "name", "address", spellErrorLines = spellLines),
+      "fresh")
+    val dir = java.nio.file.Files.createTempDirectory("searcher-jobs").toString
+    SearchIndexStore.write(spark, docs, "doc_id", "name", "address", dir, spellLines)
+    assertWarmJobs(Searcher.fromStore(spark, dir), "store-served")
 
     val fences = new Geofence.FenceStore(spark,
       java.nio.file.Files.createTempDirectory("fence-jobs").toString)

@@ -18,6 +18,14 @@ class TextStatsSpec extends AnyFunSuite {
   // corpus: N=6 tokens; uni a=3 b=2 c=1; bigrams (a,b)=2 (a,c)=1
   lazy val corpus = Seq((1L, "a b"), (2L, "a b"), (3L, "a c")).toDF("doc_id", "text")
 
+  test("langId: NULL text is 'es' as in the oracle's CASE, empty text 'und'") {
+    val docs = Seq((1L, null: String), (2L, ""), (3L, "the cat and the dog"))
+      .toDF("doc_id", "text")
+    val out = TextStats.langId(docs, "doc_id", "text")
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(out == Map(1L -> "es", 2L -> "und", 3L -> "en"))
+  }
+
   test("self-scoring: duplicate docs score identically, all log-probs negative") {
     val out = TextStats.lmScore(corpus, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
