@@ -140,7 +140,8 @@ class ScoringRowsSpec extends AnyFunSuite {
     }
 
   test("fresh, store-served and brute-force scores agree on random corpora") {
-    val prop = Prop.forAll(args) { case (docs, qs, pre) =>
+    // no shrinking: each shrink step would write one more store
+    val prop = Prop.forAllNoShrink(args) { case (docs, qs, pre) =>
       val df = docs.toDF("doc_id", "name", "address")
       val dir = java.nio.file.Files.createTempDirectory("graft-scoring").toString
       SearchIndexStore.write(spark, df, "doc_id", "name", "address", dir)
@@ -154,14 +155,18 @@ class ScoringRowsSpec extends AnyFunSuite {
         case Seq() => Seq(Tokenizer.tokenize(acQuery))
         case cs => cs.map(c => Tokenizer.tokenize(acQuery).init :+ c)
       }
-      forms.forall { idx =>
-        close(scores(idx.bm25f(q)), brute.bm25f(q)) &&
-          close(scores(idx.bm25fMax(qs)), brute.bm25fMax(qs)) &&
-          close(scores(idx.bm25plus(q)), brute.bm25plus(q)) &&
-          close(scores(idx.tfidf(q)), brute.tfidf(q)) &&
-          closeRanked(ranked(idx.search(q.mkString(" "), 3)), brute.topK(brute.bm25f(q), 3)) &&
-          closeRanked(ranked(idx.autocomplete(acQuery, 3)), brute.topK(brute.bm25fMax(acQueries), 3))
-      }
+      Prop.all(Seq("fresh" -> forms(0), "store-served" -> forms(1)).flatMap { case (form, idx) =>
+        Seq(
+          "bm25f" -> close(scores(idx.bm25f(q)), brute.bm25f(q)),
+          "bm25fMax" -> close(scores(idx.bm25fMax(qs)), brute.bm25fMax(qs)),
+          "bm25plus" -> close(scores(idx.bm25plus(q)), brute.bm25plus(q)),
+          "tfidf" -> close(scores(idx.tfidf(q)), brute.tfidf(q)),
+          "search" -> closeRanked(ranked(idx.search(q.mkString(" "), 3)),
+            brute.topK(brute.bm25f(q), 3)),
+          "autocomplete" -> closeRanked(ranked(idx.autocomplete(acQuery, 3)),
+            brute.topK(brute.bm25fMax(acQueries), 3))
+        ).map { case (name, ok) => Prop(ok) :| s"$form $name" }
+      }: _*)
     }
     // two corpora at a time: a store write is mostly driver-side latency
     val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(4).withWorkers(2), prop)
