@@ -11,9 +11,10 @@ import scala.collection.mutable.ArrayBuffer
  * space-filling-curve cell ID column:
  *  - R-tree insert            -> `encode(lat, lon, level)` column
  *  - R-tree range search      -> `coverBBox` / `coverPolygon` cell set + equi-join
- *  - R-tree incremental kNN   -> `disk`/`ring` expansion + distance lower bound
- *    (rtree.go:685-723's min-heap early termination becomes the ring-level
- *    stop test `minDistOutsideDiskKm`)
+ *  - R-tree incremental kNN   -> a per-query cap from point counts per cell
+ *    (rtree.go:685-723's min-heap early termination becomes `blockLevel`:
+ *    the finest 3x3 block holding k points, and `blockReachKm`, the
+ *    distance that block spans), then one `box` cover of that cap
  *
  * Layout of the 64-bit cell ID:
  *   bits [5..63]  Morton interleave of (y, x) at `level` (level <= 29,
@@ -112,11 +113,6 @@ object Cells {
     val latMin = cy / n * 180.0 - 90.0
     val lonMin = cx / n * 360.0 - 180.0
     (latMin, lonMin, latMin + 180.0 / n, lonMin + 360.0 / n)
-  }
-
-  def center(cell: Long): (Double, Double) = {
-    val (a, b, c, d) = bounds(cell)
-    ((a + c) / 2.0, (b + d) / 2.0)
   }
 
   /**
@@ -242,6 +238,46 @@ object Cells {
     360.0 / (1L << level) * KmPerDegLat * math.max(0.0, math.cos(GeoMath.degToRad(lat)))
 
   /**
+   * The finest level in [1, finest] whose 3x3 block of cells around
+   * (lat, lon) holds at least `k` points, else 0 (the whole grid). `cells`
+   * are the points' cells at `finest` in ascending order; `cum(i)` is the
+   * count of points in `cells(0 until i)`. A cell's descendants at `finest`
+   * are one contiguous id range ([[childRange]]), so its count is a
+   * difference of two running counts.
+   */
+  def blockLevel(lat: Double, lon: Double, k: Long, finest: Int,
+                 cells: Array[Long], cum: Array[Long]): Int = {
+    def upTo(c: Long): Long = { // points in cells <= c
+      val i = java.util.Arrays.binarySearch(cells, c)
+      cum(if (i >= 0) i + 1 else -i - 1)
+    }
+    def count(lvl: Int): Long = box(encode(lat, lon, lvl), 1, 1).map { c =>
+      val (first, last) = childRange(c, finest)
+      upTo(last) - upTo(first - 1)
+    }.sum
+    (finest to 1 by -1).find(count(_) >= k).getOrElse(0)
+  }
+
+  /**
+   * An upper bound on the distance from (lat, lon) to every point of the
+   * 3x3 block of cells at `level` around it (the block of `box(cell, 1, 1)`).
+   * While the block lies within 90 degrees of longitude of the point, the
+   * farthest of its four wrapped corners is exact: at a fixed latitude the
+   * distance grows with the longitude offset, and at a fixed offset with
+   * c = 1 - cos Δλ <= 1 the haversine term is 1/2 - (A cos φ + B sin φ)/2
+   * with A = cos(lat) (1 - c) >= 0, which has no interior maximum over a
+   * latitude range. Otherwise half the circumference.
+   */
+  def blockReachKm(lat: Double, lon: Double, level: Int): Double = {
+    val (cellLat, cellLon, _, _) = bounds(encode(lat, lon, level))
+    val w = 360.0 / (1L << level)
+    val (lonLo, lonHi) = (cellLon - w, cellLon + 2 * w)
+    val lats = Seq(math.max(-90.0, cellLat - w / 2), math.min(90.0, cellLat + w))
+    if (math.max(lon - lonLo, lonHi - lon) > 90.0) math.Pi * GeoMath.EarthRadiusKm
+    else lats.flatMap(la => Seq(lonLo, lonHi).map(GeoMath.haversineKm(lat, lon, la, _))).max
+  }
+
+  /**
    * Band-conservative variant of [[minDistOutsideDiskKm]]: a lower bound
    * valid for EVERY point whose |lat| <= maxAbsLat, dropping the per-point
    * in-cell offsets (>= 0) and using the band's worst-case cos(lat). Lets a
@@ -267,8 +303,8 @@ object Cells {
    * disk of radius `r` around its cell. Any point outside the disk is at
    * least `r` cells away along one axis, minus the query's offset within
    * its own cell — conservatively (r - 1) * min(cellHeight, cellWidth)
-   * plus the distance to the near edge (>= 0). Used as the kNN ring-loop
-   * stop test: once kth-distance <= this bound, the top-k is exact
+   * plus the distance to the near edge (>= 0). Used as the geofence ring
+   * loop's stop test: once kth-distance <= this bound, the top-k is exact
    * (equivalent to the reference R-tree's minDist pruning, rtree.go:543-568).
    */
   def minDistOutsideDiskKm(lat: Double, lon: Double, level: Int, r: Int): Double = {

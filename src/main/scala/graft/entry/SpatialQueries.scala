@@ -23,7 +23,7 @@ object SpatialQueries {
   private def objects(s: SparkSession, dir: String) = Derived.objects(s, dir)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // T2: exact kNN via ring expansion (rtree.go:685-723 equivalent)
+    // T2: exact kNN, one histogram-capped plan (rtree.go:685-723 equivalent)
     "t2_knn" -> ((s, dir) =>
       Spatial.knn(objects(s, dir), QLat, QLon, k = 10)
         .select(col("id"), q4(col("dist_km")).as("dist4"))),

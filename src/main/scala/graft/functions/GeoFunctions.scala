@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.graftbridge.ColumnBridge.{column => toCol, expression => toExpr}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, TernaryExpression, BinaryExpression, QuaternaryExpression, SeptenaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, TernaryExpression, QuaternaryExpression, SeptenaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, CodegenFallback}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
@@ -32,25 +32,6 @@ case class CellEncodeExpr(first: Expression, second: Expression, third: Expressi
   override protected def withNewChildrenInternal(
       newFirst: Expression, newSecond: Expression, newThird: Expression): Expression =
     copy(first = newFirst, second = newSecond, third = newThird)
-}
-
-/** min_dist_outside_disk(lat, lon): the exact per-row lower bound on the
- *  distance to any point outside the (level, r) cell disk around the row's
- *  own cell — the kNN ring-loop convergence test
- *  ([[graft.core.Cells.minDistOutsideDiskKm]]), as a codegen'd expression
- *  so batch kNN convergence is decided IN the plan (one row per pending
- *  query) instead of by driver-side bookkeeping. */
-case class MinDistOutsideDiskExpr(left: Expression, right: Expression,
-                                  level: Int, r: Int) extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "min_dist_outside_disk"
-  override def nullSafeEval(lat: Any, lon: Any): Any =
-    Cells.minDistOutsideDiskKm(lat.asInstanceOf[Double], lon.asInstanceOf[Double], level, r)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (lat, lon) =>
-      s"graft.core.Cells.minDistOutsideDiskKm($lat, $lon, $level, $r)")
-  override protected def withNewChildrenInternal(l: Expression, rr: Expression): Expression =
-    copy(left = l, right = rr)
 }
 
 /** cell_x / cell_y: de-interleave a Morton cell ID back to its grid
@@ -112,6 +93,7 @@ object GeoEval {
 
   def pointToPolylineKm(pLat: Double, pLon: Double, lats: ArrayData, lons: ArrayData): Double =
     GeoMath.pointToPolylineKm(pLat, pLon, lats.toDoubleArray(), lons.toDoubleArray())
+
 }
 
 /**
@@ -268,9 +250,6 @@ object GeoFunctions {
     toCol(CellDiskExpr(toExpr(cell.cast(LongType)), toExpr(rx.cast(IntegerType)),
       toExpr(ry.cast(IntegerType))))
   def cellDisk(cell: Column, r: Column): Column = cellDisk(cell, r, r)
-
-  def minDistOutsideDisk(lat: Column, lon: Column, level: Int, r: Int): Column =
-    toCol(MinDistOutsideDiskExpr(toExpr(lat.cast(DoubleType)), toExpr(lon.cast(DoubleType)), level, r))
 
   /** Morton x grid coordinate of a cell ID (codegen'd; replaces the UDFs
    *  formerly duplicated across Raster/SpatialQueries/SkewQueries). */

@@ -388,9 +388,11 @@ object Incremental {
     val prior = TableIO.stages(stateDir, PackPrefix)
     prior.find(_.split("_", 3).last == batchName) match {
       case Some(existing) =>
-        // partition-directory type inference narrows shard to int — restore
-        // the packer's long (offsets reach ~1e14/budget at 100 TB)
-        return spark.read.parquet(s"$stateDir/$existing")
+        // read with the manifest's data-column DDL (no schema-inference
+        // job); partition-directory type inference narrows shard to int —
+        // restore the packer's long (offsets reach ~1e14/budget at 100 TB)
+        return spark.read.schema(TableIO.manifest(stateDir, existing).schema)
+          .parquet(s"$stateDir/$existing")
           .select(col(idCol), col("toks"), col("off"), col("shard").cast("long").as("shard"))
       case None => ()
     }

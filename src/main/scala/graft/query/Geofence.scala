@@ -261,9 +261,11 @@ object Geofence {
   /**
    * Large-fence-set plan: the `nearestFences` nearest fences per point via a
    * cell-keyed BROADCAST ring join — the engine twin of the reference's
-   * fence R-tree kNN (fence_index.go:49-72) and of [[Spatial.knnJoin]] with
-   * the sides flipped (the BIG side here is the track, which is never
-   * broadcast and never collected; the fence table is broadcast-scale).
+   * fence R-tree kNN (fence_index.go:49-72). Unlike [[Spatial.knnJoin]],
+   * whose one plan broadcasts the query side's covers, the BIG side here is
+   * the track, which is never broadcast and never collected; the fence
+   * table is broadcast-scale, so the fences take the covers and the search
+   * runs in rounds.
    *
    * Per round: fences explode into their <=25-cell disk at a coarsened
    * level ([[Spatial.effectiveDisk]] — broadcast side bounded at 25 x
@@ -273,9 +275,8 @@ object Geofence {
    * when its kth candidate distance is within the band-conservative ring
    * bound ([[graft.core.Cells.minDistOutsideDiskBandKm]], one constant per
    * round — no per-row bound UDF); unconverged points retry with a doubled
-   * radius, pending tracked by ANTI-JOIN (no driver-side point ids, unlike
-   * knnJoin's contract-bounded query batch). Per-point candidate buffers
-   * are bounded by the fences in one disk.
+   * radius, pending tracked by ANTI-JOIN (no driver-side point ids).
+   * Per-point candidate buffers are bounded by the fences in one disk.
    */
   def fenceStatusJoin(track: DataFrame, fenceDf: DataFrame, nearestFences: Int = 3,
                       level: Int = graft.core.Cells.DefaultLevel,
@@ -336,7 +337,7 @@ object Geofence {
     }
     // unreachable with the default level/maxRounds (rings coarsen to a
     // full-grid cover first), but silently omitting still-pending points
-    // would be a wrong answer — fail loudly, like Components and knnJoin
+    // would be a wrong answer — fail loudly, like Components
     if (pendingCount > 0)
       throw new IllegalStateException(
         s"fenceStatusJoin did not converge: $pendingCount track points " +

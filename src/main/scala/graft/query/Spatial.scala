@@ -1,6 +1,6 @@
 package graft.query
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.core.{Cells, GeoMath}
@@ -13,16 +13,17 @@ import graft.functions.TopK
  *
  * Re-expresses the reference's R-tree operators
  * (/root/reference/pkg/datastructure/rtree.go):
- *  - nearest search with a radius cap (reverse geocoding searcher.go:402,
- *    nearby places searcher.go:461, rtree.go:656-682) -> ONE capped plan,
- *    [[knnJoin]] with `maxKm`: a per-query cell box that provably holds
- *    every point within the cap, one equi-join, an exact bbox prefilter,
- *    a bounded top-k and the haversine cap. [[reverseGeocode]] and
- *    [[nearestJoin]] are thin wrappers over it; [[knn]] folds the same
- *    bounds for its one literal query into a filter over the points;
- *  - incremental nearest-neighbour without a cap (rtree.go:685-723) ->
- *    [[knnJoin]] without `maxKm`: ring-expansion rounds with a distance
- *    lower-bound stop test ([[Cells.minDistOutsideDiskKm]]);
+ *  - nearest search, with a radius cap (reverse geocoding searcher.go:402,
+ *    nearby places searcher.go:461, rtree.go:656-682) or without one
+ *    (incremental nearest-neighbour, rtree.go:685-723) -> ONE lazy plan,
+ *    [[knnJoin]]: a per-query cell box that provably holds every point
+ *    within the query's cap, one equi-join, an exact bbox prefilter and a
+ *    bounded top-k. With `maxKm` the cap is given (and applied after the
+ *    top-k); without it each query row gets its own cap from a cell-count
+ *    histogram of the points, a distance within which >= k points lie.
+ *    [[reverseGeocode]] and [[nearestJoin]] are thin wrappers over the
+ *    capped plan; [[knn]] folds the capped bounds for its one literal
+ *    query into a filter over the points;
  *  - range/bbox search (rtree.go:505-531)              -> cell-cover equi-join
  *  - nearest-street join (indexer.go:986-1026)         -> cell-prefilter +
  *    min_by refine join
@@ -44,9 +45,9 @@ object Spatial {
    *  capped plan of [[knnJoin]] for one literal query: its bounds fold to
    *  constants, so the exact bbox prefilter filters the points (no cover,
    *  no join) and one ordered limit replaces the per-query top-k. Without it,
-   *  the exact ring-expansion rounds, whose results equal the R-tree's
-   *  incremental-NN output (rtree_test.go:281-290 parity is asserted in
-   *  KnnSpec). */
+   *  the histogram-capped candidates of [[knnJoin]] for the one query, under
+   *  the same ordered limit; the results equal the R-tree's incremental-NN
+   *  output (rtree_test.go:281-290 parity is asserted in KnnSpec). */
   def knn(points: DataFrame, lat: Double, lon: Double, k: Int,
           level: Int = Cells.DefaultLevel,
           radiusKm: Option[Double] = None,
@@ -58,10 +59,10 @@ object Spatial {
       // a literal query: the cap's bounds fold to constants, so the exact
       // prefilter is a filter over the points, with no cover and no join
       case Some(r) =>
-        candidates.filter(capPrefilter(lit(lat), lit(lon), capLonSpanDeg(lit(lat), r), r))
+        candidates.filter(capPrefilter(lit(lat), lit(lon), capLonSpanDeg(lit(lat), lit(r)), lit(r)))
           .select(col("id"), haversineKm(lit(lat), lit(lon), col("lat"), col("lon")).as("dist_km"))
       case None =>
-        knnJoin(candidates, Seq((0L, lat, lon)).toDF("qid", "qlat", "qlon"), k + offset, level)
+        uncappedPairs(candidates, Seq((0L, lat, lon)).toDF("qid", "qlat", "qlon"), k + offset, level)
     }
     // the cap applies after the ordered limit (points within it sort
     // first), so the haversine is evaluated once per candidate
@@ -73,8 +74,8 @@ object Spatial {
 
   /** The shared trade-level-for-radius rule: coarsen from `level` until the
    *  per-level radius is <= 2 (disk <= 25 cells) or the grid bottoms out.
-   *  Every search-disk construction (kNN rings, capped covers, way covers)
-   *  goes through this one invariant. */
+   *  The literal-cap covers, way covers and the geofence rings go through
+   *  this one invariant. */
   private[query] def coarsen(level: Int, radAt: Int => Int): (Int, Int) = {
     var lvl = level
     while (radAt(lvl) > 2 && lvl > 1) lvl -= 1
@@ -92,158 +93,109 @@ object Spatial {
     // halving a Chebyshev radius per level = ceil-dividing by 2^(level-lvl)
     coarsen(level, lv => { val k = level - lv; math.max(1, (r + (1 << k) - 1) >> k) })
 
-  /** Conf key: how many levels FINER than the table's cell level the
-   *  uncapped kNN join starts probing at (default [[ProbeDeltaDefault]]; 0
-   *  restores the stored-level start). See the probe-level note in
-   *  [[knnJoin]]. */
-  val ProbeDeltaKey = "spark.graft.knn.probeDelta"
-  val ProbeDeltaDefault = 1
-
   /**
    * Batch kNN join: for EVERY query row (qid, qlat, qlon) its k nearest
    * points as (qid, id, dist_km, rn), rn = 1..k in (dist, id) order.
    *
-   * With `maxKm` only points within `maxKm` count, and the answer is ONE
-   * plan with no rounds and no driver step: [[cappedPairs]], then the
-   * per-query top-k, then the cap.
-   *
-   * Without it, one shuffle-free broadcast join per round; per-query
-   * convergence is checked against the ring lower bound and unconverged
-   * queries retry with a wider disk. Scale shape (no driver-side query
-   * data AT ALL — every round is joins):
-   *  - the search disk is held to <= 25 cells by coarsening the cell LEVEL
-   *    instead of growing the radius ([[effectiveDisk]]) — the broadcast
-   *    build side is bounded by 25 x |pending| rows forever, round count by
-   *    log2(grid), regardless of how far the nearest neighbour is;
-   *  - per-round candidates are compacted map-side by the bounded top-k
-   *    aggregate (graft.functions.TopK ships <= k rows per query per task);
-   *  - convergence (kth distance vs the exact per-row ring bound,
-   *    [[graft.functions.MinDistOutsideDiskExpr]]) is decided IN the plan:
-   *    converged qids are one semi-joined checkpoint, pending shrinks by
-   *    ANTI-join — the query batch never passes through the driver, so the
-   *    operator has no literal-list or collect ceiling (the reference holds
-   *    its query batch in server RAM, searcher.go:97-204; this form removes
-   *    even that bound). Queries with zero candidates this round never
-   *    reach the converged set and stay pending by the anti-join.
+   * One lazy plan with no rounds, no checkpoint, no count and no query
+   * data on the driver: [[cappedPairs]], then the per-query top-k
+   * ([[nearest]]). With `maxKm` every query has that cap, at one literal
+   * cover level, and the cap applies after the top-k (points within it
+   * rank first, so the haversine runs once per candidate). Without it each
+   * query row gets its own cap and cover level from a cell-count histogram
+   * of the points ([[histogramCaps]]): a distance within which >= k points
+   * provably lie, so the k nearest are all inside the cover and no filter
+   * follows the top-k. A table with fewer than k points gives every query
+   * the full-grid cover.
    */
   def knnJoin(points: DataFrame, queries: DataFrame, k: Int,
               level: Int = Cells.DefaultLevel,
-              maxKm: Option[Double] = None): DataFrame = {
-    // the cap applies after the top-k (points within it rank first), so
-    // the haversine is evaluated once per prefiltered candidate
-    if (maxKm.isDefined) return nearest(cappedPairs(points, queries, level, maxKm.get), k, col("qid"))
-      .filter(col("dist_km") <= maxKm.get)
-    val spark = points.sparkSession
-    // Probe-level choice (guide §1.2 step 1: candidate volume is the
-    // distributed-algorithm cost here): a round's work is one point-table
-    // pass (cell encode + broadcast probe) PLUS one haversine + top-k
-    // update per candidate, and candidates per query = rows-per-cell x
-    // disk size. On a dense region the stored level is far too coarse —
-    // measured on the 768M-row bench input: ~50k rows/cell at level 13,
-    // so 1,024 queries x 9-cell disks = 456M candidate haversines, 2x the
-    // whole scan cost — while the ring bound only needs the disk to be
-    // wider than the kth-NN distance. Starting ONE level finer quarters
-    // rows-per-cell while halving the round-0 convergence bound, and the
-    // existing coarsening rule walks the expansion back through the coarser
-    // levels anyway, so data too sparse for the finer disk pays extra
-    // ROUNDS (each a scan+probe pass) rather than wrong results — the
-    // bound is computed for the (lvl, rad) actually probed, so the top-k
-    // is exact at any probe level. Default 1 is the measured sweet spot on
-    // the bench input (knn phase 11.8 -> 6.6 s at 4N: one round either
-    // way, 4x fewer candidates); deeper deltas shrank the bound below the
-    // data's kth-NN distance and bought extra full scans (delta 3: three
-    // rounds, 14 s). Parameterised via [[ProbeDeltaKey]]: raise it for
-    // tables orders of magnitude denser per base cell, set 0 to restore
-    // the stored-level start for sparse corpora.
-    val probeDelta = spark.conf.getOption(ProbeDeltaKey).map(_.toInt)
-      .getOrElse(ProbeDeltaDefault)
-    val probeLevel = math.min(level + math.max(0, probeDelta), Cells.MaxLevel)
-    // the fine start needs (probeLevel - level) more doublings to reach the
-    // full-grid cover; keep the loud non-convergence contract at the same
-    // effective budget past that point
-    val roundBudget = 16 + (probeLevel - level)
-    // materialize the query side once — it may derive from a full scan of
-    // the point table, and each round references it
-    var pending = queries.select(col("qid"), col("qlat"), col("qlon"))
-      .localCheckpoint(eager = true)
-    // no up-front count: it only guarded loop entry, costing one driver-
-    // synced job per call at every parallelism level. Round 0 runs
-    // optimistically; an empty query set yields an empty broadcast side,
-    // which AQE collapses to an empty join without scanning the points, and
-    // the round's own pending count then exits the loop.
-    var pendingCount = Long.MaxValue
-    var acc: Option[DataFrame] = None
-    var r = 1
-    var round = 0
-    while (round < roundBudget && pendingCount > 0) {
-      val (lvl, rad) = effectiveDisk(probeLevel, r)
-      // disk(lvl, 2) at lvl <= 1 is the whole grid: every point is a
-      // candidate, the round is exact by construction
-      val fullCover = lvl <= 1 && rad >= 2
-      val qCells = pending
-        .withColumn("qcell", cellEncode(col("qlat"), col("qlon"), lit(lvl)))
-        .withColumn("jcell", explode(cellDisk(col("qcell"), lit(rad))))
-        .drop("qcell")
-      val pcell = if (lvl == level) col("cell") else cellEncode(col("lat"), col("lon"), lit(lvl))
-      // the query side is small relative to the point table: broadcast it
-      val joined = points.withColumn("jcell", pcell).join(broadcast(qCells), Seq("jcell"))
-        .withColumn("dist_km", haversineKm(col("qlat"), col("qlon"), col("lat"), col("lon")))
-      // bounded top-k aggregate (map-side combine): each map task ships at
-      // most k rows per query instead of every candidate in the cell disk —
-      // see graft.functions.TopK. Materialized ONCE per round (<= k rows per
-      // pending query); everything downstream reads the checkpoint.
-      val topk = nearest(joined, k, col("qid"), col("qlat"), col("qlon"))
-        .localCheckpoint(eager = true)
-      // convergence: kth distance within the provable bound for this
-      // (lvl, rad) — per-row, in-plan, codegen'd
-      // okQ is NOT checkpointed: it is a small aggregate over the topk
-      // checkpoint (<= pending-count rows) referenced twice — embedding it
-      // in both consumers is cheaper than a dedicated materialization job,
-      // which at low parallelism was a measurable slice of the per-round
-      // fixed cost that depresses the N-leg/4N-leg scaling ratio
-      val okQ =
-        if (fullCover) topk.select(col("qid")).distinct()
-        else topk.groupBy(col("qid"))
-          .agg(max(col("dist_km")).as("kth"), count(lit(1)).as("cnt"),
-            first(col("qlat")).as("qlat"), first(col("qlon")).as("qlon"))
-          .filter(col("cnt") >= k && col("kth") <=
-            graft.functions.GeoFunctions.minDistOutsideDisk(
-              col("qlat"), col("qlon"), lvl, rad))
-          .select(col("qid"))
-      val done = topk.join(okQ, Seq("qid"), "left_semi")
-        .select(col("qid"), col("id"), col("dist_km"), col("rn"))
-      // topk is already checkpointed, so the accumulated union stays flat
-      acc = Some(acc.map(_.unionByName(done)).getOrElse(done))
-      if (fullCover) {
-        pendingCount = 0 // queries with zero rows have no data at all
-      } else {
-        // count first over the un-materialized anti-join (query-set-sized,
-        // reads the topk checkpoint), and only pay a checkpoint job when
-        // another round will actually consume `pending` — the common
-        // converged-in-this-round case skips it entirely
-        val nextPending = pending.join(okQ, Seq("qid"), "left_anti")
-        pendingCount = nextPending.count()
-        if (pendingCount > 0)
-          pending = nextPending.localCheckpoint(eager = true)
+              maxKm: Option[Double] = None): DataFrame = maxKm match {
+    case Some(km) => nearest(cappedAt(points, queries, level, km), k, col("qid"))
+      .filter(col("dist_km") <= km)
+    case None => nearest(uncappedPairs(points, queries, k, level), k, col("qid"))
+  }
+
+  /** [[cappedPairs]] with one cap for every query, at one literal level:
+   *  [[coarsen]]s `level` until the cover is at most 2 cells tall. */
+  private def cappedAt(points: DataFrame, queries: DataFrame, level: Int, maxKm: Double): DataFrame = {
+    val (lvl, _) = coarsen(level, lv =>
+      math.max(1, math.ceil((maxKm + CapMarginKm) / Cells.cellHeightKm(lv)).toInt))
+    cappedPairs(points.select(col("id"), col("lat"), col("lon"),
+        cellEncode(col("lat"), col("lon"), lvl).as("jcell")),
+      capCover(queries, lit(lvl), lit(maxKm)), lit(maxKm))
+  }
+
+  /**
+   * Candidate pairs (qid, id, dist_km) that hold each query's k nearest
+   * points, with no cap given: [[histogramCaps]] gives each query row its
+   * cap and histogram level, the cover is at that level but never finer
+   * than `level`, the points are encoded once per level the queries use
+   * (cell ids carry their level, so one equi-join on `jcell` matches every
+   * level), and [[cappedPairs]] does the rest with the cover broadcast (a
+   * query batch is small next to the point table).
+   */
+  private def uncappedPairs(points: DataFrame, queries: DataFrame, k: Int, level: Int): DataFrame = {
+    val caps = histogramCaps(points, queries, k, level)
+      .withColumn("lvl", greatest(lit(1), least(lit(level), col("lq"))))
+    val pointCells = points.select(col("id"), col("lat"), col("lon"))
+      .crossJoin(broadcast(caps.select(col("lvl")).distinct()))
+      .select(col("id"), col("lat"), col("lon"),
+        cellEncode(col("lat"), col("lon"), col("lvl")).as("jcell"))
+    cappedPairs(pointCells, broadcast(capCover(caps, col("lvl"), col("cap"))), col("cap"))
+  }
+
+  /** How many levels below the table's `level` the histogram reaches. At
+   *  that depth a 3x3 block's corner distance is at most 2 sqrt(5) / 8, about
+   *  0.56 of a `level` cell height, so a dense query's cap already fits a
+   *  cover of 3x3 cells at `level` (the cover is never finer than `level`);
+   *  a finer histogram would only shrink the prefilter box, at up to 4x the
+   *  histogram rows per level. */
+  private val HistogramDepth = 3
+
+  /**
+   * Each query row's histogram level and cap (qid, qlat, qlon, lq, cap):
+   * the Distributed Stream KNN Join bound (SIGMOD 2021) from per-cell point
+   * counts. One scan counts the points per cell at the finest level,
+   * `level` + [[HistogramDepth]]; in ascending cell order with running
+   * counts these give the count of any coarser cell from two binary
+   * searches ([[Cells.blockLevel]]). The query's level `lq` is the finest
+   * whose 3x3 block holds >= k points (blocks nest, so the count only grows
+   * with coarser levels) and its cap is [[Cells.blockReachKm]]; with no such
+   * level (the table has fewer than k points) `lq` is 0, whose block is the
+   * whole grid. The histogram and the query batch are one row each in one
+   * task after the scan, so their cartesian product needs no exchange and
+   * no broadcast, and the histogram is not copied per query; the batch is
+   * read in that task too (it is small by contract: its covers are
+   * broadcast).
+   */
+  private def histogramCaps(points: DataFrame, queries: DataFrame, k: Int, level: Int): DataFrame = {
+    val finest = math.min(level + HistogramDepth, Cells.MaxLevel)
+    // coalesce(1) keeps each step in one task, so the one-row aggregates and
+    // the level set's distinct (see uncappedPairs) add no exchange
+    val hist = points.groupBy(cellEncode(col("lat"), col("lon"), finest).as("cell"))
+      .agg(count(lit(1)).as("n"))
+      .coalesce(1)
+      .agg(sort_array(collect_list(struct(col("cell"), col("n")))).as("hist"))
+    // one call per batch: the running counts are summed once
+    val blockCaps = udf { (lats: Seq[Double], lons: Seq[Double], hist: Seq[Row]) =>
+      val cells = hist.map(_.getLong(0)).toArray
+      val cum = hist.map(_.getLong(1)).scanLeft(0L)(_ + _).toArray
+      lats.zip(lons).map { case (lat, lon) =>
+        val lq = Cells.blockLevel(lat, lon, k, finest, cells, cum)
+        (lq, Cells.blockReachKm(lat, lon, lq))
       }
-      r *= 2
-      round += 1
     }
-    // unreachable (the rings coarsen to a full-grid cover first), but a
-    // round budget that runs out must fail LOUDLY rather than silently omit
-    // the still-pending queries — the same contract as Components'
-    // non-convergence guard
-    if (pendingCount > 0)
-      throw new IllegalStateException(
-        s"knnJoin did not converge: $pendingCount queries still pending " +
-          s"after $roundBudget rounds (level=$level, probeLevel=$probeLevel); " +
-          "lower the starting level")
-    // empty query set / nothing converged: keep the (qid, id, dist_km, rn)
-    // output schema so callers' selections still resolve
-    acc.getOrElse(
-      queries.limit(0).select(col("qid"))
-        .crossJoin(points.limit(0).select(col("id")))
-        .withColumn("dist_km", lit(0.0)).withColumn("rn", lit(0)))
+    // null coordinates have no neighbours
+    queries.filter(col("qlat").isNotNull && col("qlon").isNotNull)
+      .select(struct(col("qid"), col("qlat"), col("qlon")).as("q"))
+      .coalesce(1)
+      .agg(collect_list(col("q")).as("qs"))
+      .crossJoin(hist.hint("shuffle_replicate_nl"))
+      .select(explode(arrays_zip(col("qs"),
+        blockCaps(col("qs.qlat"), col("qs.qlon"), col("hist")).as("caps"))).as("z"))
+      .coalesce(1)
+      .select(col("z.qs.*"), col("z.caps._1").as("lq"), col("z.caps._2").as("cap"))
   }
 
   /** The k nearest of each query's (id, dist_km) candidates as (keys, id,
@@ -262,59 +214,58 @@ object Spatial {
         (col("pos") + 1).cast("int").as("rn")): _*)
 
   /**
-   * The capped plan of [[knnJoin]] up to the top-k: cell cover -> equi-join
-   * -> exact bbox prefilter, as (qid, id, dist_km) for every candidate that
-   * may lie within `maxKm` (the caller applies the cap itself).
-   * The cap bounds each query's search region before the join runs (as in
-   * Distributed Stream KNN Join, SIGMOD 2021), so one cover per query is
-   * provably enough: no rounds, no checkpoint, no driver step.
-   *
-   * The level comes from the cap and the cell height alone ([[coarsen]]):
-   * ry = ceil(cap / cellHeight) rows. The box's rx columns come from the
-   * per-row longitude span of [[capLonSpanDeg]] ([[Cells.box]] wraps them),
-   * which also bounds the prefilter ([[capPrefilter]]).
+   * The neighbour plan of [[knnJoin]] up to the top-k: cell cover ->
+   * equi-join -> exact bbox prefilter, as (qid, id, dist_km) for every
+   * candidate that may lie within the query's cap `capKm` (the caller
+   * applies a cap itself if it needs one). `pointCells` are the points
+   * (id, lat, lon) with `jcell` at each cover level of `cover`
+   * ([[capCover]]). The cap bounds each query's search region before the
+   * join runs (as in Distributed Stream KNN Join, SIGMOD 2021), so one cover
+   * per query is provably enough: no rounds, no checkpoint, no driver step.
    */
-  private def cappedPairs(points: DataFrame, queries: DataFrame,
-                          level: Int, maxKm: Double): DataFrame = {
-    val (lvl, ry) = coarsen(level,
-      lv => math.max(1, math.ceil(capCoverKm(maxKm) / Cells.cellHeightKm(lv)).toInt))
-    val cellWidthDeg = 360.0 / (1L << lvl)
-    val cover = queries.select(col("qid"), col("qlat"), col("qlon"),
-        capLonSpanDeg(col("qlat"), maxKm).as("qspan"))
-      .withColumn("jcell", explode(cellDisk(cellEncode(col("qlat"), col("qlon"), lit(lvl)),
-        ceil(col("qspan") / cellWidthDeg), lit(ry))))
-    points.select(col("id"), col("lat"), col("lon"),
-        cellEncode(col("lat"), col("lon"), lit(lvl)).as("jcell"))
-      .join(cover, Seq("jcell"))
-      .filter(capPrefilter(col("qlat"), col("qlon"), col("qspan"), maxKm))
+  private def cappedPairs(pointCells: DataFrame, cover: DataFrame, capKm: Column): DataFrame =
+    pointCells.join(cover, Seq("jcell"))
+      .filter(capPrefilter(col("qlat"), col("qlon"), col("qspan"), capKm))
       .select(col("qid"), col("id"),
         haversineKm(col("qlat"), col("qlon"), col("lat"), col("lon")).as("dist_km"))
+
+  /** Each query row's cover as rows (query columns, qspan, jcell): at level
+   *  `lvl` a box of ry = ceil(cap / cellHeight) rows and rx columns from the
+   *  per-row longitude span of [[capLonSpanDeg]] ([[Cells.box]] wraps
+   *  them), which also bounds the prefilter ([[capPrefilter]]). */
+  private def capCover(queries: DataFrame, lvl: Column, capKm: Column): DataFrame = {
+    val cellsPerDeg = pow(lit(2.0), lvl) / 360.0
+    queries.withColumn("qspan", capLonSpanDeg(col("qlat"), capKm))
+      .withColumn("jcell", explode(cellDisk(cellEncode(col("qlat"), col("qlon"), lvl),
+        ceil(col("qspan") * cellsPerDeg),
+        greatest(lit(1), ceil(capCoverKm(capKm) * cellsPerDeg * 2 / Cells.KmPerDegLat)))))
   }
 
-  /** The radius every cap bound is built for: the cap plus 1 m, above the
-   *  haversine expression's float error (< 0.3 m). */
-  private def capCoverKm(maxKm: Double): Double = maxKm + 1e-3
+  /** Every cap bound is built for the cap plus 1 m, above the haversine
+   *  expression's float error (< 0.3 m). */
+  private val CapMarginKm = 1e-3
+  private def capCoverKm(capKm: Column): Column = capKm + CapMarginKm
 
   /**
-   * Longitude span (degrees) holding every point within `maxKm` of a query
+   * Longitude span (degrees) holding every point within `capKm` of a query
    * at `qlat`. Within the cap |Δφ| <= cap/R, so both latitudes lie in the
    * band |φ| <= |qlat| + cap/R where cos φ >= cos(band), and haversine gives
    * sin(Δλ/2) <= sin(cap/2R) / cos(band) for the wrapped Δλ; once the band
-   * reaches a pole every longitude counts. A literal `qlat` folds it to a
+   * reaches a pole every longitude counts. Literal arguments fold it to a
    * constant.
    */
-  private def capLonSpanDeg(qlat: Column, maxKm: Double): Column = {
-    val coverKm = capCoverKm(maxKm)
+  private def capLonSpanDeg(qlat: Column, capKm: Column): Column = {
+    val coverKm = capCoverKm(capKm)
     val band = abs(qlat) + coverKm / Cells.KmPerDegLat
     when(band >= 90.0, lit(360.0)).otherwise(degrees(asin(least(lit(1.0),
-      lit(math.sin(coverKm / (2.0 * GeoMath.EarthRadiusKm))) / cos(radians(band))))) * 2.0)
+      sin(coverKm / (2.0 * GeoMath.EarthRadiusKm)) / cos(radians(band))))) * 2.0)
   }
 
   /** The exact bbox prefilter of the cap for the point columns (lat, lon):
    *  latitude within cap/R of `qlat`, wrapped Δλ within `qspan`. */
-  private def capPrefilter(qlat: Column, qlon: Column, qspan: Column, maxKm: Double): Column = {
+  private def capPrefilter(qlat: Column, qlon: Column, qspan: Column, capKm: Column): Column = {
     val dLon = abs(qlon - col("lon"))
-    abs(qlat - col("lat")) <= capCoverKm(maxKm) / Cells.KmPerDegLat &&
+    abs(qlat - col("lat")) <= capCoverKm(capKm) / Cells.KmPerDegLat &&
       least(dLon, lit(360.0) - dLon) <= qspan
   }
 

@@ -23,7 +23,6 @@ object NorthDiag {
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
       .config("spark.sql.files.maxPartitionBytes", mpb.toString)
       .config("spark.ui.enabled", "false")
-      .config("spark.graft.knn.probeDelta", sys.env.getOrElse("KNN_DELTA", "1"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

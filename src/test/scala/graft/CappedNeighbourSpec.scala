@@ -11,12 +11,14 @@ import graft.query.Spatial
 import graft.sources.Derived
 
 /**
- * The capped neighbour plan ([[Spatial.knnJoin]] with `maxKm`) through its
- * three wrappers — [[Spatial.knn]] with a radius, [[Spatial.reverseGeocode]]
- * and [[Spatial.nearestJoin]] — against brute-force haversine in (dist, id)
- * order. Points and queries mix in the edges where a cover that clamps
- * longitude, or takes its span from the centre's cos(lat), misses true
- * neighbours: |lat| > 89.5 and lon within 0.05 of ±180.
+ * The neighbour plan ([[Spatial.knnJoin]]) against brute-force haversine in
+ * (dist, id) order: capped through its three wrappers — [[Spatial.knn]]
+ * with a radius, [[Spatial.reverseGeocode]] and [[Spatial.nearestJoin]] —
+ * and uncapped, where each query's cap comes from the cell-count
+ * histogram, through `knnJoin` itself and [[Spatial.knn]] without a radius.
+ * Points and queries mix in the edges where a cover that clamps longitude,
+ * or takes its span from the centre's cos(lat), misses true neighbours:
+ * |lat| > 89.5 and lon within 0.05 of ±180.
  */
 class CappedNeighbourSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -50,7 +52,12 @@ class CappedNeighbourSpec extends AnyFunSuite {
 
   private val capKm: Gen[Double] = Gen.oneOf(Gen.const(0.35), Gen.choose(0.05, 30.0))
 
-  private def brute(pts: Seq[Pt], lat: Double, lon: Double, km: Double): Seq[(Long, Double)] =
+  /** Anywhere on the sphere: mostly far from a cluster. */
+  private val anywhere: Gen[(Double, Double)] =
+    for (lat <- Gen.choose(-90.0, 90.0); lon <- Gen.choose(-180.0, 180.0)) yield (lat, lon)
+
+  private def brute(pts: Seq[Pt], lat: Double, lon: Double,
+                    km: Double = Double.MaxValue): Seq[(Long, Double)] =
     pts.map(p => (p._1, GeoMath.haversineKm(lat, lon, p._2, p._3)))
       .filter(_._2 <= km).sortBy(p => (p._2, p._1))
 
@@ -102,6 +109,95 @@ class CappedNeighbourSpec extends AnyFunSuite {
       Seq(rev, join).forall(got => queries.forall(q =>
         same(got.get(q._1).toSeq, exp(q._1).toSeq)))
     }, 12)
+  }
+
+  /** Each query's (id, dist_km) from `knnJoin` without a cap, in rn order,
+   *  and whether every query's rn runs 1..n. */
+  private def uncapped(pts: Seq[Pt], queries: Seq[(Long, Double, Double)], k: Int) = {
+    val rows = Spatial.knnJoin(frame(pts), queries.toDF("qid", "qlat", "qlon"), k).collect()
+    val byQ = rows.groupBy(_.getAs[Long]("qid")).map { case (q, rs) =>
+      q -> rs.sortBy(_.getAs[Int]("rn")).toSeq }
+    queries.map(q => q._1 -> byQ.getOrElse(q._1, Seq.empty).map(r =>
+      (r.getAs[Long]("id"), r.getAs[Double]("dist_km"))))
+      .toMap -> byQ.values.forall(rs => rs.map(_.getAs[Int]("rn")) == (1 to rs.size))
+  }
+
+  test("knnJoin without a cap == brute force for dense, pole, antimeridian and far queries") {
+    val args = for {
+      (pts, c) <- world
+      qs <- Gen.listOfN(6, Gen.frequency(3 -> near(c), 2 -> site, 1 -> anywhere))
+      k <- Gen.choose(1, 8)
+    } yield (pts, qs, k)
+    check(Prop.forAll(args) { case (pts, qs, k) =>
+      val queries = qs.zipWithIndex.map { case ((la, lo), i) => (i.toLong, la, lo) }
+      val (got, ranked) = uncapped(pts, queries, k)
+      ranked && queries.forall(q => same(got(q._1), brute(pts, q._2, q._3).take(k)))
+    }, 10)
+  }
+
+  test("knn without a radius, with feature and offset == brute force") {
+    val args = for {
+      (pts, c) <- world
+      q <- Gen.frequency(3 -> near(c), 1 -> site, 1 -> anywhere)
+      f <- Gen.option(Gen.oneOf("f0", "f1"))
+      k <- Gen.choose(1, 8)
+      off <- Gen.choose(0, 3)
+    } yield (pts, q, f, k, off)
+    check(Prop.forAll(args) { case (pts, (lat, lon), f, k, off) =>
+      val got = Spatial.knn(frame(pts), lat, lon, k, feature = f, offset = off).collect()
+      val exp = brute(pts.filter(p => f.forall(_ == p._4)), lat, lon).slice(off, off + k)
+      same(got.map(x => (x.getAs[Long]("id"), x.getAs[Double]("dist_km"))).toSeq, exp) &&
+        f.forall(v => got.forall(_.getAs[String]("feature") == v))
+    }, 10)
+  }
+
+  test("knnJoin without a cap: k above the table size returns every point, ties by id") {
+    // two exact duplicates (ids 1 and 5) tie on distance and rank by id
+    val pts = Seq((1L, 10.0, 20.0, "f0"), (2L, -45.0, 170.0, "f0"), (3L, 89.9, -179.9, "f1"),
+      (5L, 10.0, 20.0, "f1"))
+    val queries = Seq((7L, 10.001, 20.001), (8L, -89.0, 0.0))
+    val (got, ranked) = uncapped(pts, queries, 10)
+    assert(ranked)
+    for (q <- queries) assert(same(got(q._1), brute(pts, q._2, q._3)), s"query ${q._1}: ${got(q._1)}")
+    assert(got(7L).take(2).map(_._1) == Seq(1L, 5L) && got(7L)(0)._2 == got(7L)(1)._2)
+  }
+
+  test("knnJoin without a cap over an empty query frame: no rows, the output columns") {
+    val empty = Seq.empty[(Long, Double, Double)].toDF("qid", "qlat", "qlon")
+    val (res, jobs) = TestSpark.jobsOf {
+      val df = Spatial.knnJoin(frame(Seq((1L, 0.0, 0.0, "f0"))), empty, 3)
+      (df.columns.toSeq, df.count())
+    }
+    assert(res == (Seq("qid", "id", "dist_km", "rn"), 0L), s"ran $jobs jobs")
+  }
+
+  test("knnJoin without a cap finds a neighbour at the far corner of its histogram block") {
+    // q sits at the lower-left corner of its level-10 cell; the one point
+    // sits just inside the far corner of q's 3x3 block there, so the block
+    // bound is all but exact and a cap 10% short of it drops the point
+    val lvl = 10
+    val cell = Cells.encode(80.0, 30.0, lvl)
+    val (latLo, lonLo, latHi, lonHi) = Cells.bounds(cell)
+    val (h, w) = (latHi - latLo, lonHi - lonLo)
+    val q = (latLo + 1e-9, lonLo + 1e-9)
+    val p = (latLo + 2 * h - 1e-7, lonLo + 2 * w - 1e-7)
+    val d = GeoMath.haversineKm(q._1, q._2, p._1, p._2)
+    assert(d > 0.95 * Cells.blockReachKm(q._1, q._2, lvl), "fixture drift")
+    val (got, _) = uncapped(Seq((4L, p._1, p._2, "f0")), Seq((1L, q._1, q._2)), 1)
+    assert(got(1L).map(_._1) == Seq(4L), s"neighbour at $d km missed")
+  }
+
+  test("the uncapped plans start no job until an action, and answer in a few") {
+    val objs = Derived.objects(spark, TestSpark.Sf)
+    val queries = objs.filter(col("id") % 97 === 0)
+      .select(col("id").as("qid"), (col("lat") + 0.01).as("qlat"), (col("lon") - 0.01).as("qlon"))
+    val (_, build) = TestSpark.jobsOf(Seq(Spatial.knnJoin(objs, queries, 5),
+      Spatial.knn(objs, -7.25, 108.5, 10)))
+    assert(build == 0, s"building the uncapped plans ran $build jobs")
+    val (n, countJobs) = TestSpark.jobsOf(Spatial.knnJoin(objs, queries, 5).count())
+    assert(n == 5 * queries.count() && countJobs <= 6, s"knnJoin count ran $countJobs jobs")
+    val (nn, knnJobs) = TestSpark.jobsOf(Spatial.knn(objs, -7.25, 108.5, 10).collect())
+    assert(nn.length == 10 && knnJobs <= 6, s"knn without a radius ran $knnJobs jobs")
   }
 
   // the cover cases that a clamped, centre-cos(lat) circle cover misses

@@ -184,6 +184,23 @@ class IncrementalSpec extends AnyFunSuite {
     assert(a1 == Set(200L))
   }
 
+  test("near-dup ingest maxBucket: pn counts the batch's in-batch-rejected probe rows") {
+    val dir = freshDir("near-cap-basis")
+    assert(ingestNear(dir, 0, Seq((10L, tA), (11L, tX))) == Set(10L, 11L))
+    // 200 and 201 are both tA, like state doc 10: every band key of tA has
+    // sn = 1 in state and pn = 2 in the probe, because pn counts every
+    // probe row of the batch, 201 too, although the in-batch refine rejects
+    // 201 (the larger id of an identical pair). pn + sn = 3 > cap = 2 drops
+    // those keys from the cross probe, so 200 is never compared with 10 and
+    // is accepted; counting only in-batch survivors (pn = 1) would keep the
+    // keys at 2 <= cap and reject 200 as a near-dup of 10.
+    val a1 = Incremental.ingestMinhash(spark, dir, "n1",
+        Seq((200L, tA), (201L, tA)).toDF("doc_id", "text"),
+        "doc_id", "text", 0.7, maxBucket = Some(2))
+      .select("doc_id").as[Long].collect().toSet
+    assert(a1 == Set(200L))
+  }
+
   test("near-dup ingest resumes by batch name without recompute") {
     val dir = freshDir("near-resume")
     ingestNear(dir, 0, Seq((10L, tA), (11L, tX)))
@@ -334,5 +351,17 @@ class IncrementalSpec extends AnyFunSuite {
     val (_, firstJobs) = TestSpark.jobsOf(Incremental.ingestPack(spark,
       freshDir("packcrash-first"), "p1", b1, "doc_id", "toks", 10L))
     assert(jobs == firstJobs, s"p1 ingest ran $jobs jobs, a first batch $firstJobs")
+  }
+
+  test("pack resume reads through the manifest DDL: no job until an action, same rows and types") {
+    val dir = freshDir("pack-resume")
+    val b0 = Seq((1L, 4), (2L, 8), (3L, 5)).toDF("doc_id", "toks")
+    val first = Incremental.ingestPack(spark, dir, "p0", b0, "doc_id", "toks", 10L)
+    val (firstSchema, firstRows) = (first.schema, first.collect().toSet)
+    val (resumed, jobs) = TestSpark.jobsOf(
+      Incremental.ingestPack(spark, dir, "p0", b0, "doc_id", "toks", 10L))
+    assert(jobs == 0, s"building the resumed pack ran $jobs jobs")
+    assert(resumed.schema.map(f => f.name -> f.dataType) == firstSchema.map(f => f.name -> f.dataType))
+    assert(resumed.collect().toSet == firstRows)
   }
 }

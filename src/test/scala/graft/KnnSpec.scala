@@ -11,7 +11,7 @@ import graft.sources.Derived
 /**
  * kNN parity with the reference R-tree tests
  * (/root/reference/pkg/datastructure/rtree_test.go:220-475): the
- * cell-ring-expansion kNN must return the R-tree's exact incremental-NN
+ * histogram-capped cell-cover kNN must return the R-tree's exact incremental-NN
  * results — same IDs, same order.
  */
 class KnnSpec extends AnyFunSuite {

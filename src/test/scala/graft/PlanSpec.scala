@@ -54,16 +54,7 @@ class PlanSpec extends AnyFunSuite {
     val objs = Derived.objects(spark, Sf)
     val queries = objs.limit(4)
       .select(col("id").as("qid"), col("lat").as("qlat"), col("lon").as("qlon"))
-    // build one round's plan exactly as knnJoin does
-    import graft.functions.GeoFunctions._
-    val qCells = queries
-      .withColumn("qcell", cellEncode(col("qlat"), col("qlon"), lit(graft.core.Cells.DefaultLevel)))
-      .withColumn("cell", explode(cellDisk(col("qcell"), lit(1))))
-    val joined = objs.join(broadcast(qCells), Seq("cell"))
-      .withColumn("dist_km", haversineKm(col("qlat"), col("qlon"), col("lat"), col("lon")))
-    val topk = joined.groupBy(col("qid"))
-      .agg(graft.functions.TopK.topKByDist(5)(col("dist_km"), col("id")).as("nn"))
-    val p = plan(topk)
+    val p = plan(Spatial.knnJoin(objs, queries, k = 5))
     assert(p.contains("BroadcastHashJoin"), s"query side not broadcast:\n$p")
     assert(p.contains("ObjectHashAggregate"), s"top-k not ObjectHashAggregate:\n$p")
     assert(p.contains("partial_topkagg") || p.contains("partial_TopKAgg")

@@ -11,8 +11,7 @@ import graft.sources.Derived
 /**
  * Round-2 operators: nearest-way join (both reference refine semantics),
  * same-name bbox-containment dedup, boolean query parsing/evaluation, and
- * the knnJoin wide-search behaviors (level coarsening, zero-candidate
- * queries staying pending).
+ * the knnJoin wide search (a query far from every point).
  */
 class WaysDedupBooleanSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
