@@ -278,34 +278,14 @@ object Cells {
   }
 
   /**
-   * Band-conservative variant of [[minDistOutsideDiskKm]]: a lower bound
-   * valid for EVERY point whose |lat| <= maxAbsLat, dropping the per-point
-   * in-cell offsets (>= 0) and using the band's worst-case cos(lat). Lets a
-   * distributed ring loop converge whole batches with one constant per
-   * (level, r) instead of a per-row bound evaluation; conservativeness only
-   * costs extra rounds, never correctness.
-   */
-  def minDistOutsideDiskBandKm(maxAbsLat: Double, level: Int, r: Int): Double = {
-    if (r <= 0) return 0.0
-    val latCellDeg = 180.0 / (1L << level)
-    val lonCellDeg = 360.0 / (1L << level)
-    val bLat = GeoMath.degToRad(r * latCellDeg) * GeoMath.EarthRadiusKm
-    val bandAbsLat = math.min(90.0, maxAbsLat + (r + 1) * latCellDeg)
-    val cosMin = math.max(0.0, math.cos(GeoMath.degToRad(bandAbsLat)))
-    val lonSepRad = math.min(math.Pi, GeoMath.degToRad(r * lonCellDeg))
-    val bLon = 2.0 * math.asin(math.min(1.0, cosMin * math.sin(lonSepRad / 2.0))) *
-      GeoMath.EarthRadiusKm
-    math.min(bLat, bLon)
-  }
-
-  /**
    * Lower bound on the distance from (lat, lon) to any point OUTSIDE the
    * disk of radius `r` around its cell. Any point outside the disk is at
    * least `r` cells away along one axis, minus the query's offset within
    * its own cell — conservatively (r - 1) * min(cellHeight, cellWidth)
-   * plus the distance to the near edge (>= 0). Used as the geofence ring
-   * loop's stop test: once kth-distance <= this bound, the top-k is exact
-   * (equivalent to the reference R-tree's minDist pruning, rtree.go:543-568).
+   * plus the distance to the near edge (>= 0). Used as the stop test of
+   * [[graft.query.Geofence.FenceGrid]]'s probes: once the kth distance is
+   * <= this bound, the top-k is exact (equivalent to the reference
+   * R-tree's minDist pruning, rtree.go:543-568).
    */
   def minDistOutsideDiskKm(lat: Double, lon: Double, level: Int, r: Int): Double = {
     if (r <= 0) return 0.0

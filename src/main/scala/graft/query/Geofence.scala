@@ -1,6 +1,6 @@
 package graft.query
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -34,54 +34,69 @@ object Geofence {
   case class Fence(key: String, lat: Double, lon: Double, radiusKm: Double)
 
   /**
-   * Broadcastable cell-grid index over a fence set — the DRIVER-SIDE twin
-   * of [[fenceStatusJoin]]'s ring join and of the reference's fence R-tree
-   * (fence_index.go:33-48), for the streaming operator where each task
-   * holds the fence set and a per-point O(|fences|) scan would multiply a
-   * 10^12-point stream by a 10^4-fence set. Fence CENTERS are indexed by
-   * their cell; [[nearest]] probes expanding disks around the point's cell
-   * and stops when the kth candidate distance is within the provable
-   * [[graft.core.Cells.minDistOutsideDiskKm]] bound — identical ordering
-   * ((dist, key)) and identical results to the batch plans (spec'd parity
-   * at 10k fences).
+   * Broadcastable cell-grid index over a fence set: the engine's
+   * counterpart of the reference's fence R-tree (fence_index.go:33-48),
+   * used by [[fenceStatus]] past [[LiteralFenceMax]] fences and by the
+   * streaming operator, where each task holds the fence set and a
+   * per-point O(|fences|) scan would multiply a 10^12-point stream by a
+   * 10^4-fence set. Fence CENTERS are kept sorted by their cell at
+   * `level`, so a coarser cell's fences are one id range
+   * ([[graft.core.Cells.childRange]]). [[nearest]] probes disks around the
+   * point on the [[Spatial.effectiveDisk]] schedule (at most 25 cells a
+   * probe, the whole grid last) and stops when the kth distance is within
+   * the [[graft.core.Cells.minDistOutsideDiskKm]] bound of the probed disk,
+   * or when the probe saw every fence.
    */
-  case class FenceGrid(level: Int, byCell: Map[Long, Array[Fence]],
-                       all: Array[Fence]) {
+  final class FenceGrid private (level: Int, cells: Array[Long], fences: Array[Fence])
+      extends Serializable {
     import graft.core.{Cells, GeoMath}
 
-    private val maxR = 1 << math.min(6, level) // beyond this: brute force
-
+    /** The k nearest fences to (lat, lon) in (haversine, key) order. */
     def nearest(lat: Double, lon: Double, k: Int): Seq[Fence] = {
-      if (all.length <= k) return sortAll(lat, lon).toSeq
-      val c = Cells.encode(lat, lon, level)
-      var r = 1
-      while (r <= maxR) {
-        val cand = Cells.disk(c, r).flatMap(byCell.getOrElse(_, FenceGrid.NoFences))
-        if (cand.length >= k) {
-          val top = cand
-            .map(f => (GeoMath.haversineKm(lat, lon, f.lat, f.lon), f))
-            .sortBy { case (d, f) => (d, f.key) }
-            .take(k)
-          if (top.last._1 <= Cells.minDistOutsideDiskKm(lat, lon, level, r))
-            return top.map(_._2).toSeq
+      @annotation.tailrec
+      def probe(r: Int): Seq[Fence] = {
+        val (lvl, rad) = Spatial.effectiveDisk(level, r)
+        // max-heap on (dist, key): the head is the worst of the k kept
+        val top = new java.util.PriorityQueue[(Double, Fence)](k + 1, FenceGrid.Farthest)
+        var seen = 0
+        for (c <- Cells.disk(Cells.encode(lat, lon, lvl), rad)) {
+          val (lo, hi) = Cells.childRange(c, level)
+          val end = from(hi + 1)
+          var i = from(lo)
+          seen += end - i
+          while (i < end) {
+            top.add((GeoMath.haversineKm(lat, lon, fences(i).lat, fences(i).lon), fences(i)))
+            if (top.size > k) top.poll()
+            i += 1
+          }
         }
-        r *= 2
+        if (seen == fences.length ||
+            top.size == k && top.peek._1 <= Cells.minDistOutsideDiskKm(lat, lon, lvl, rad))
+          Seq.fill(top.size)(top.poll()._2).reverse
+        else probe(2 * r)
       }
-      sortAll(lat, lon).take(k).toSeq
+      probe(1)
     }
 
-    private def sortAll(lat: Double, lon: Double): Array[Fence] =
-      all.sortBy(f => (GeoMath.haversineKm(lat, lon, f.lat, f.lon), f.key))
+    /** Index of the first fence whose cell is >= c. */
+    private def from(c: Long): Int = {
+      var (lo, hi) = (0, cells.length)
+      while (lo < hi) {
+        val m = (lo + hi) >>> 1
+        if (cells(m) < c) lo = m + 1 else hi = m
+      }
+      lo
+    }
   }
 
   object FenceGrid {
-    private val NoFences = Array.empty[Fence]
+    private val Farthest: Ordering[(Double, Fence)] =
+      Ordering.by[(Double, Fence), (Double, String)](t => (t._1, t._2.key)).reverse
 
     def build(fences: Seq[Fence],
               level: Int = graft.core.Cells.DefaultLevel): FenceGrid = {
-      val arr = fences.toArray
-      FenceGrid(level,
-        arr.groupBy(f => graft.core.Cells.encode(f.lat, f.lon, level)), arr)
+      val byCell = fences.map(f => (graft.core.Cells.encode(f.lat, f.lon, level), f)).sortBy(_._1)
+      new FenceGrid(level, byCell.map(_._1).toArray, byCell.map(_._2).toArray)
     }
   }
 
@@ -99,33 +114,43 @@ object Geofence {
    *  - fences(name) errors when the collection is missing, like Search
    *    (:49-54)
    *
-   * Fence tables are broadcast-scale; each mutation rewrites the table
-   * (at warehouse scale this becomes an Iceberg MERGE INTO — the call
-   * shape is identical). An empty collection is a marker row with a null
-   * fence_key.
+   * Fence tables are broadcast-scale; each mutation writes the whole
+   * table as a new version, a [[graft.pipeline.TableIO]] stage
+   * `fences_<seq>` whose manifest rename is the commit (at warehouse scale
+   * this becomes an Iceberg MERGE INTO — the call shape is identical).
+   * Readers take the newest complete version; the older ones are deleted
+   * only after the new one commits, so a write cut at any point leaves the
+   * previous version readable, and the next write replaces the cut one.
+   * An empty collection is a marker row with a null fence_key.
    */
   class FenceStore(spark: SparkSession, dir: String) {
     import spark.implicits._
-    private val path = s"$dir/fences.parquet"
+    import graft.pipeline.TableIO
+
+    private val Prefix = "fences_"
 
     private def emptyTable: DataFrame =
       Seq.empty[(String, Option[String], Double, Double, Double)]
         .toDF("collection", "fence_key", "flat", "flon", "fradius")
 
-    /** Read with the known schema: no schema-inference job per read. */
-    def load(): DataFrame =
-      if (java.nio.file.Files.exists(java.nio.file.Paths.get(path)))
-        spark.read.schema(emptyTable.schema).parquet(path)
-      else emptyTable
+    /** The newest complete version, read with its manifest's DDL: no
+     *  schema-inference job per read. */
+    def load(): DataFrame = TableIO.stages(dir, Prefix).lastOption.fold(emptyTable)(st =>
+      spark.read.schema(TableIO.manifest(dir, st).schema).parquet(s"$dir/$st"))
 
     /** Every stored row, in one job; fence tables are broadcast-scale. */
     private def all(): Seq[Row] = load().collect().toSeq
 
-    private def write(rows: Seq[Row]): Unit =
-      // the new table is built on the driver from the collected old one,
-      // so the overwrite never reads the files it replaces
-      spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), emptyTable.schema)
-        .write.mode("overwrite").parquet(path)
+    private def write(rows: Seq[Row]): Unit = {
+      val prior = TableIO.stages(dir, Prefix)
+      val seq = prior.lastOption.fold(0)(_.stripPrefix(Prefix).toInt + 1)
+      // the new version is built on the driver from the collected old one,
+      // so the write never reads the files it replaces
+      TableIO.stageWrite(spark, dir, f"$Prefix$seq%06d") {
+        spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), emptyTable.schema)
+      }
+      prior.foreach(st => org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir, st)))
+    }
 
     private def inCollection(name: String)(r: Row): Boolean = r.getString(0) == name
 
@@ -164,9 +189,9 @@ object Geofence {
 
   /** Above this fence count the literal-array plan stops being the right
    *  shape (plan-size blowup from an N-element literal in every task) and
-   *  [[fenceStatus]] switches to the cell-keyed broadcast ring join —
-   *  the engine equivalent of the reference's fence R-tree
-   *  (fence_index.go:33-48). */
+   *  [[fenceStatus]] picks the nearest fences from a broadcast
+   *  [[FenceGrid]] instead — the engine equivalent of the reference's
+   *  fence R-tree (fence_index.go:33-48). */
   val LiteralFenceMax = 64
 
   /**
@@ -174,13 +199,10 @@ object Geofence {
    * Returns one row per emitted status: (event_id, user_id, ts, fence_key,
    * seq, status) where seq orders multi-status emissions (EXIT/OUTSIDE,
    * ENTER/INSIDE). Fence sets up to [[LiteralFenceMax]] evaluate map-side
-   * as a literal array; larger sets route through [[fenceStatusJoin]]
-   * (same rows, join-shaped plan).
+   * as a literal array; larger sets select each row's nearest fences from
+   * a broadcast [[FenceGrid]] (same rows, no fence literals in the plan).
    */
   def fenceStatus(track: DataFrame, fences: Seq[Fence], nearestFences: Int = 3): DataFrame = {
-    val spark = track.sparkSession
-    import spark.implicits._
-
     // empty fence set (a supported FenceStore state: collection exists, no
     // circles yet): no statuses, like the reference's FenceIndex.Search
     // over an empty index. Without this guard the zero-struct literal
@@ -192,11 +214,7 @@ object Geofence {
           lit("").as("fence_key"), lit(0).as("seq"), lit("").as("status"))
         .limit(0)
 
-    if (fences.size > LiteralFenceMax)
-      return fenceStatusJoin(track,
-        fences.map(f => (f.key, f.lat, f.lon, f.radiusKm))
-          .toDF("fence_key", "flat", "flon", "fradius"),
-        nearestFences)
+    if (fences.size > LiteralFenceMax) return fenceStatusByGrid(track, fences, nearestFences)
 
     // keep the `nearestFences` fences per point, by center distance — the
     // fence set is a literal array, so per-row sort + slice selects the
@@ -207,18 +225,38 @@ object Geofence {
     val fenceArr = array(fences.map(f => struct(
       lit(f.key).as("fence_key"), lit(f.lat).as("flat"),
       lit(f.lon).as("flon"), lit(f.radiusKm).as("fradius"))): _*)
-    val ranked = array_sort(transform(fenceArr, f => struct(
-      haversineKm(col("lat"), col("lon"), f("flat"), f("flon")).as("fdist"),
-      f("fence_key").as("fence_key"), f("flat").as("flat"),
-      f("flon").as("flon"), f("fradius").as("fradius"))))
-    val nearest = withPrev(track)
-      .withColumn("nf", explode(slice(ranked, 1, nearestFences)))
+    statusOfNearest(track, slice(withDist(fenceArr), 1, nearestFences))
+  }
+
+  /** The past-[[LiteralFenceMax]] plan of [[fenceStatus]], callable at any
+   *  fence count so specs can compare it with the literal plan: a UDF over
+   *  a broadcast [[FenceGrid]] picks each row's nearest fences, in one
+   *  projection with no job at build time. A row with a null lat or lon
+   *  gets no fences (the UDF is not called), so no status. */
+  private[graft] def fenceStatusByGrid(track: DataFrame, fences: Seq[Fence],
+                                       nearestFences: Int): DataFrame = {
+    val grid = track.sparkSession.sparkContext.broadcast(FenceGrid.build(fences))
+    val nearest = udf((lat: Double, lon: Double) => grid.value.nearest(lat, lon, nearestFences))
+    statusOfNearest(track, withDist(transform(nearest(col("lat"), col("lon")), f => struct(
+      f("key").as("fence_key"), f("lat").as("flat"),
+      f("lon").as("flon"), f("radiusKm").as("fradius")))))
+  }
+
+  /** (fence_key, flat, flon, fradius) structs -> (fdist, fence_key, flat,
+   *  flon, fradius), fdist the column haversine from the row's point. */
+  private def withDist(fences: Column): Column = array_sort(transform(fences, f => struct(
+    haversineKm(col("lat"), col("lon"), f("flat"), f("flon")).as("fdist"),
+    f("fence_key").as("fence_key"), f("flat").as("flat"),
+    f("flon").as("flon"), f("fradius").as("fradius"))))
+
+  /** One row per (track row, fence in `nearest`), then the statuses. */
+  private def statusOfNearest(track: DataFrame, nearest: Column): DataFrame =
+    statusFromNearest(withPrev(track)
+      .withColumn("nf", explode(nearest))
       .select(col("*"), col("nf.fence_key").as("fence_key"), col("nf.flat").as("flat"),
         col("nf.flon").as("flon"), col("nf.fradius").as("fradius"),
         col("nf.fdist").as("fdist"))
-      .drop("nf")
-    statusFromNearest(nearest)
-  }
+      .drop("nf"))
 
   /** lag() previous position per user — shared by both plans. */
   private def withPrev(track: DataFrame): DataFrame = {
@@ -256,107 +294,5 @@ object Geofence {
       .withColumn("statuses", statuses)
       .select(col("event_id"), col("user_id"), col("ts"), col("fence_key"),
         posexplode(col("statuses")).as(Seq("seq", "status")))
-  }
-
-  /**
-   * Large-fence-set plan: the `nearestFences` nearest fences per point via a
-   * cell-keyed BROADCAST ring join — the engine twin of the reference's
-   * fence R-tree kNN (fence_index.go:49-72). Unlike [[Spatial.knnJoin]],
-   * whose one plan broadcasts the query side's covers, the BIG side here is
-   * the track, which is never broadcast and never collected; the fence
-   * table is broadcast-scale, so the fences take the covers and the search
-   * runs in rounds.
-   *
-   * Per round: fences explode into their <=25-cell disk at a coarsened
-   * level ([[Spatial.effectiveDisk]] — broadcast side bounded at 25 x
-   * |fences| rows however wide the search), points join on their own single
-   * cell, per-point candidates reduce to the k nearest by (dist, key) —
-   * identical ordering to the literal plan's array_sort. A point converges
-   * when its kth candidate distance is within the band-conservative ring
-   * bound ([[graft.core.Cells.minDistOutsideDiskBandKm]], one constant per
-   * round — no per-row bound UDF); unconverged points retry with a doubled
-   * radius, pending tracked by ANTI-JOIN (no driver-side point ids).
-   * Per-point candidate buffers are bounded by the fences in one disk.
-   */
-  def fenceStatusJoin(track: DataFrame, fenceDf: DataFrame, nearestFences: Int = 3,
-                      level: Int = graft.core.Cells.DefaultLevel,
-                      maxRounds: Int = 32): DataFrame = {
-    import graft.core.Cells
-    // round materialization uses localCheckpoint: the blocks backing each
-    // round cut lineage; once the caller drops the result, the
-    // ContextCleaner reclaims them with the unreferenced RDDs
-    val emptyOut = track
-      .select(col("event_id"), col("user_id"), col("ts"),
-        lit("").as("fence_key"), lit(0).as("seq"), lit("").as("status"))
-      .limit(0)
-    if (fenceDf.isEmpty) return emptyOut
-
-    val fenceCount = fenceDf.count()
-    val k = math.min(nearestFences.toLong, fenceCount).toInt
-    // one pass for the conservative convergence band (max |lat| of points)
-    val bandRow = track.agg(max(abs(col("lat")))).head()
-    if (bandRow.isNullAt(0)) return emptyOut
-    val maxAbsLat = bandRow.getDouble(0)
-
-    var pending = withPrev(track).localCheckpoint(eager = true)
-    var acc: Option[DataFrame] = None
-    var r = 1
-    var round = 0
-    var pendingCount = pending.count()
-    while (round < maxRounds && pendingCount > 0) {
-      val (lvl, rad) = Spatial.effectiveDisk(level, r)
-      val fullCover = lvl <= 1 && rad >= 2
-      val cand = fenceRoundCandidates(pending, fenceDf, lvl, rad)
-      // (fdist, fence_key) struct order == the literal plan's array_sort key
-      val sel = cand.groupBy(col("event_id"))
-        .agg(first(col("user_id")).as("user_id"), first(col("ts")).as("ts"),
-          first(col("lat")).as("lat"), first(col("lon")).as("lon"),
-          first(col("prev_lat")).as("prev_lat"), first(col("prev_lon")).as("prev_lon"),
-          slice(array_sort(collect_list(struct(
-            col("fdist"), col("fence_key"), col("flat"), col("flon"), col("fradius")))),
-            1, k).as("nf"))
-      val bound = Cells.minDistOutsideDiskBandKm(maxAbsLat, lvl, rad)
-      val done = (if (fullCover) sel
-        else sel.filter(size(col("nf")) >= k && element_at(col("nf"), k)("fdist") <= bound))
-        .localCheckpoint(eager = true)
-      val doneRows = done
-        .withColumn("x", explode(col("nf")))
-        .select(col("event_id"), col("user_id"), col("ts"), col("lat"), col("lon"),
-          col("prev_lat"), col("prev_lon"),
-          col("x.fence_key").as("fence_key"), col("x.flat").as("flat"),
-          col("x.flon").as("flon"), col("x.fradius").as("fradius"),
-          col("x.fdist").as("fdist"))
-      acc = Some(acc.map(_.unionByName(doneRows)).getOrElse(doneRows))
-      pending =
-        if (fullCover) pending.limit(0)
-        else pending.join(done.select(col("event_id")), Seq("event_id"), "left_anti")
-          .localCheckpoint(eager = true)
-      pendingCount = if (fullCover) 0L else pending.count()
-      r *= 2
-      round += 1
-    }
-    // unreachable with the default level/maxRounds (rings coarsen to a
-    // full-grid cover first), but silently omitting still-pending points
-    // would be a wrong answer — fail loudly, like Components
-    if (pendingCount > 0)
-      throw new IllegalStateException(
-        s"fenceStatusJoin did not converge: $pendingCount track points " +
-          s"still pending after $maxRounds rounds (level=$level); " +
-          "raise maxRounds or lower the starting level")
-    acc.map(statusFromNearest).getOrElse(emptyOut)
-  }
-
-  /** One ring-join round of [[fenceStatusJoin]]: fences exploded into their
-   *  disk cells (broadcast), points joined on their own cell. Exposed so
-   *  plan shape (BroadcastHashJoin, no fence literals) is assertable —
-   *  inside the loop every round materializes behind a checkpoint. */
-  def fenceRoundCandidates(pending: DataFrame, fenceDf: DataFrame,
-                           lvl: Int, rad: Int): DataFrame = {
-    val fx = fenceDf.withColumn("jcell",
-      explode(cellDisk(cellEncode(col("flat"), col("flon"), lit(lvl)), lit(rad))))
-    pending
-      .withColumn("jcell", cellEncode(col("lat"), col("lon"), lit(lvl)))
-      .join(broadcast(fx), Seq("jcell"))
-      .withColumn("fdist", haversineKm(col("lat"), col("lon"), col("flat"), col("flon")))
   }
 }

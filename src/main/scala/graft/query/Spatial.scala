@@ -74,8 +74,8 @@ object Spatial {
 
   /** The shared trade-level-for-radius rule: coarsen from `level` until the
    *  per-level radius is <= 2 (disk <= 25 cells) or the grid bottoms out.
-   *  The literal-cap covers, way covers and the geofence rings go through
-   *  this one invariant. */
+   *  The literal-cap covers, way covers and the fence-grid probes go
+   *  through this one invariant. */
   private[query] def coarsen(level: Int, radAt: Int => Int): (Int, Int) = {
     var lvl = level
     while (radAt(lvl) > 2 && lvl > 1) lvl -= 1
@@ -85,9 +85,11 @@ object Spatial {
   /**
    * Effective (level, radius) for a disk of Chebyshev radius `r` at `level`:
    * coarsen one level per halving until the radius is <= 2, so a search disk
-   * is at most 25 cells no matter how wide it has grown. Covering is
-   * preserved because parent grid coords are child coords >> 1, so
-   * |x1-x2| <= r implies |x1>>1 - x2>>1| <= ceil(r/2).
+   * is at most 25 cells no matter how wide it has grown; doubling `r` from
+   * 1 ends in a level-1 disk, the whole grid. This is the probe schedule of
+   * [[Geofence.FenceGrid]]. Covering is preserved because parent grid
+   * coords are child coords >> 1, so |x1-x2| <= r implies
+   * |x1>>1 - x2>>1| <= ceil(r/2).
    */
   private[query] def effectiveDisk(level: Int, r: Int): (Int, Int) =
     // halving a Chebyshev radius per level = ceil-dividing by 2^(level-lvl)

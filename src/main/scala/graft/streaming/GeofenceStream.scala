@@ -32,8 +32,9 @@ object GeofenceStream {
 
   /** Transition rule, shared semantics with the batch operator. `grid`:
    *  the cell index used past [[graft.query.Geofence.LiteralFenceMax]]
-   *  fences — same (dist, key)-ordered k-nearest, found by ring probes
-   *  instead of an O(|fences|) scan per point. */
+   *  fences, the same one the batch operator probes there — same
+   *  (dist, key)-ordered k-nearest, found by cell probes instead of an
+   *  O(|fences|) scan per point. */
   def transitions(prev: Option[LastPos], lat: Double, lon: Double,
                   fences: Seq[Fence], nearestFences: Int = 3,
                   grid: Option[graft.query.Geofence.FenceGrid] = None): Seq[(String, Int, String)] = {
@@ -65,9 +66,9 @@ object GeofenceStream {
   def statusStream(points: Dataset[TrackPoint], fences: Seq[Fence]): Dataset[FenceEvent] = {
     val spark = points.sparkSession
     import spark.implicits._
-    // fence sets past the literal cap get the cell-grid index (the batch
-    // operator's ring-join twin): per-point cost becomes ring probes, not
-    // an O(|fences|) scan. Shipped to tasks as a broadcast, not a closure
+    // fence sets past the literal cap get the cell-grid index the batch
+    // operator uses there: per-point cost becomes cell probes, not an
+    // O(|fences|) scan. Shipped to tasks as a broadcast, not a closure
     // capture — one copy per executor however many tasks run.
     val gridB = spark.sparkContext.broadcast(
       if (fences.size > graft.query.Geofence.LiteralFenceMax)

@@ -2,9 +2,10 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-/** Time individual SparkEntry queries in isolation (warm + 2 timed reps) —
- *  the bench's query phase times each once under full-suite contention,
- *  which can't separate plan cost from noise. Usage:
+/** Time individual SparkEntry queries in isolation (warm + 2 timed reps),
+ *  with the number of Spark jobs each rep starts — the bench's query phase
+ *  times each once under full-suite contention, which can't separate plan
+ *  cost from noise. Usage:
  *  runMain graft.tools.QueryProbe <sfDir> <name> [name...] */
 object QueryProbe {
   def main(args: Array[String]): Unit = {
@@ -23,8 +24,10 @@ object QueryProbe {
       // toRdd.count() evaluates the FULL physical plan — .count() lets
       // Catalyst prune key-unique outer joins and under-times any query
       // whose expensive work feeds only pruned branches
-      val n = graft.SparkEntry.queries(name)(spark, sfDir).queryExecution.toRdd.count()
-      println(f"QPROBE $name%-20s rep$rep ${(System.nanoTime() - t0) / 1e9}%7.2f s  rows=$n")
+      val (n, jobs) = org.apache.spark.GraftListenerAccess.jobsOf(spark.sparkContext) {
+        graft.SparkEntry.queries(name)(spark, sfDir).queryExecution.toRdd.count()
+      }
+      println(f"QPROBE $name%-20s rep$rep ${(System.nanoTime() - t0) / 1e9}%7.2f s  rows=$n  jobs=$jobs")
     }
     spark.stop()
   }

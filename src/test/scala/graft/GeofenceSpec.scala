@@ -78,47 +78,57 @@ class GeofenceSpec extends AnyFunSuite {
     assert(out == Set("a", "b", "c"))
   }
 
-  test("join path == literal path row-for-row (cell-keyed ring join parity)") {
-    // a grid of 40 fences over the derived track's region, still below
-    // LiteralFenceMax so BOTH plans can run on the same input
-    val fences = (for (i <- 0 until 8; j <- 0 until 5) yield
-      Fence(f"g$i%02d_$j", -8.2 + i * 0.35, 110.0 + j * 0.5, 20.0 + (i + j) % 3 * 10)).toSeq
+  /** 40 fences over the derived track's region: at most LiteralFenceMax,
+   *  so both plans can run on the same input. */
+  private val grid40 = (for (i <- 0 until 8; j <- 0 until 5) yield
+    Fence(f"g$i%02d_$j", -8.2 + i * 0.35, 110.0 + j * 0.5, 20.0 + (i + j) % 3 * 10)).toSeq
+
+  /** 10k fences on a 0.02 x 0.05 degree lattice, about one per level-13 cell. */
+  private val lattice10k = (0 until 10000).map(i =>
+    Fence(f"k$i%05d", -8.5 + (i % 100) * 0.02, 105.5 + (i / 100) * 0.05, 5.0))
+
+  private def statusKeys(df: org.apache.spark.sql.DataFrame) =
+    df.select("event_id", "fence_key", "seq", "status").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getInt(2), r.getString(3))).toSet
+
+  test("grid path == literal path row-for-row at 40 fences") {
     val track = Derived.track(spark, TestSpark.Sf)
-    def key(r: org.apache.spark.sql.Row) =
-      (r.getLong(0), r.getString(1), r.getInt(2), r.getString(3))
-    val lit = Geofence.fenceStatus(track, fences)
-      .select("event_id", "fence_key", "seq", "status").collect().map(key).toSet
-    val fenceDf = fences.map(f => (f.key, f.lat, f.lon, f.radiusKm))
-      .toDF("fence_key", "flat", "flon", "fradius")
-    val joined = Geofence.fenceStatusJoin(track, fenceDf)
-      .select("event_id", "fence_key", "seq", "status").collect().map(key).toSet
-    assert(joined == lit, s"join plan diverged: ${joined.diff(lit).take(3)} vs ${lit.diff(joined).take(3)}")
+    val lit = statusKeys(Geofence.fenceStatus(track, grid40))
+    val byGrid = statusKeys(Geofence.fenceStatusByGrid(track, grid40, 3))
+    assert(byGrid == lit, s"grid plan diverged: ${byGrid.diff(lit).take(3)} vs ${lit.diff(byGrid).take(3)}")
     assert(lit.nonEmpty)
   }
 
-  test("10k fences plan a broadcast join, not a 10k-element literal") {
-    val fences = (0 until 10000).map(i =>
-      Fence(f"k$i%05d", -8.5 + (i % 100) * 0.02, 105.5 + (i / 100) * 0.05, 5.0))
+  test("past LiteralFenceMax: building runs 0 jobs, collect() no more jobs than the literal path") {
+    val track = Derived.track(spark, TestSpark.Sf)
+    // grid40 shifted by a tenth of a degree, twice over: 80 fences
+    val many = grid40 ++ grid40.map(f => f.copy(key = f.key + "b", lat = f.lat + 0.1))
+    assert(many.size > Geofence.LiteralFenceMax)
+    val (out, buildJobs) = TestSpark.jobsOf(Geofence.fenceStatus(track, many))
+    assert(buildJobs == 0, s"building the grid plan ran $buildJobs jobs")
+    val (rows, gridJobs) = TestSpark.jobsOf(out.collect())
+    val (_, litJobs) = TestSpark.jobsOf(Geofence.fenceStatus(track, grid40).collect())
+    assert(rows.nonEmpty)
+    assert(gridJobs <= litJobs, s"grid path collect() ran $gridJobs jobs, the literal path $litJobs")
+  }
+
+  test("past LiteralFenceMax: a track row with a null lat or lon gives no status rows") {
+    val track = Seq[(Long, Long, Timestamp, Option[Double], Option[Double])](
+        (1L, 1L, ts(0), Some(-7.5), Some(108.0)), (2L, 1L, ts(1), None, Some(108.1)),
+        (3L, 2L, ts(2), Some(-7.4), None), (4L, 2L, ts(3), Some(-7.4), Some(108.1)))
+      .toDF("event_id", "user_id", "ts", "lat", "lon")
+    val events = Geofence.fenceStatus(track, lattice10k)
+      .select("event_id").distinct().collect().map(_.getLong(0)).toSet
+    assert(events == Set(1L, 4L))
+  }
+
+  test("10k fences: no fence-key literal in the plan, 3 nearest per point") {
     val track = Seq((1L, 1L, ts(0), -7.5, 108.0), (2L, 1L, ts(1), -7.4, 108.1))
       .toDF("event_id", "user_id", "ts", "lat", "lon")
-    val fenceDf = fences.map(f => (f.key, f.lat, f.lon, f.radiusKm))
-      .toDF("fence_key", "flat", "flon", "fradius")
-    // the per-round join plans a broadcast hash join over the fence TABLE,
-    // with no fence-key literals anywhere in the plan
-    val roundPlan = Geofence.fenceRoundCandidates(
-      track.withColumn("prev_lat", lit(-999.0)).withColumn("prev_lon", lit(-999.0)),
-      fenceDf, 8, 2).queryExecution.executedPlan.toString
-    assert(roundPlan.contains("BroadcastHashJoin"),
-      s"expected a broadcast join in the large-fence round plan:\n$roundPlan")
-    assert(!roundPlan.contains("k09999"),
-      "fence keys must not be inlined as plan literals")
-    // the dispatching operator itself takes the join path (>LiteralFenceMax)
-    // and its FINAL plan reads checkpointed rounds — also literal-free
-    val out = Geofence.fenceStatus(track, fences)
+    val out = Geofence.fenceStatus(track, lattice10k)
     val plan = out.queryExecution.executedPlan.toString
     assert(!plan.contains("k09999"),
       "fence keys must not be inlined as plan literals")
-    // ...and still emits exactly 3-nearest statuses per point
     val rows = out.collect()
     assert(rows.length >= 2 * 3 && rows.forall(_.getString(5).nonEmpty))
     val perEvent = rows.groupBy(_.getLong(0)).view.mapValues(_.map(_.getString(3)).distinct.length)
@@ -126,8 +136,7 @@ class GeofenceSpec extends AnyFunSuite {
   }
 
   test("FenceGrid: ring-probe k-nearest == full-scan k-nearest over 10k fences") {
-    val fences = (0 until 10000).map(i =>
-      Fence(f"k$i%05d", -8.5 + (i % 100) * 0.02, 105.5 + (i / 100) * 0.05, 5.0))
+    val fences = lattice10k
     val grid = Geofence.FenceGrid.build(fences)
     val points = (0 until 50).map(i => (-8.6 + i * 0.045, 105.3 + i * 0.11)) ++
       Seq((-20.0, 150.0), (-8.5, 105.5)) // far outside + exactly on a center
@@ -140,20 +149,13 @@ class GeofenceSpec extends AnyFunSuite {
     }
   }
 
-  test("streaming geofence at 10k fences (cell-grid path) == batch ring join") {
-    val fences = (0 until 10000).map(i =>
-      Fence(f"k$i%05d", -8.5 + (i % 100) * 0.02, 105.5 + (i / 100) * 0.05, 5.0))
-    assert(fences.size > Geofence.LiteralFenceMax)
+  test("streaming geofence at 10k fences == batch, both on the fence grid") {
     val track = (0 until 24).map { i =>
       (i.toLong, (i % 4).toLong, ts(i), -8.4 + (i % 7) * 0.15, 105.6 + (i % 5) * 0.9)
     }.toDF("event_id", "user_id", "ts", "lat", "lon")
-    val batch = Geofence.fenceStatus(track, fences) // dispatches to the ring join
-      .select("event_id", "fence_key", "seq", "status").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getInt(2), r.getString(3))).toSet
-    val stream = GeofenceStream.runBatchAsStream(spark, track, fences,
-        queryName = "geofence_stream_10k")
-      .select("event_id", "fence_key", "seq", "status").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getInt(2), r.getString(3))).toSet
+    val batch = statusKeys(Geofence.fenceStatus(track, lattice10k))
+    val stream = statusKeys(GeofenceStream.runBatchAsStream(spark, track, lattice10k,
+      queryName = "geofence_stream_10k"))
     assert(batch.nonEmpty && stream == batch,
       s"stream/batch diverged: ${stream.diff(batch).take(3)} vs ${batch.diff(stream).take(3)}")
   }
@@ -186,6 +188,29 @@ class GeofenceSpec extends AnyFunSuite {
         .toDF("event_id", "user_id", "ts", "lat", "lon"))
       .select("status").collect().map(_.getString(0)).toSet
     assert(out == Set("ENTER", "INSIDE"))
+  }
+
+  test("FenceStore crash window: a version cut before its manifest leaves the previous one readable") {
+    import graft.pipeline.TableIO
+    val dir = java.nio.file.Files.createTempDirectory("fence-crash").toString
+    val store = new Geofence.FenceStore(spark, dir)
+    store.addCollection("jakarta")
+    store.upsertFencePoint("jakarta", Fence("a", -7.5, 110.8, 2.0))
+    val Seq(committed) = TableIO.stages(dir, "fences_") // older versions are gone
+    // the next version's data landed (_SUCCESS written), its manifest did not
+    val cut = f"fences_${committed.stripPrefix("fences_").toInt + 1}%06d"
+    Seq(("bogor", "z", -6.6, 106.8, 1.0)).toDF("collection", "fence_key", "flat", "flon", "fradius")
+      .write.parquet(s"$dir/$cut")
+    assert(new java.io.File(s"$dir/$cut/_SUCCESS").exists())
+    val reopened = new Geofence.FenceStore(spark, dir)
+    assert(reopened.fences("jakarta") == Seq(Fence("a", -7.5, 110.8, 2.0)))
+    assert(!reopened.collectionExists("bogor"))
+    // the next upsert writes over the cut version and commits it
+    reopened.upsertFencePoint("jakarta", Fence("b", -7.6, 110.9, 3.0))
+    assert(TableIO.stages(dir, "fences_") == Seq(cut))
+    assert(new Geofence.FenceStore(spark, dir).fences("jakarta") ==
+      Seq(Fence("a", -7.5, 110.8, 2.0), Fence("b", -7.6, 110.9, 3.0)))
+    assert(!reopened.collectionExists("bogor"))
   }
 
   test("streaming flatMapGroupsWithState output equals the batch operator") {
