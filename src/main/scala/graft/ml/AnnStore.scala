@@ -13,78 +13,72 @@ import graft.pipeline.TableIO
  * [[Ann.pqCentroids]] outputs) were driver arrays that died with the
  * session, so a fresh session had to RETRAIN (two k-means runs over the
  * corpus) before it could probe the at-rest lists. Now the codebooks are
- * tables:
+ * tables, and each model is ONE TableIO stage whose tables commit together:
  *
- *  - `ann_coarse` (list, centroid) — nlist rows;
- *  - `ann_fine` (s, c, centroid) — nsub x ksub rows;
- *  - `ann_lists` (vec_id, codes, list) PARTITIONED BY list — the serving
- *    layout, probes prune at the directory level;
- *  - `ann_ivf_centroids` / `ann_ivf_lists` — the same pair for the plain
+ *  - stage `ann_pq`: `coarse` (list, centroid) — nlist rows; `fine`
+ *    (s, c, centroid) — nsub x ksub rows; `lists` (vec_id, codes, list)
+ *    PARTITIONED BY list — the serving layout, probes prune at the
+ *    directory level;
+ *  - stage `ann_ivf`: `centroids` / `lists` — the same pair for the plain
  *    (uncompressed-vector) IVF index.
  *
  * Serving ([[ivfPqFromStore]] / [[ivfFromStore]]) takes ONLY (spark, dir,
  * query): training is impossible by construction — the cost of a fresh-
  * session probe is two codebook-sized collects (nlist + nsub·ksub rows)
- * plus the pruned list scan. All writes go through [[TableIO.stage]], so
- * they are idempotent/resumable and carry lineage manifests like every
- * other staged artifact.
+ * plus the pruned list scan. All writes go through TableIO stages, so they
+ * are idempotent/resumable and carry lineage manifests like every other
+ * staged artifact; reads take the manifest's DDL (no schema inference).
  */
 object AnnStore {
+
+  /** Stages of the IVF-PQ and the plain-IVF model. */
+  val PqStage = "ann_pq"
+  val IvfStage = "ann_ivf"
 
   /** Persist a trained IVF-PQ model ([[Ann.ivfPqIndex]] output). */
   def writeIvfPq(spark: SparkSession, dir: String, index: DataFrame,
                  coarse: Array[Array[Double]],
                  fine: Array[Array[Array[Double]]]): Unit = {
     import spark.implicits._
-    // write-only stages: the returned handles were discarded, and each
-    // construction ran partition discovery over the fresh stage (TableIO
-    // .stageWrite scaladoc)
-    TableIO.stageWrite(spark, dir, "ann_coarse") {
-      coarse.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-        .toDF("list", "centroid")
-    }
-    TableIO.stageWrite(spark, dir, "ann_fine") {
-      (for (s <- fine.indices; c <- fine(s).indices)
-        yield (s, c, fine(s)(c).toSeq)).toDF("s", "c", "centroid")
-    }
-    TableIO.stageWrite(spark, dir, "ann_lists", partitionBy = Seq("list")) { index }
+    TableIO.write(spark, dir, PqStage)(
+      centroidTable(spark, "coarse", coarse),
+      TableIO.Table("fine")(_ => (for (s <- fine.indices; c <- fine(s).indices)
+        yield (s, c, fine(s)(c).toSeq)).toDF("s", "c", "centroid")),
+      TableIO.Table("lists", partitionBy = Seq("list"))(_ => index))
   }
 
   /** Persist a trained plain-IVF model (centroids + [[Ann.ivfAssign]]
    *  output). The assigned table keeps the raw vectors — the
    *  uncompressed serving tier; IVF-PQ above is the memory-bound one. */
   def writeIvf(spark: SparkSession, dir: String, assigned: DataFrame,
-               centroids: Array[Array[Double]]): Unit = {
+               centroids: Array[Array[Double]]): Unit =
+    TableIO.write(spark, dir, IvfStage)(
+      centroidTable(spark, "centroids", centroids),
+      TableIO.Table("lists", partitionBy = Seq("list"))(_ => assigned))
+
+  /** Centroids as a (list, centroid) table, read back by [[centroids]]. */
+  private def centroidTable(spark: SparkSession, name: String,
+                            cs: Array[Array[Double]]): TableIO.Table = {
     import spark.implicits._
-    TableIO.stageWrite(spark, dir, "ann_ivf_centroids") {
-      centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-        .toDF("list", "centroid")
-    }
-    TableIO.stageWrite(spark, dir, "ann_ivf_lists", partitionBy = Seq("list")) { assigned }
+    TableIO.Table(name)(_ => cs.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
+      .toDF("list", "centroid"))
   }
 
-  private def centroidRows(spark: SparkSession, dir: String,
-                           name: String): Array[(Int, Array[Double])] = {
-    require(TableIO.isComplete(dir, name),
-      s"stage $name missing under $dir — run the AnnStore writer first")
-    spark.read.parquet(s"$dir/$name")
-      .collect().map(r => (r.getInt(0), r.getSeq[Double](r.length - 1).toArray))
-  }
+  private def centroids(spark: SparkSession, dir: String, stage: String,
+                        table: String): Array[Array[Double]] =
+    TableIO.read(spark, dir, stage, table).collect()
+      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).sortBy(_._1).map(_._2)
 
   /** Load the IVF-PQ codebooks back into driver arrays (bit-exact:
    *  doubles round-trip parquet losslessly). */
   def loadCodebooks(spark: SparkSession, dir: String)
       : (Array[Array[Double]], Array[Array[Array[Double]]]) = {
-    val coarse = centroidRows(spark, dir, "ann_coarse")
-      .sortBy(_._1).map(_._2)
-    require(TableIO.isComplete(dir, "ann_fine"),
-      s"stage ann_fine missing under $dir — run AnnStore.writeIvfPq first")
-    val fineRows = spark.read.parquet(s"$dir/ann_fine")
+    val fineRows = TableIO.read(spark, dir, PqStage, "fine")
       .collect().map(r => ((r.getInt(0), r.getInt(1)), r.getSeq[Double](2).toArray))
       .toMap
     val nsub = fineRows.keys.map(_._1).max + 1
     val ksub = fineRows.keys.map(_._2).max + 1
-    (coarse, Array.tabulate(nsub, ksub)((s, c) => fineRows((s, c))))
+    (centroids(spark, dir, PqStage, "coarse"), Array.tabulate(nsub, ksub)((s, c) => fineRows((s, c))))
   }
 
   /** Probe-limited ADC over the persisted IVF-PQ model: codebooks load
@@ -93,7 +87,7 @@ object AnnStore {
   def ivfPqFromStore(spark: SparkSession, dir: String, query: Seq[Double],
                      nprobe: Int): DataFrame = {
     val (coarse, fine) = loadCodebooks(spark, dir)
-    Ann.ivfPqAdc(spark.read.parquet(s"$dir/ann_lists"), coarse, fine, query,
+    Ann.ivfPqAdc(TableIO.read(spark, dir, PqStage, "lists"), coarse, fine, query,
       Ann.probeLists(coarse, query, nprobe))
   }
 
@@ -122,10 +116,9 @@ object AnnStore {
     // recomputed. The write path returns the assigned rows it just staged
     // (identical by the write's contract) instead of re-listing the fresh
     // stage's partition directories (TableIO.stageWrite scaladoc).
-    if (TableIO.isComplete(dir, name)) return spark.read.parquet(s"$dir/$name")
-    val centroids = centroidRows(spark, dir, "ann_ivf_centroids")
-      .sortBy(_._1).map(_._2)
-    val assigned = Ann.ivfAssign(vecs, idCol, vecCol, centroids)
+    if (TableIO.isComplete(dir, name)) return TableIO.read(spark, dir, name)
+    val assigned = Ann.ivfAssign(vecs, idCol, vecCol,
+      centroids(spark, dir, IvfStage, "centroids"))
     TableIO.stageWrite(spark, dir, name, partitionBy = Seq("list")) { assigned }
     assigned
   }
@@ -135,12 +128,10 @@ object AnnStore {
    *  probed lists. */
   def ivfFromStore(spark: SparkSession, dir: String, query: Seq[Double],
                    k: Int, nprobe: Int): DataFrame = {
-    val centroids = centroidRows(spark, dir, "ann_ivf_centroids")
-      .sortBy(_._1).map(_._2)
-    val lists = (s"$dir/ann_ivf_lists" +:
-        TableIO.stages(dir, IvfDeltaPrefix).map(n => s"$dir/$n"))
-      .map(p => spark.read.parquet(p).select(col("vec_id"), col("vec"), col("list")))
+    val lists = (TableIO.read(spark, dir, IvfStage, "lists") +:
+        TableIO.stages(dir, IvfDeltaPrefix).map(TableIO.read(spark, dir, _)))
+      .map(_.select(col("vec_id"), col("vec"), col("list")))
       .reduce(_ unionByName _)
-    Ann.ivfTopK(lists, centroids, query, k, nprobe)
+    Ann.ivfTopK(lists, centroids(spark, dir, IvfStage, "centroids"), query, k, nprobe)
   }
 }

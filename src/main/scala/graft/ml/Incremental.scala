@@ -1,6 +1,6 @@
 package graft.ml
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -52,10 +52,10 @@ object Incremental {
   /** Stage-name prefix for accepted-batch state tables (exact dedup). */
   val StatePrefix = "state_"
 
-  /** Stage-name prefixes for the near-dup (minhash) state: the banded
-   *  signature index (probe side) and the accepted docs (refine side). */
-  val NsigPrefix = "nsig_"
-  val NdocPrefix = "ndoc_"
+  /** Stage-name prefix for the near-dup (minhash) state: one stage per
+   *  batch holding the accepted docs (`doc`, refine side) and their banded
+   *  signature index (`sig`, probe side). */
+  val NearPrefix = "near_"
 
   /** Buckets for the state tables — a fixed layout every batch shares
    *  (bucketed joins require equal bucket counts on both staged sides). */
@@ -84,19 +84,48 @@ object Incremental {
       case _ => ()
     })
 
-  private def stateTable(spark: SparkSession, stateDir: String,
-                         name: String, key: String = "h"): DataFrame =
-    TableIO.bucketedStage(spark, stateDir, name, key, DefaultBuckets) {
-      sys.error(s"state stage $name under $stateDir is incomplete — " +
-        "it must have been written by a previous ingest")
-    }
+  private def seqOf(name: String): Int = name.split("_", 3)(1).toInt
 
   /** Next stage sequence number: max existing + 1 (NOT the stage count —
    *  after [[compact]] retires stages, a count-derived number could collide
    *  with a surviving higher-numbered stage and silently resume it). */
-  private def nextSeq(names: Seq[String], prefix: String = StatePrefix): Int =
-    names.map(_.stripPrefix(prefix).takeWhile(_.isDigit).toInt)
-      .foldLeft(-1)(math.max) + 1
+  private def nextSeq(names: Seq[String]): Int = names.map(seqOf).foldLeft(-1)(math.max) + 1
+
+  private def requireBatchName(batchName: String): Unit =
+    require(batchName.nonEmpty && batchName.forall(c =>
+        c.isLetterOrDigit || c == '-' || c == '.'),
+      s"batch name must be [A-Za-z0-9.-]+: $batchName")
+
+  /** The stage of `names` (`<prefix><seq>_<batch>`) that ingested `batchName`. */
+  private def stageOf(names: Seq[String], batchName: String): Option[String] =
+    names.find(_.split("_", 3).last == batchName)
+
+  /** Run `body` with Spark's requireAllClusterKeysForCoPartition off. The
+   *  state joins key on more columns than the state is bucketed on (h, or
+   *  band_key, co-locates every match; the rest refines it), and the
+   *  default `true` would reject that subset co-partitioning, re-shuffle
+   *  BOTH sides and disable the bucketed scan — precisely the history
+   *  re-shuffle this layout exists to avoid. Planning happens inside the
+   *  stage writes in `body`, so the previous value is restored after. */
+  private def withSubsetCoPartitioning[T](spark: SparkSession)(body: => T): T = {
+    val kReq = "spark.sql.requireAllClusterKeysForCoPartition"
+    val prev = spark.conf.get(kReq)
+    spark.conf.set(kReq, "false")
+    try body finally spark.conf.set(kReq, prev)
+  }
+
+  /** The live exact-dedup state stages. A [[compact]]ed stage declares in
+   *  its manifest (`folded`) the last sequence it folds; stages at or below
+   *  it are retired: a compaction cut after its commit and before deleting
+   *  them leaves them listed, so they are skipped here and deleted. */
+  private def stateStages(stateDir: String): Seq[String] = {
+    val names = TableIO.stages(stateDir, StatePrefix)
+    val folded = names.filter(_.split("_", 3).last.startsWith("compact")).lastOption
+      .fold(-1L)(TableIO.manifest(stateDir, _).table().stats("folded"))
+    val (retired, live) = names.partition(seqOf(_) <= folded)
+    retired.foreach(n => org.apache.commons.io.FileUtils.deleteQuietly(Paths.get(stateDir, n).toFile))
+    live
+  }
 
   /**
    * Ingest one batch: returns (and persists) its accepted rows
@@ -108,48 +137,35 @@ object Incremental {
    */
   def ingestExact(spark: SparkSession, stateDir: String, batchName: String,
                   batch: DataFrame, idCol: String, textCol: String): DataFrame = {
-    require(batchName.nonEmpty && batchName.forall(c =>
-        c.isLetterOrDigit || c == '-' || c == '.'),
-      s"batch name must be [A-Za-z0-9.-]+: $batchName")
+    requireBatchName(batchName)
     require(!batchName.startsWith("compact"),
       s"batch names starting with 'compact' are reserved for [[compact]]: $batchName")
-    val prior = TableIO.stages(stateDir, StatePrefix)
-    prior.find(_.split("_", 3).last == batchName) match {
-      case Some(existing) => return stateTable(spark, stateDir, existing)
-      case None => ()
-    }
-    Files.createDirectories(Paths.get(stateDir))
+    val prior = stateStages(stateDir)
+    val existing = stageOf(prior, batchName)
+    if (existing.nonEmpty) return TableIO.read(spark, stateDir, existing.get)
     val name = f"$StatePrefix${nextSeq(prior)}%06d_$batchName"
     val firsts = batchFirsts(batch, idCol, textCol)
     val survivors = prior.foldLeft(firsts) { (acc, st) =>
-      val state = stateTable(spark, stateDir, st)
+      val state = TableIO.read(spark, stateDir, st)
         .select(col("h").as("s_h"), col("text").as("s_text"))
       acc.join(state,
         acc("h") === state("s_h") && acc("text") <=> state("s_text"),
         "left_anti")
     }
-    // the join keys are (h, text) but the state is bucketed on h alone (h
-    // already co-locates every equal-(h, text) pair; text is the collision-
-    // exactness refinement, not a distribution key) — Spark's default
-    // requireAllClusterKeysForCoPartition=true would reject the subset
-    // co-partitioning, re-shuffle BOTH sides and disable the bucketed scan,
-    // which is precisely the history re-shuffle this layout exists to avoid.
-    // Relax it for the ingest (planning happens inside the stage write
-    // below, so the previous value is restored before returning).
-    val kReq = "spark.sql.requireAllClusterKeysForCoPartition"
-    val prev = spark.conf.get(kReq)
-    spark.conf.set(kReq, "false")
-    try TableIO.bucketedStage(spark, stateDir, name, "h", DefaultBuckets) { survivors }
-    finally spark.conf.set(kReq, prev)
+    // the join keys are (h, text) but the state is bucketed on h alone:
+    // text is the collision-exactness refinement, not a distribution key
+    withSubsetCoPartitioning(spark) {
+      TableIO.bucketedStage(spark, stateDir, name, "h", DefaultBuckets) { survivors }
+    }
   }
 
   /** The accepted corpus so far — the union of every batch's state stage
    *  (what a one-shot [[Dedup.exact]] over all ingested rows would keep,
    *  with cross-batch ties resolved by arrival order). */
   def accepted(spark: SparkSession, stateDir: String): DataFrame = {
-    val names = TableIO.stages(stateDir, StatePrefix)
+    val names = stateStages(stateDir)
     require(names.nonEmpty, s"no completed state stages under $stateDir")
-    names.map(stateTable(spark, stateDir, _)).reduce(_ unionByName _)
+    names.map(TableIO.read(spark, stateDir, _)).reduce(_ unionByName _)
   }
 
   /**
@@ -168,13 +184,14 @@ object Incremental {
    *  - cross-batch: a surviving doc is rejected when any ACCEPTED doc from
    *    an earlier batch is a banding candidate refining to >= `threshold`.
    *
-   * State per batch, both TableIO-bucketed:
-   *  - `nsig_<seq>_<batch>` (doc_id, band, band_key) bucketed on band_key —
-   *    the banded signature index the new batch PROBES; the state side of
-   *    the probe join arrives pre-partitioned (subset co-partitioning on
-   *    band_key), so the signature history never re-shuffles;
-   *  - `ndoc_<seq>_<batch>` (doc_id, text) bucketed on doc_id — the refine
-   *    side. Accepted TEXT is fetched ONLY for candidate partners (a
+   * State per batch: one stage `near_<seq>_<batch>` of two TableIO-bucketed
+   *  tables, committed together by the stage's one manifest rename:
+   *  - `sig` (band_key, band, doc_id) bucketed on band_key — the banded
+   *    signature index the new batch PROBES; the state side of the probe
+   *    join arrives pre-partitioned (subset co-partitioning on band_key),
+   *    so the signature history never re-shuffles;
+   *  - `doc` (doc_id, text) bucketed on doc_id — the refine side. Accepted
+   *    TEXT is fetched ONLY for candidate partners (a
    *    doc_id semi-join against the bucketed table): the state's text is
    *    never rescanned wholesale, which is the difference between probing
    *    an index and re-reading 100 TB of history per batch.
@@ -189,56 +206,20 @@ object Incremental {
    * or snapshot-prefixed ids).
    *
    * The signature index is ~4 small rows per accepted doc; `maxBucket`
-   * carries the usual banding discriminativeness cap. Crash between the
-   * two stage writes resumes cleanly: the batch is keyed by name, both
-   * stages are individually idempotent, and an orphan half is completed on
-   * re-ingest (the stage suffix is reconstructed from the existing half).
-   * That recovery is ENFORCED, not just documented: ingesting a DIFFERENT
-   * batch while another batch's half-completed state exists fails loudly
-   * (an orphan ndoc_ without its nsig_ would silently exempt its docs from
-   * every later batch's near-dup check). Returns the accepted
-   * (doc_id, text) table.
+   * carries the usual banding discriminativeness cap. A crash before the
+   * manifest rename leaves the batch's stage unlisted: later batches never
+   * see half of it, and re-ingesting the batch (keyed by name) rewrites it
+   * whole. Returns the accepted (doc_id, text) table.
    */
   def ingestMinhash(spark: SparkSession, stateDir: String, batchName: String,
                     batch: DataFrame, idCol: String, textCol: String,
                     threshold: Double, shingleN: Int = 3,
                     maxBucket: Option[Int] = None): DataFrame = {
-    require(batchName.nonEmpty && batchName.forall(c =>
-        c.isLetterOrDigit || c == '-' || c == '.'),
-      s"batch name must be [A-Za-z0-9.-]+: $batchName")
-    val ndocPrior = TableIO.stages(stateDir, NdocPrefix)
-    val nsigPrior = TableIO.stages(stateDir, NsigPrefix)
-    def batchOf(n: String) = n.split("_", 3).last
-    val ownSuffix = ndocPrior.find(n => batchOf(n) == batchName)
-      .map(_.stripPrefix(NdocPrefix))
-      .orElse(nsigPrior.find(n => batchOf(n) == batchName).map(_.stripPrefix(NsigPrefix)))
-      .getOrElse {
-        val seq = math.max(nextSeq(ndocPrior, NdocPrefix), nextSeq(nsigPrior, NsigPrefix))
-        f"$seq%06d_$batchName"
-      }
-    val (ndocName, nsigName) = (NdocPrefix + ownSuffix, NsigPrefix + ownSuffix)
-    if (TableIO.isComplete(stateDir, ndocName) && TableIO.isComplete(stateDir, nsigName))
-      return stateTable(spark, stateDir, ndocName, key = "doc_id")
-    Files.createDirectories(Paths.get(stateDir))
-    val priorSigs = nsigPrior.filterNot(_ == nsigName)
-    val priorDocs = ndocPrior.filterNot(_ == ndocName)
-    // Orphan-state guard: an ingest that crashed between its two stage
-    // writes leaves one completed half; the recovery contract is that the
-    // SAME batch is re-ingested (the suffix reconstruction above completes
-    // it). If the pipeline instead moved on to a DIFFERENT batch, the
-    // orphan's accepted docs would sit in ndoc_ with no signature index —
-    // every later batch would silently skip near-dup checks against them.
-    // Enforce the contract loudly instead of documenting it.
-    val orphanSuffixes =
-      (priorDocs.map(_.stripPrefix(NdocPrefix)).toSet union
-        priorSigs.map(_.stripPrefix(NsigPrefix)).toSet) diff
-      (priorDocs.map(_.stripPrefix(NdocPrefix)).toSet intersect
-        priorSigs.map(_.stripPrefix(NsigPrefix)).toSet)
-    require(orphanSuffixes.isEmpty,
-      s"half-completed near-dup state under $stateDir: batch(es) " +
-        s"${orphanSuffixes.toSeq.sorted.mkString(", ")} have only one of their " +
-        "nsig_/ndoc_ stages — re-ingest those batches (same name, same rows) " +
-        "to complete them before ingesting a new batch")
+    requireBatchName(batchName)
+    val prior = TableIO.stages(stateDir, NearPrefix)
+    val existing = stageOf(prior, batchName)
+    if (existing.nonEmpty) return TableIO.read(spark, stateDir, existing.get, "doc")
+    val name = f"$NearPrefix${nextSeq(prior)}%06d_$batchName"
 
     val b = batch.select(col(idCol).as("doc_id"), col(textCol).as("text"))
       .localCheckpoint(true)
@@ -248,10 +229,7 @@ object Incremental {
     var cands: DataFrame = null
     var refineIn: DataFrame = null
 
-    val kReq = "spark.sql.requireAllClusterKeysForCoPartition"
-    val prev = spark.conf.get(kReq)
-    spark.conf.set(kReq, "false")
-    try {
+    try withSubsetCoPartitioning(spark) {
       // ONE refine per ingest (optimization round): the in-batch and
       // cross-batch verifications used to run as two jaccardRefine chains
       // separated by an inOk barrier (probe with survivors only). The
@@ -267,7 +245,7 @@ object Incremental {
       //    global banding+refine pair list, so this shape matches it more
       //    directly. Saves a full refine chain (≈6 shuffle stages) and the
       //    survivor checkpoint per ingest; measured d11 ~10 -> ~8 s sf0.1.
-      val accepted = if (priorSigs.isEmpty) {
+      val accepted = if (prior.isEmpty) {
         val rejects = Dedup.jaccardRefine(b, "doc_id", "text", shingleN,
             threshold, inPairs)
           .select(col("id2").as("doc_id")).distinct()
@@ -290,8 +268,8 @@ object Incremental {
         val probe = maxBucket match {
           case None => rawProbe
           case Some(cap) =>
-            val stateCnt = priorSigs.map { st =>
-              stateTable(spark, stateDir, st, key = "band_key")
+            val stateCnt = prior.map { st =>
+              TableIO.read(spark, stateDir, st, "sig")
                 .select(col("band"), col("band_key"))
             }.reduce(_ unionByName _)
               .groupBy(col("band"), col("band_key")).agg(count(lit(1)).as("sn"))
@@ -303,17 +281,17 @@ object Incremental {
             rawProbe.join(ok, Seq("band", "band_key"))
               .select(col("doc_id"), col("band"), col("band_key"))
         }
-        cands = priorSigs.map { st =>
-          val state = stateTable(spark, stateDir, st, key = "band_key")
+        cands = prior.map { st =>
+          val state = TableIO.read(spark, stateDir, st, "sig")
             .select(col("band"), col("band_key"), col("doc_id").as("id1"))
           probe.join(state, Seq("band", "band_key"))
             .select(col("id1"), col("doc_id").as("id2"))
         }.reduce(_ unionByName _).distinct().localCheckpoint(true)
         // refine only the candidate partners: state text via doc_id
-        // semi-joins against the bucketed ndoc tables, never a full rescan
+        // semi-joins against the bucketed doc tables, never a full rescan
         val partnerIds = cands.select(col("id1").as("doc_id")).distinct()
-        val partners = priorDocs.map { st =>
-          stateTable(spark, stateDir, st, key = "doc_id")
+        val partners = prior.map { st =>
+          TableIO.read(spark, stateDir, st, "doc")
             .join(partnerIds, Seq("doc_id"), "left_semi")
             .select(col("doc_id"), col("text"))
         }.reduce(_ unionByName _)
@@ -333,16 +311,15 @@ object Incremental {
           .select(col("id2").as("doc_id")).distinct()
         b.join(rejects, Seq("doc_id"), "left_anti")
       }
-      val ndoc = TableIO.bucketedStage(spark, stateDir, ndocName, "doc_id",
-        DefaultBuckets) { accepted.select(col("doc_id"), col("text")) }
-      TableIO.bucketedStage(spark, stateDir, nsigName, "band_key", DefaultBuckets) {
-        Dedup.minhashBands(
-          sigs.join(ndoc.select(col("doc_id")), Seq("doc_id"), "left_semi"))
-          .select(col("band_key"), col("band"), col("doc_id"))
-      }
-      ndoc
+      TableIO.write(spark, stateDir, name)(
+        TableIO.Table("doc", bucket = Some(("doc_id", DefaultBuckets)))(
+          _ => accepted.select(col("doc_id"), col("text"))),
+        TableIO.Table("sig", bucket = Some(("band_key", DefaultBuckets)))(doc =>
+          Dedup.minhashBands(
+            sigs.join(doc("doc").select(col("doc_id")), Seq("doc_id"), "left_semi"))
+            .select(col("band_key"), col("band"), col("doc_id"))))
+      TableIO.read(spark, stateDir, name, "doc")
     } finally {
-      spark.conf.set(kReq, prev)
       // release this ingest's checkpoint blocks: both outputs are staged on
       // disk, so the intermediates would only pile up across a long-running
       // ingest loop
@@ -382,23 +359,16 @@ object Incremental {
   def ingestPack(spark: SparkSession, stateDir: String, batchName: String,
                  batch: DataFrame, idCol: String, toksCol: String,
                  budget: Long): DataFrame = {
-    require(batchName.nonEmpty && batchName.forall(c =>
-        c.isLetterOrDigit || c == '-' || c == '.'),
-      s"batch name must be [A-Za-z0-9.-]+: $batchName")
+    requireBatchName(batchName)
     val prior = TableIO.stages(stateDir, PackPrefix)
-    prior.find(_.split("_", 3).last == batchName) match {
-      case Some(existing) =>
-        // read with the manifest's data-column DDL (no schema-inference
-        // job); partition-directory type inference narrows shard to int —
-        // restore the packer's long (offsets reach ~1e14/budget at 100 TB)
-        return spark.read.schema(TableIO.manifest(stateDir, existing).schema)
-          .parquet(s"$stateDir/$existing")
-          .select(col(idCol), col("toks"), col("off"), col("shard").cast("long").as("shard"))
-      case None => ()
-    }
-    Files.createDirectories(Paths.get(stateDir))
+    val existing = stageOf(prior, batchName)
+    // read with the manifest's data-column DDL (no schema-inference job);
+    // partition-directory type inference narrows shard to int — restore
+    // the packer's long (offsets reach ~1e14/budget at 100 TB)
+    if (existing.nonEmpty) return TableIO.read(spark, stateDir, existing.get)
+      .select(col(idCol), col("toks"), col("off"), col("shard").cast("long").as("shard"))
     val (base, maxPrior) = prior.foldLeft((0L, Long.MinValue)) { case ((b, m), st) =>
-      val stats = TableIO.manifest(stateDir, st).stats
+      val stats = TableIO.manifest(stateDir, st).table().stats
       def stat(k: String) = stats.getOrElse(k, sys.error(s"pack stage $st declares no $k"))
       (b + stat("sum_toks"), math.max(m, stat("max_id")))
     }
@@ -418,7 +388,7 @@ object Incremental {
           s"$maxPrior — the packed layout orders by id, so out-of-order ids " +
           "would require repacking history")
     }
-    val name = f"$PackPrefix${nextSeq(prior, PackPrefix)}%06d_$batchName"
+    val name = f"$PackPrefix${nextSeq(prior)}%06d_$batchName"
     val packed = Packing.tokenBudgetShards(
         batch.select(col(idCol), col(toksCol).cast("long").as("toks")),
         idCol, "toks", budget)
@@ -442,30 +412,28 @@ object Incremental {
    * stage and retire the originals, so ingest cost returns to a single
    * anti-join instead of O(batches). Crash-safe without a transaction log:
    * the compacted stage is written FIRST (under the next sequence number,
-   * so it can never silently resume an existing stage), then the originals
-   * are deleted. A crash between the two leaves duplicate content across
-   * stages, which is harmless to ingest (an anti-join rejects against
-   * either copy) and is re-collapsed by the next compact — the fold
-   * aggregates per (h, text), idempotent under whole-row duplication.
-   * Union-then-aggregate shuffles once on (h, text); the next compaction
-   * pass at 100 TB would sort-merge the bucketed inputs instead, the same
-   * subset-co-partition trick as ingest — left as the documented upgrade.
+   * so it can never silently resume an existing stage) and its manifest
+   * declares the last sequence it folds (`folded`); its one rename retires
+   * every stage at or below it, which the state listing skips from then on
+   * and deletes. A crash before the rename leaves the originals live and
+   * the fold unlisted. Union-then-aggregate shuffles once on (h, text);
+   * the next compaction pass at 100 TB would sort-merge the bucketed inputs
+   * instead, the same subset-co-partition trick as ingest — left as the
+   * documented upgrade.
    */
   def compact(spark: SparkSession, stateDir: String): DataFrame = {
-    val names = TableIO.stages(stateDir, StatePrefix)
+    val names = stateStages(stateDir)
     require(names.nonEmpty, s"no completed state stages under $stateDir")
-    if (names.size == 1) return stateTable(spark, stateDir, names.head)
+    if (names.size == 1) return TableIO.read(spark, stateDir, names.head)
     val seq = nextSeq(names)
-    val folded = names.map(stateTable(spark, stateDir, _)).reduce(_ unionByName _)
-      .groupBy(col("h"), col("text"))
-      .agg(min(col("id")).as("id"), max(col("n_dups")).as("n_dups"))
-      .select(col("h"), col("id"), col("text"), col("n_dups"))
-    val out = TableIO.bucketedStage(spark, stateDir,
-      f"$StatePrefix$seq%06d_compact$seq", "h", DefaultBuckets) { folded }
-    names.foreach { n =>
-      org.apache.commons.io.FileUtils.deleteQuietly(
-        Paths.get(stateDir, n).toFile)
-    }
-    out
+    val name = f"$StatePrefix$seq%06d_compact$seq"
+    TableIO.write(spark, stateDir, name)(TableIO.Table("", bucket = Some(("h", DefaultBuckets)),
+        stats = Map("folded" -> (seq - 1L)))(_ =>
+      names.map(TableIO.read(spark, stateDir, _)).reduce(_ unionByName _)
+        .groupBy(col("h"), col("text"))
+        .agg(min(col("id")).as("id"), max(col("n_dups")).as("n_dups"))
+        .select(col("h"), col("id"), col("text"), col("n_dups"))))
+    stateStages(stateDir) // deletes the folded stages
+    TableIO.read(spark, stateDir, name)
   }
 }

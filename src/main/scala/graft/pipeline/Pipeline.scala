@@ -35,7 +35,7 @@ object Pipeline {
       val t0 = System.nanoTime()
       val df = TableIO.stage(spark, outDir, name, partitionBy)(compute)
       // exact: the manifest sums the parquet footers the write produced
-      val rows = TableIO.manifest(outDir, name).rows
+      val rows = TableIO.manifest(outDir, name).table().rows
       val wall = (System.nanoTime() - t0) / 1e9
       metrics += ((name, rows, wall, resumed))
       println(s"""{"stage":"$name","rows":$rows,"wall_sec":$wall,"resumed":$resumed}""")

@@ -135,8 +135,8 @@ object Geofence {
 
     /** The newest complete version, read with its manifest's DDL: no
      *  schema-inference job per read. */
-    def load(): DataFrame = TableIO.stages(dir, Prefix).lastOption.fold(emptyTable)(st =>
-      spark.read.schema(TableIO.manifest(dir, st).schema).parquet(s"$dir/$st"))
+    def load(): DataFrame =
+      TableIO.stages(dir, Prefix).lastOption.fold(emptyTable)(TableIO.read(spark, dir, _))
 
     /** Every stored row, in one job; fence tables are broadcast-scale. */
     private def all(): Seq[Row] = load().collect().toSeq

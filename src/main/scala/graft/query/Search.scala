@@ -42,7 +42,7 @@ object ScoringConstants {
  * Query plan shape: every posting row carries what scoring needs —
  * (term, doc_id, tf, len, df), the field length and the term's df over
  * both fields — built once with the index (one cached table per field
- * fresh, the `idx_postings_*` stages at rest). A BM25F request is then
+ * fresh, the store's `postings_*` tables at rest). A BM25F request is then
  * one term-pruned scan of both fields' postings (`isin` on term,
  * partition/row-group prunable), per-row saturation and idf as column
  * arithmetic under literal per-field stats and query-term multiplicities,
@@ -59,7 +59,7 @@ class SearchIndex(docs: DataFrame, idCol: String, nameCol: String, addrCol: Stri
   // bucketed tables ARE the index — no cache, term lookups prune at scan.
 
   /** Vocabulary across both fields (term, freq, df). Fresh build: cached
-   *  in-session. Loaded from a store: the bucketed `idx_vocab` table is
+   *  in-session. Loaded from a store: the store's bucketed `vocab` table is
    *  served as-is (term lookups prune at scan, no rebuild). */
   lazy val vocabulary: DataFrame = prebuilt.map(_.vocab).getOrElse(
     SearchIndex.vocabOf(TextIndex.postingsWithLen(docs, idCol, nameCol),
@@ -233,106 +233,95 @@ object SearchIndex {
 /**
  * The index's AT-REST form — the engine twin of the reference server's
  * on-disk index load (indexer writes segments + metadata, the server mmaps
- * and serves, /root/reference/pkg/index): postings for both fields are
- * persisted as EXTERNAL BUCKETED tables keyed by `term` (query-term
- * lookups prune buckets and push `term IN (...)` to the scan), field
- * lengths and the doc table bucketed by `doc_id`, all under one directory
- * with lineage manifests. [[load]] in any later session re-registers from
- * the manifests and serves WITHOUT rebuilding —
- * [[graft.pipeline.TableIO.bucketedStage]] resume semantics. A store whose
- * postings lack the `len` and `df` columns fails [[load]] by name.
+ * and serves, /root/reference/pkg/index): every index artifact is a table
+ * of ONE TableIO stage (`idx`) under the store directory, committed by its
+ * one manifest rename. Postings for both fields are EXTERNAL BUCKETED
+ * tables keyed by `term` (query-term lookups prune buckets and push
+ * `term IN (...)` to the scan), field lengths and the doc table bucketed by
+ * `doc_id`. [[load]] in any later session re-registers from the manifest
+ * and serves WITHOUT rebuilding. A store whose postings lack the `len` and
+ * `df` columns fails [[load]], naming the table.
  */
 object SearchIndexStore {
   import graft.pipeline.TableIO
+  import TableIO.Table
 
   val NBuckets = 8
 
+  /** The stage that holds every table of the store. */
+  val Stage = "idx"
+
   /**
-   * Build and persist every index artifact; idempotent (completed stages
-   * are skipped on re-run). The scoring tables:
-   *  - `idx_postings_name`, `idx_postings_addr` (term, doc_id, tf, len,
-   *    df), bucketed by term: each row carries its field length and its
-   *    term's df over both fields, so a request scores off one term-pruned
-   *    scan with no join;
-   *  - `idx_len_name`, `idx_len_addr` (doc_id, len), bucketed by doc_id:
-   *    every doc's field length, zero-token docs included, for the
-   *    per-field averages, the doc count and BM25+'s doc length;
-   *  - `idx_docs`, bucketed by doc_id, for the top-k hydration.
-   * The vocabulary is staged before the postings, which join its df.
+   * Build and persist every index artifact as one stage; idempotent (a
+   * committed store is not rewritten; a write cut before its commit is
+   * redone whole). The scoring tables:
+   *  - `postings_name`, `postings_addr` (term, doc_id, tf, len, df),
+   *    bucketed by term: each row carries its field length and its term's
+   *    df over both fields, so a request scores off one term-pruned scan
+   *    with no join;
+   *  - `len_name`, `len_addr` (doc_id, len), bucketed by doc_id: every
+   *    doc's field length, zero-token docs included, for the per-field
+   *    averages, the doc count and BM25+'s doc length;
+   *  - `docs`, bucketed by doc_id, for the top-k hydration.
+   * The vocabulary is written before the postings, which join its df.
    * Beyond the scoring tables, the MODEL artifacts
    * of the composed [[Searcher]] are persisted too — the engine twin of
    * the reference's ngram.index (ngram_lm.go:386-423), noisy_model.index
    * (spell_corrector.go:453-490) and term map (indexer.go:872-903):
-   *  - `idx_vocab` (term, freq, df), bucketed by term;
-   *  - `idx_dict` (t, term_id, lmid), bucketed by t;
-   *  - `idx_spell_nbr` — the deletion neighborhood with lmid riding along,
+   *  - `vocab` (term, freq, df), bucketed by term;
+   *  - `dict` (t, term_id, lmid), bucketed by t;
+   *  - `spell_nbr` — the deletion neighborhood with lmid riding along,
    *    bucketed by del_key so query probes prune;
-   *  - `idx_lm_counts` — keyed n-gram counts (n, gram_key, cnt), bucketed
-   *    by gram_key so LM probes prune;
-   *  - `idx_noisy` — the noisy-channel confusion counts.
+   *  - `lm_counts` — keyed n-gram counts (n, gram_key, cnt), bucketed by
+   *    gram_key so LM probes prune;
+   *  - `noisy` — the noisy-channel confusion counts.
    */
   def write(spark: SparkSession, docs: DataFrame, idCol: String,
             nameCol: String, addrCol: String, dir: String,
             spellErrorLines: Iterable[String] = Nil): Unit = {
-    TableIO.bucketedStage(spark, dir, "idx_docs", "doc_id", NBuckets) {
-      docs.withColumnRenamed(idCol, "doc_id")
-    }
+    def bucketed(name: String, key: String)(compute: (String => DataFrame) => DataFrame) =
+      Table(name, bucket = Some((key, NBuckets)))(compute)
     // the vocabulary comes from the unstaged postings first, so each
     // field's staged postings carry their terms' df
     val pn = TextIndex.postingsWithLen(docs, idCol, nameCol)
     val pa = TextIndex.postingsWithLen(docs, idCol, addrCol)
-    val vocab = TableIO.bucketedStage(spark, dir, "idx_vocab", "term", NBuckets) {
-      SearchIndex.vocabOf(pn, pa)
-    }
-    TableIO.bucketedStage(spark, dir, "idx_postings_name", "term", NBuckets) {
-      SearchIndex.withDf(pn, vocab)
-    }
-    TableIO.bucketedStage(spark, dir, "idx_postings_addr", "term", NBuckets) {
-      SearchIndex.withDf(pa, vocab)
-    }
-    TableIO.bucketedStage(spark, dir, "idx_len_name", "doc_id", NBuckets) {
-      TextIndex.fieldLengths(docs, idCol, nameCol)
-    }
-    TableIO.bucketedStage(spark, dir, "idx_len_addr", "doc_id", NBuckets) {
-      TextIndex.fieldLengths(docs, idCol, addrCol)
-    }
-    val dict = TableIO.bucketedStage(spark, dir, "idx_dict", "t", NBuckets) {
-      Searcher.dictOf(vocab)
-    }
-    TableIO.bucketedStage(spark, dir, "idx_spell_nbr", "del_key", NBuckets) {
-      Searcher.neighborhoodOf(vocab, dict)
-    }
-    TableIO.bucketedStage(spark, dir, "idx_lm_counts", "gram_key", NBuckets) {
-      graft.index.NGramLM.keyedCounts(
-        Searcher.lmCountTables(docs, idCol, nameCol, addrCol, dict))
-    }
-    TableIO.stage(spark, dir, "idx_noisy") {
-      graft.spell.SpellCorrector.noisyToDf(spark,
-        graft.spell.SpellCorrector.buildNoisyModel(spellErrorLines))
-    }
+    TableIO.write(spark, dir, Stage)(
+      bucketed("docs", "doc_id")(_ => docs.withColumnRenamed(idCol, "doc_id")),
+      bucketed("vocab", "term")(_ => SearchIndex.vocabOf(pn, pa)),
+      bucketed("postings_name", "term")(t => SearchIndex.withDf(pn, t("vocab"))),
+      bucketed("postings_addr", "term")(t => SearchIndex.withDf(pa, t("vocab"))),
+      bucketed("len_name", "doc_id")(_ => TextIndex.fieldLengths(docs, idCol, nameCol)),
+      bucketed("len_addr", "doc_id")(_ => TextIndex.fieldLengths(docs, idCol, addrCol)),
+      bucketed("dict", "t")(t => Searcher.dictOf(t("vocab"))),
+      bucketed("spell_nbr", "del_key")(t => Searcher.neighborhoodOf(t("vocab"), t("dict"))),
+      bucketed("lm_counts", "gram_key")(t => graft.index.NGramLM.keyedCounts(
+        Searcher.lmCountTables(docs, idCol, nameCol, addrCol, t("dict")))),
+      Table("noisy")(_ => graft.spell.SpellCorrector.noisyToDf(spark,
+        graft.spell.SpellCorrector.buildNoisyModel(spellErrorLines))))
   }
 
-  private def served(spark: SparkSession, dir: String)(name: String, key: String) =
-    TableIO.bucketedStage(spark, dir, name, key, NBuckets) {
-      sys.error(s"stage $name missing under $dir — run SearchIndexStore.write first")
-    }
+  /** A reader of the store's tables; fails unless the store is committed. */
+  private def served(spark: SparkSession, dir: String): String => DataFrame = {
+    require(TableIO.isComplete(dir, Stage),
+      s"stage $Stage missing under $dir — run SearchIndexStore.write first")
+    TableIO.reader(spark, dir, Stage)
+  }
 
   /** Serve from the persisted artifacts (no rebuild, no in-session cache —
    *  the bucketed tables are the index). Works in a fresh session: the
-   *  stages re-register from their manifests. */
+   *  tables re-register from the manifest. */
   def load(spark: SparkSession, dir: String): SearchIndex = {
-    val t = served(spark, dir) _
-    val Seq(pn, pa) = Seq("idx_postings_name", "idx_postings_addr").map { name =>
-      val p = t(name, "term")
+    val t = served(spark, dir)
+    val Seq(pn, pa) = Seq("postings_name", "postings_addr").map { name =>
+      val p = t(name)
       require(Seq("len", "df").forall(p.columns.contains),
-        s"stage $name under $dir has columns (${p.columns.mkString(", ")}), not " +
+        s"table $name of $dir/$Stage has columns (${p.columns.mkString(", ")}), not " +
           "(term, doc_id, tf, len, df): it was written before postings carried the " +
           "field length and df; delete the store and run SearchIndexStore.write again")
       p
     }
-    new SearchIndex(t("idx_docs", "doc_id"), "doc_id", "", "",
-      prebuilt = Some(SearchIndex.Tables(pn, pa,
-        t("idx_len_name", "doc_id"), t("idx_len_addr", "doc_id"), t("idx_vocab", "term"))))
+    new SearchIndex(t("docs"), "doc_id", "", "",
+      prebuilt = Some(SearchIndex.Tables(pn, pa, t("len_name"), t("len_addr"), t("vocab"))))
   }
 
   /** Serve the COMPOSED [[Searcher]] from the persisted artifacts — the
@@ -341,18 +330,11 @@ object SearchIndexStore {
    *  probes prune at the scan. */
   def loadSearcher(spark: SparkSession, dir: String,
                    maxDriverVocab: Long = Searcher.DefaultMaxDriverVocab): Searcher = {
-    val t = served(spark, dir) _
-    val idx = load(spark, dir)
-    val docs = t("idx_docs", "doc_id")
-    val noisy = graft.spell.SpellCorrector.noisyFromDf(
-      TableIO.stage(spark, dir, "idx_noisy") {
-        sys.error(s"stage idx_noisy missing under $dir — run SearchIndexStore.write first")
-      })
-    new Searcher(docs, "doc_id", "", "",
+    val t = served(spark, dir)
+    new Searcher(t("docs"), "doc_id", "", "",
       maxDriverVocab = maxDriverVocab,
-      store = Some(Searcher.ModelTables(idx,
-        t("idx_dict", "t"), t("idx_spell_nbr", "del_key"),
-        t("idx_lm_counts", "gram_key"), Some(noisy))))
+      store = Some(Searcher.ModelTables(load(spark, dir), t("dict"), t("spell_nbr"),
+        t("lm_counts"), Some(graft.spell.SpellCorrector.noisyFromDf(t("noisy"))))))
   }
 }
 

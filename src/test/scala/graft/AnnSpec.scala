@@ -215,6 +215,8 @@ class AnnSpec extends AnyFunSuite {
     val base = emb.filter(col("vec_id") < 250)
     val cents = Ann.ivfCentroids(base, "vec_id", "embedding", 8, 2)
     AnnStore.writeIvf(spark, dir, Ann.ivfAssign(base, "vec_id", "embedding", cents), cents)
+    // centroids and lists are one stage, committed together
+    assert(graft.pipeline.TableIO.stages(dir, "") == Seq(AnnStore.IvfStage))
     AnnStore.appendIvf(spark, dir, "b1",
       emb.filter(col("vec_id") >= 250 && col("vec_id") % 2 === 0), "vec_id", "embedding")
     AnnStore.appendIvf(spark, dir, "b2",
@@ -250,6 +252,8 @@ class AnnSpec extends AnyFunSuite {
       Ann.ivfPqIndex(emb, "vec_id", "embedding", 4, 2, 8, 16, 2)
     AnnStore.writeIvfPq(spark, dir, index, coarse, fine)
     AnnStore.writeIvfPq(spark, dir, index, coarse, fine) // idempotent no-op
+    // coarse, fine and lists are one stage, committed together
+    assert(graft.pipeline.TableIO.stages(dir, "") == Seq(AnnStore.PqStage))
 
     // fresh session: nothing cached, no driver arrays — the reference
     // server lifecycle (load, never rebuild)

@@ -209,8 +209,8 @@ class IncrementalSpec extends AnyFunSuite {
         Seq((20L, tA2), (21L, tY)).toDF("doc_id", "text"), "doc_id", "text", 0.7)
       .select("doc_id").as[Long].collect().toSet
     assert(again == Set(21L))
-    assert(TableIO.stages(dir, Incremental.NsigPrefix).size == 2)
-    assert(TableIO.stages(dir, Incremental.NdocPrefix).size == 2)
+    // one stage (doc + sig tables, one commit) per batch
+    assert(TableIO.stages(dir, Incremental.NearPrefix).size == 2)
   }
 
   test("near-dup state probe: signature index side is bucketed, no Exchange") {
@@ -224,11 +224,8 @@ class IncrementalSpec extends AnyFunSuite {
     try {
       val probe = graft.ml.Dedup.minhashBands(graft.ml.Dedup.minhashSignatures(
         Seq((20L, tA2)).toDF("doc_id", "text"), "doc_id", "text"))
-      val state = TableIO.bucketedStage(spark, dir,
-          TableIO.stages(dir, Incremental.NsigPrefix).head, "band_key",
-          Incremental.DefaultBuckets) {
-        sys.error("nsig must already be staged")
-      }.select(col("band"), col("band_key"), col("doc_id").as("id1"))
+      val state = TableIO.read(spark, dir, TableIO.stages(dir, Incremental.NearPrefix).head, "sig")
+        .select(col("band"), col("band_key"), col("doc_id").as("id1"))
       val plan = probe.join(state, Seq("band", "band_key"))
         .queryExecution.executedPlan.toString
       val scanIdx = plan.linesIterator.indexWhere(_.contains("Scan parquet"))
@@ -303,25 +300,67 @@ class IncrementalSpec extends AnyFunSuite {
     assert(TableIO.stages(dir, Incremental.StatePrefix).size == 2)
   }
 
-  test("near-dup ingest enforces orphan recovery: new batch over a half-completed one fails") {
-    val dir = freshDir("orphan")
-    assert(ingestNear(dir, 0, Seq((10L, tA), (11L, tX))) == Set(10L, 11L))
-    // simulate a crash between the two stage writes: drop n0's nsig half
-    val nsig = TableIO.stages(dir, Incremental.NsigPrefix)
-    assert(nsig.size == 1)
-    org.apache.commons.io.FileUtils.deleteQuietly(
-      new java.io.File(s"$dir/${nsig.head}"))
-    // ingesting a DIFFERENT batch must fail loudly (the orphan's ndoc docs
-    // would silently skip near-dup checks forever)...
-    val ex = intercept[IllegalArgumentException] {
-      ingestNear(dir, 1, Seq((20L, tY)))
+  test("compact crash window: restored originals are skipped, no text returned twice") {
+    val dir = freshDir("compact-crash")
+    ingestAll(dir)
+    def rows() = Incremental.accepted(spark, dir)
+      .select("id", "n_dups").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val before = rows()
+    val originals = TableIO.stages(dir, Incremental.StatePrefix)
+    val copy = freshDir("compact-crash-copy")
+    originals.foreach(st => org.apache.commons.io.FileUtils.copyDirectory(
+      new java.io.File(s"$dir/$st"), new java.io.File(s"$copy/$st")))
+    Incremental.compact(spark, dir)
+    // the cut window: the folded stage committed, the originals not yet deleted
+    originals.foreach(st => org.apache.commons.io.FileUtils.copyDirectory(
+      new java.io.File(s"$copy/$st"), new java.io.File(s"$dir/$st")))
+    assert(TableIO.stages(dir, Incremental.StatePrefix).size == originals.size + 1)
+    val after = rows()
+    assert(after.map(_._1).distinct.size == after.size, s"duplicate ids: $after")
+    assert(after.toSet == before.toSet)
+    // the listing retired the restored originals
+    assert(TableIO.stages(dir, Incremental.StatePrefix).size == 1)
+  }
+
+  test("near-dup crash window: a stage cut before its commit is unlisted and redone") {
+    val n0 = Seq((10L, tA), (11L, tX))
+    val n1 = Seq((20L, tA2), (21L, tY))
+    val n2 = Seq((30L, tY), (31L, tZ))
+    def near(dir: String) = TableIO.stages(dir, Incremental.NearPrefix)
+    // the write of batch n<k> got past its first table (doc) and was cut
+    // before the manifest rename
+    def cut(dir: String, k: Int): Unit = {
+      val Seq(st) = near(dir).filter(_.endsWith(s"_n$k"))
+      assert(TableIO.manifestPath(dir, st).toFile.delete())
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$dir/$st/sig"))
     }
-    assert(ex.getMessage.contains("half-completed"), ex.getMessage)
-    // ...while re-ingesting the SAME batch completes the orphan half and
-    // the stream continues
-    assert(ingestNear(dir, 0, Seq((10L, tA), (11L, tX))) == Set(10L, 11L))
-    assert(TableIO.stages(dir, Incremental.NsigPrefix).size == 1)
-    assert(ingestNear(dir, 1, Seq((20L, tA), (21L, tY))) == Set(21L))
+    def docs(dir: String) = near(dir).flatMap(st =>
+      TableIO.read(spark, dir, st, "doc").select("doc_id").as[Long].collect()).toSet
+
+    // the same batch re-ingested at once is rewritten whole
+    val same = freshDir("near-cut-same")
+    ingestNear(same, 0, n0)
+    cut(same, 0)
+    assert(near(same).isEmpty)
+    assert(ingestNear(same, 0, n0) == Set(10L, 11L))
+    assert(near(same).size == 1)
+    assert(ingestNear(same, 1, n1) == Set(21L))
+
+    // a different batch over the cut one sees none of it: the same accepted
+    // sets as a run that never ingested the cut batch, and re-ingesting the
+    // cut batch afterwards matches an uncut ingest in that order
+    val dir = freshDir("near-cut")
+    val ref = freshDir("near-cut-ref")
+    ingestNear(dir, 0, n0)
+    ingestNear(dir, 1, n1)
+    cut(dir, 1)
+    assert(near(dir).size == 1)
+    ingestNear(ref, 0, n0)
+    assert(ingestNear(dir, 2, n2) == Set(30L, 31L))
+    assert(ingestNear(ref, 2, n2) == Set(30L, 31L))
+    assert(ingestNear(dir, 1, n1) == ingestNear(ref, 1, n1))
+    assert(docs(dir) == docs(ref) && docs(ref) == Set(10L, 11L, 30L, 31L))
+    assert(near(dir).size == 3)
   }
 
   test("pack crash window: a stage without its manifest is unlisted and re-ingested") {
@@ -332,7 +371,7 @@ class IncrementalSpec extends AnyFunSuite {
       df.collect().map(r => (r.getLong(0), r.getLong(2), r.getLong(3))).toSet
     Incremental.ingestPack(spark, dir, "p0", b0, "doc_id", "toks", 10L)
     val st = TableIO.stages(dir, Incremental.PackPrefix).head
-    assert(TableIO.manifest(dir, st).stats == Map("sum_toks" -> 12L, "max_id" -> 2L))
+    assert(TableIO.manifest(dir, st).table().stats == Map("sum_toks" -> 12L, "max_id" -> 2L))
     // crash after the data commit (_SUCCESS written), before the manifest
     assert(TableIO.manifestPath(dir, st).toFile.delete())
     assert(new java.io.File(s"$dir/$st/_SUCCESS").exists())

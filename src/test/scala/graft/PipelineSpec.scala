@@ -29,8 +29,8 @@ class PipelineSpec extends AnyFunSuite {
     // every stage wrote a lineage manifest with per-partition rows
     for (name <- m1.map(_._1)) {
       val manifest = TableIO.manifest(out, name)
-      assert(manifest.rows > 0)
-      assert(manifest.partitions.map(_.rows).sum == manifest.rows)
+      assert(manifest.table().rows > 0)
+      assert(manifest.table().partitions.map(_.rows).sum == manifest.table().rows)
       assert(manifest.wallSec > 0)
     }
 

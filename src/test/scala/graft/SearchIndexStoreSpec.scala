@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
+import graft.pipeline.TableIO
 import graft.query.{SearchIndex, SearchIndexStore}
 import graft.sources.Derived
 
@@ -26,6 +27,8 @@ class SearchIndexStoreSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft-idx").toString
     val fresh = new SearchIndex(docs, "doc_id", "text", "source")
     SearchIndexStore.write(spark, docs, "doc_id", "text", "source", dir)
+    // every table of the store is committed by one stage
+    assert(TableIO.stages(dir, "") == Seq(SearchIndexStore.Stage))
     val loaded = SearchIndexStore.load(spark, dir)
 
     assert(scores(loaded.bm25f(terms)) == scores(fresh.bm25f(terms)))
@@ -38,7 +41,7 @@ class SearchIndexStoreSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(l == f && f.nonEmpty)
 
-    // idempotent: a second write skips every completed stage
+    // idempotent: a second write skips the committed stage
     SearchIndexStore.write(spark, docs, "doc_id", "text", "source", dir)
     assert(scores(SearchIndexStore.load(spark, dir).bm25f(terms)) ==
       scores(fresh.bm25f(terms)))
@@ -124,17 +127,34 @@ class SearchIndexStoreSpec extends AnyFunSuite {
 
   test("a store whose postings lack len and df fails load, naming the stage") {
     import graft.index.TextIndex
-    import graft.pipeline.TableIO
     val dir = java.nio.file.Files.createTempDirectory("graft-idx-old").toString
-    SearchIndexStore.write(spark, searcherDocs, "doc_id", "name", "address", dir)
     // the name postings as stores wrote them before: (term, doc_id, tf)
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$dir/idx_postings_name"))
-    TableIO.bucketedStage(spark, dir, "idx_postings_name", "term", SearchIndexStore.NBuckets) {
-      TextIndex.postings(searcherDocs, "doc_id", "name")
-    }
+    TableIO.write(spark, dir, SearchIndexStore.Stage)(
+      TableIO.Table("postings_name", bucket = Some(("term", SearchIndexStore.NBuckets)))(
+        _ => TextIndex.postings(searcherDocs, "doc_id", "name")))
     val e = intercept[IllegalArgumentException] { SearchIndexStore.load(spark, dir) }
-    assert(e.getMessage.contains("stage idx_postings_name") && e.getMessage.contains("len, df"),
-      e.getMessage)
+    assert(e.getMessage.contains(s"table postings_name of $dir/${SearchIndexStore.Stage}") &&
+      e.getMessage.contains("len, df"), e.getMessage)
+  }
+
+  test("SearchIndexStore crash window: a cut write fails load until write is re-run") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-idx-cut").toString
+    def hits() = SearchIndexStore.load(spark, dir).search("Jakarta Taman", 5)
+      .select(col("doc_id"), Derived.q6(col("score")).as("s"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    SearchIndexStore.write(spark, searcherDocs, "doc_id", "name", "address", dir, spellLines)
+    val committed = hits()
+    assert(committed.nonEmpty)
+    // cut after the postings tables, before the later tables and the rename
+    assert(TableIO.manifestPath(dir, SearchIndexStore.Stage).toFile.delete())
+    Seq("len_name", "len_addr", "dict", "spell_nbr", "lm_counts", "noisy").foreach(t =>
+      org.apache.commons.io.FileUtils.deleteDirectory(
+        new java.io.File(s"$dir/${SearchIndexStore.Stage}/$t")))
+    val e = intercept[IllegalArgumentException] { SearchIndexStore.load(spark, dir) }
+    assert(e.getMessage.contains("run SearchIndexStore.write first"), e.getMessage)
+    SearchIndexStore.write(spark, searcherDocs, "doc_id", "name", "address", dir, spellLines)
+    assert(TableIO.stages(dir, "") == Seq(SearchIndexStore.Stage))
+    assert(hits() == committed)
   }
 
   test("loading a missing store fails loudly") {

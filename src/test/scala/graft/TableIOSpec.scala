@@ -24,7 +24,7 @@ class TableIOSpec extends AnyFunSuite {
     assert(first.count() == 100)
     assert(computeRuns == 1)
     assert(TableIO.isComplete(dir, "s1"))
-    val manifest = TableIO.manifest(dir, "s1")
+    val manifest = TableIO.manifest(dir, "s1").table()
     assert(manifest.rows == 100)
     assert(manifest.partitions.nonEmpty && manifest.partitions.map(_.rows).sum == 100)
     // resume: compute must NOT run again
@@ -92,7 +92,7 @@ class TableIOSpec extends AnyFunSuite {
       TableIO.bucketedStage(spark, dir, "postings_b", "doc_id", 8)(build())
     }
     // per-partition lineage is recorded for bucketed stages too
-    val manifest = TableIO.manifest(dir, "postings_b")
+    val manifest = TableIO.manifest(dir, "postings_b").table()
     assert(manifest.partitions.nonEmpty && manifest.rows == 2000)
   }
 
@@ -106,7 +106,7 @@ class TableIOSpec extends AnyFunSuite {
     }
     val first = TableIO.bucketedStage(spark, dir, "esc_b", "term", 4)(build())
     assert(first.columns.toSeq == Seq("term", odd) && computeRuns == 1)
-    assert(TableIO.manifest(dir, "esc_b").schema.contains(odd))
+    assert(TableIO.manifest(dir, "esc_b").table().schema.contains(odd))
     val tbl = spark.catalog.listTables().collect().map(_.name)
       .find(_.startsWith("graft_esc_b_by_term")).get
     spark.sql(s"DROP TABLE $tbl")
@@ -115,5 +115,43 @@ class TableIOSpec extends AnyFunSuite {
     assert(resumed.columns.toSeq == Seq("term", odd))
     assert(resumed.agg(sum(col(odd))).head().getLong(0) ==
       (1 to 200).sum.toLong)
+  }
+
+  test("multi-table stage: one manifest commits every table; a cut stage is redone whole") {
+    val dir = Files.createTempDirectory("graft_stage_m").toString
+    var computeRuns = 0
+    def tables = Seq(
+      TableIO.Table("base", bucket = Some(("k", 4))) { _ =>
+        computeRuns += 1
+        (1 to 40).map(i => (i % 7, i.toLong)).toDF("k", "v")
+      },
+      // a later table reads the earlier one of the same stage
+      TableIO.Table("agg") { t =>
+        computeRuns += 1
+        t("base").groupBy("k").agg(sum("v").as("s"))
+      })
+    val m = TableIO.write(spark, dir, "multi")(tables: _*)
+    assert(computeRuns == 2 && m.tables.map(_.name) == Seq("base", "agg"))
+    assert(TableIO.manifest(dir, "multi").tables == m.tables)
+    assert(m.table("base").rows == 40 && m.table("base").nBuckets.contains(4))
+    assert(m.table("agg").rows == 7 && m.table("agg").bucketKey.isEmpty)
+    assert(TableIO.stages(dir, "multi") == Seq("multi"))
+    val keyed = TableIO.read(spark, dir, "multi", "base").groupBy("k").count()
+      .queryExecution.executedPlan.toString
+    assert(!keyed.contains("Exchange hashpartitioning"), s"bucketed table re-shuffles:\n$keyed")
+    assert(TableIO.read(spark, dir, "multi", "agg").agg(sum("s")).head().getLong(0) ==
+      (1 to 40).sum.toLong)
+    TableIO.write(spark, dir, "multi")(tables: _*)
+    assert(computeRuns == 2, "committed stage recomputed")
+
+    // cut after the first table, before the rename: the stage is unlisted,
+    // unreadable, and the next write redoes BOTH tables
+    assert(TableIO.manifestPath(dir, "multi").toFile.delete())
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$dir/multi/agg"))
+    assert(TableIO.stages(dir, "multi").isEmpty)
+    intercept[IllegalArgumentException](TableIO.read(spark, dir, "multi", "base"))
+    TableIO.write(spark, dir, "multi")(tables: _*)
+    assert(computeRuns == 4)
+    assert(TableIO.read(spark, dir, "multi", "agg").count() == 7)
   }
 }
