@@ -86,10 +86,11 @@ object Ann {
   //
   // A coarse k-means quantizer partitions the vector space into `nlist`
   // cells; each vector is assigned to its nearest centroid (the "inverted
-  // list"). A query probes only the `nprobe` nearest lists. At 10^12 rows
-  // the assigned table is PARTITIONED BY list, so a probe is partition
-  // pruning — the scan touches nprobe/nlist of the data. With
-  // nprobe = nlist, IVF search is exactly brute force (asserted in AnnSpec).
+  // list"). A query probes only the `nprobe` nearest lists. At rest
+  // ([[AnnStore]]) the lists are a TableIO table PARTITIONED BY list, so a
+  // probe is partition pruning — the scan touches nprobe/nlist of the data.
+  // With nprobe = nlist, IVF search is exactly brute force (asserted in
+  // AnnSpec).
 
   /**
    * Deterministic distributed k-means: seeds are the `nlist` rows with the
@@ -164,24 +165,6 @@ object Ann {
     val probes = probeLists(centroids, query, nprobe)
     scoreTopK(
       assigned.filter(col("list").isin(probes.map(Integer.valueOf): _*)), query, k)
-  }
-
-  /** Persist the inverted lists PARTITIONED BY list — the IVF index's
-   *  at-rest form. A probe then reads only nprobe/nlist of the table via
-   *  directory-level partition pruning (asserted in AnnSpec), which is the
-   *  whole point of IVF at 10^12 rows: the scan never touches unprobed
-   *  lists. */
-  def ivfWrite(assigned: DataFrame, path: String): Unit =
-    assigned.write.mode("overwrite").partitionBy("list").parquet(path)
-
-  /** Probe-limited top-k over a persisted IVF index ([[ivfWrite]]). */
-  def ivfProbeTopK(spark: org.apache.spark.sql.SparkSession, path: String,
-                   centroids: Array[Array[Double]], query: Seq[Double],
-                   k: Int, nprobe: Int): DataFrame = {
-    val probes = probeLists(centroids, query, nprobe)
-    scoreTopK(
-      spark.read.parquet(path)
-        .filter(col("list").isin(probes.map(Integer.valueOf): _*)), query, k)
   }
 
   /**
@@ -383,22 +366,6 @@ object Ann {
     index.filter(col("list").isin(probes.map(Integer.valueOf): _*))
       .withColumn("adc", adcU(col("list"), col("codes")))
   }
-
-  /** Persist the IVF-PQ index PARTITIONED BY list — the at-rest serving
-   *  layout: (vec_id, codes) per list directory, nsub ints per vector.
-   *  A probe reads only nprobe/nlist of the table via directory-level
-   *  partition pruning (asserted in AnnSpec), and decompresses nothing:
-   *  scoring is pure lut lookups over the codes. */
-  def ivfPqWrite(index: DataFrame, path: String): Unit =
-    index.write.mode("overwrite").partitionBy("list").parquet(path)
-
-  /** Probe-limited ADC over a persisted IVF-PQ index ([[ivfPqWrite]]). */
-  def ivfPqProbeAdc(spark: org.apache.spark.sql.SparkSession, path: String,
-                    coarse: Array[Array[Double]],
-                    fine: Array[Array[Array[Double]]], query: Seq[Double],
-                    nprobe: Int): DataFrame =
-    ivfPqAdc(spark.read.parquet(path), coarse, fine, query,
-      probeLists(coarse, query, nprobe))
 
   /** Buckets of `bucketed` (a [[lshBuckets]] output under any column
    *  naming that keeps `bucket`) holding more than `cap` rows — the

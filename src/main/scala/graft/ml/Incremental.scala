@@ -1,7 +1,5 @@
 package graft.ml
 
-import java.nio.file.Paths
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -123,7 +121,7 @@ object Incremental {
     val folded = names.filter(_.split("_", 3).last.startsWith("compact")).lastOption
       .fold(-1L)(TableIO.manifest(stateDir, _).table().stats("folded"))
     val (retired, live) = names.partition(seqOf(_) <= folded)
-    retired.foreach(n => org.apache.commons.io.FileUtils.deleteQuietly(Paths.get(stateDir, n).toFile))
+    TableIO.drop(stateDir, retired)
     live
   }
 

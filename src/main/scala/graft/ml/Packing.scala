@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.pipeline.TableIO
+
 /**
  * Token-budget shard packing — the "write the training shards" step of a
  * data pipeline: documents are laid out in a deterministic global order
@@ -80,13 +82,20 @@ object Packing {
       .select(col(idCol), col("toks"), col("off"), col("shard"))
   }
 
-  /** Persist the packed corpus PARTITIONED BY shard — the at-rest
-   *  training-shard layout: a dataloader (or a resumed job) reads one
-   *  shard's directory without touching the rest (directory-level
-   *  pruning, asserted in PackingSpec). `docs` re-joins on `idCol` so the
-   *  payload columns ride along with (toks, off, shard). */
+  /** The at-rest training shards' stage. */
+  val ShardStage = "shards"
+
+  /** Persist the packed corpus as the [[ShardStage]] TableIO stage of
+   *  `dir`, PARTITIONED BY shard — the at-rest training-shard layout, the
+   *  one [[Incremental.ingestPack]]'s `pack_*` stages use: a dataloader (or
+   *  a resumed job) reads one shard's directory without touching the rest
+   *  (directory-level pruning, asserted in PackingSpec). `docs` re-joins on
+   *  `idCol` so the payload columns ride along with (toks, off, shard).
+   *  The manifest rename commits the stage, and a complete stage is not
+   *  rewritten. */
   def writeShards(packed: DataFrame, docs: DataFrame, idCol: String,
-                  path: String): Unit =
-    docs.join(packed, Seq(idCol))
-      .write.mode("overwrite").partitionBy("shard").parquet(path)
+                  dir: String): Unit =
+    TableIO.stageWrite(packed.sparkSession, dir, ShardStage, partitionBy = Seq("shard")) {
+      docs.join(packed, Seq(idCol))
+    }
 }

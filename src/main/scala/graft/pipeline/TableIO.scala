@@ -36,7 +36,8 @@ import org.apache.spark.sql.types.StructType
  * [[bucketedStage]] are the one-table case: their table is named "" and
  * lives in the stage directory itself. This object is the only code that
  * knows the manifest format and the rule for listing completed stages
- * ([[stages]]).
+ * ([[stages]]), and the only writer and deleter ([[drop]]) of at-rest
+ * tables.
  */
 object TableIO {
 
@@ -109,6 +110,14 @@ object TableIO {
         .filter(n => n.startsWith(prefix) && isComplete(dir, n))
         .toVector
     }.sorted
+  }
+
+  /** Delete the stages `names` under `dir`: each manifest goes before its
+   *  data, so a delete cut midway leaves an unlisted directory, never a
+   *  listed stage with missing files. */
+  def drop(dir: String, names: Seq[String]): Unit = names.foreach { n =>
+    Files.deleteIfExists(manifestPath(dir, n))
+    org.apache.commons.io.FileUtils.deleteQuietly(Paths.get(dir, n).toFile)
   }
 
   private def tablePath(dir: String, stage: String, table: String): String =

@@ -133,44 +133,46 @@ object Geofence {
       Seq.empty[(String, Option[String], Double, Double, Double)]
         .toDF("collection", "fence_key", "flat", "flon", "fradius")
 
+    private def newest(versions: Seq[String]): DataFrame =
+      versions.lastOption.fold(emptyTable)(TableIO.read(spark, dir, _))
+
     /** The newest complete version, read with its manifest's DDL: no
      *  schema-inference job per read. */
-    def load(): DataFrame =
-      TableIO.stages(dir, Prefix).lastOption.fold(emptyTable)(TableIO.read(spark, dir, _))
+    def load(): DataFrame = newest(TableIO.stages(dir, Prefix))
 
     /** Every stored row, in one job; fence tables are broadcast-scale. */
     private def all(): Seq[Row] = load().collect().toSeq
 
-    private def write(rows: Seq[Row]): Unit = {
+    /** One mutation: list the versions once, commit `f` of the newest one's
+     *  rows as the next version, then retire the listed ones. */
+    private def mutate(f: Seq[Row] => Seq[Row]): Unit = {
       val prior = TableIO.stages(dir, Prefix)
+      val rows = f(newest(prior).collect().toSeq)
       val seq = prior.lastOption.fold(0)(_.stripPrefix(Prefix).toInt + 1)
       // the new version is built on the driver from the collected old one,
       // so the write never reads the files it replaces
       TableIO.stageWrite(spark, dir, f"$Prefix$seq%06d") {
         spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), emptyTable.schema)
       }
-      prior.foreach(st => org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir, st)))
+      TableIO.drop(dir, prior)
     }
 
     private def inCollection(name: String)(r: Row): Boolean = r.getString(0) == name
 
     def collectionExists(name: String): Boolean = all().exists(inCollection(name))
 
-    def addCollection(name: String): Unit = {
-      val rows = all()
+    def addCollection(name: String): Unit = mutate { rows =>
       require(!rows.exists(inCollection(name)), s"fence already exists: $name")
-      write(rows :+ Row(name, null, 0.0, 0.0, 0.0))
+      rows :+ Row(name, null, 0.0, 0.0, 0.0)
     }
 
-    def deleteCollection(name: String): Unit =
-      write(all().filterNot(inCollection(name)))
+    def deleteCollection(name: String): Unit = mutate(_.filterNot(inCollection(name)))
 
     /** MERGE by (collection, fence_key): the new circle wins. */
-    def upsertFencePoint(name: String, fence: Fence): Unit = {
-      val rows = all()
+    def upsertFencePoint(name: String, fence: Fence): Unit = mutate { rows =>
       require(rows.exists(inCollection(name)), s"FenceIndex does not contain fence $name")
-      val kept = rows.filterNot(r => inCollection(name)(r) && r.getString(1) == fence.key)
-      write(kept :+ Row(name, fence.key, fence.lat, fence.lon, fence.radiusKm))
+      rows.filterNot(r => inCollection(name)(r) && r.getString(1) == fence.key) :+
+        Row(name, fence.key, fence.lat, fence.lon, fence.radiusKm)
     }
 
     def fences(name: String): Seq[Fence] = {

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.core.{Cells, GeoMath}
 import graft.functions.GeoFunctions._
 import graft.functions.TopK
+import graft.pipeline.TableIO
 
 /**
  * Spatial query operators over a cell-indexed point table
@@ -24,7 +25,8 @@ import graft.functions.TopK
  *    [[reverseGeocode]] and [[nearestJoin]] are thin wrappers over the
  *    capped plan; [[knn]] folds the capped bounds for its one literal
  *    query into a filter over the points;
- *  - range/bbox search (rtree.go:505-531)              -> cell-cover equi-join
+ *  - range/bbox search (rtree.go:505-531)              -> cell-cover equi-join;
+ *    at rest, a tile-partitioned TableIO stage ([[tiledWrite]])
  *  - nearest-street join (indexer.go:986-1026)         -> cell-prefilter +
  *    min_by refine join
  *  - region PIP join (indexer.go:1035-1061)            -> broadcast polygon
@@ -289,31 +291,38 @@ object Spatial {
    *  directories for a world table, each holding ~4k fine cells. */
   val TileStoreLevel = 7
 
+  /** The tile store's stage; distinct from [[graft.pipeline.Pipeline]]'s
+   *  `tiles` stage, so one directory can hold both. */
+  val TileStage = "tile_store"
+
   /**
    * The spatial index's at-rest form (the persisted twin of the R-tree,
-   * same role as [[graft.ml.Ann.ivfWrite]] for vectors): points persisted
-   * PARTITIONED BY a coarse tile, so a bbox query prunes at the DIRECTORY
-   * level and the scan never opens tiles outside the query's cover. Within
-   * admitted tiles the usual fine-cell prefilter + exact bbox refine runs
+   * same role as [[graft.ml.AnnStore]] for vectors): points persisted as
+   * the [[TileStage]] TableIO stage of `dir`, PARTITIONED BY their tile at
+   * [[TileStoreLevel]], so a bbox query prunes at the DIRECTORY level and
+   * the scan never opens tiles outside the query's cover. Within admitted
+   * tiles the usual fine-cell prefilter + exact bbox refine runs
    * ([[rangeSearch]]). At 10^12 rows this is the difference between a
-   * full-table scan per query and reading cover/total of the data.
+   * full-table scan per query and reading cover/total of the data. The
+   * manifest rename commits the stage, and a complete stage is not
+   * rewritten: delete it ([[TableIO.drop]]) to re-tile.
    */
-  def tiledWrite(points: DataFrame, path: String,
-                 coarseLevel: Int = TileStoreLevel): Unit =
-    points
-      .withColumn("tile", cellEncode(col("lat"), col("lon"), lit(coarseLevel)))
-      .write.mode("overwrite").partitionBy("tile").parquet(path)
+  def tiledWrite(points: DataFrame, dir: String): Unit =
+    TableIO.stageWrite(points.sparkSession, dir, TileStage, partitionBy = Seq("tile")) {
+      points.withColumn("tile", cellEncode(col("lat"), col("lon"), TileStoreLevel))
+    }
 
-  /** Bbox search over a [[tiledWrite]] table: coarse-tile partition pruning
-   *  (asserted in SpatialStoreSpec), then the exact [[rangeSearch]] refine.
-   *  Result set identical to [[rangeSearch]] over the full table. */
-  def rangeSearchTiled(spark: org.apache.spark.sql.SparkSession, path: String,
+  /** Bbox search over the [[tiledWrite]] stage of `dir`, read with its
+   *  manifest's DDL: coarse-tile partition pruning (asserted in
+   *  SpatialStoreSpec), then the exact [[rangeSearch]] refine. Result set
+   *  identical to [[rangeSearch]] over the full table; a stage whose write
+   *  was cut before its commit is refused, not served in part. */
+  def rangeSearchTiled(spark: org.apache.spark.sql.SparkSession, dir: String,
                        latMin: Double, lonMin: Double,
                        latMax: Double, lonMax: Double,
-                       level: Int = Cells.DefaultLevel,
-                       coarseLevel: Int = TileStoreLevel): DataFrame = {
-    val tiles = Cells.coverBBox(latMin, lonMin, latMax, lonMax, coarseLevel)
-    val pruned = spark.read.parquet(path)
+                       level: Int = Cells.DefaultLevel): DataFrame = {
+    val tiles = Cells.coverBBox(latMin, lonMin, latMax, lonMax, TileStoreLevel)
+    val pruned = TableIO.read(spark, dir, TileStage)
       .filter(col("tile").isin(tiles.map(java.lang.Long.valueOf): _*))
     // drop the synthetic partition column so the result schema really is
     // identical to rangeSearch over the original table

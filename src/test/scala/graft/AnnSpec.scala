@@ -66,23 +66,6 @@ class AnnSpec extends AnyFunSuite {
     assert(a.map(_.toSeq).toSeq == b.map(_.toSeq).toSeq)
   }
 
-  test("persisted IVF index: probe-limited query prunes partitions and matches the in-memory path") {
-    val cents = Ann.ivfCentroids(emb, "vec_id", "embedding", nlist = 8, iters = 2)
-    val assigned = Ann.ivfAssign(emb, "vec_id", "embedding", cents)
-    val path = java.nio.file.Files.createTempDirectory("ivf-index").toString + "/lists"
-    Ann.ivfWrite(assigned, path)
-    val query = emb.filter(col("vec_id") === 1)
-      .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
-    val fromDisk = Ann.ivfProbeTopK(spark, path, cents, query, k = 10, nprobe = 3)
-    val inMem = Ann.ivfTopK(assigned, cents, query, k = 10, nprobe = 3)
-    assert(fromDisk.collect().toSeq == inMem.collect().toSeq)
-    // the probe is DIRECTORY pruning, not scan+filter: the list predicate
-    // must appear as a PartitionFilter on the file scan
-    val plan = fromDisk.queryExecution.executedPlan.toString
-    val pf = plan.linesIterator.find(_.contains("PartitionFilters")).getOrElse("")
-    assert(pf.contains("list"), s"list probe not a partition filter:\n$plan")
-  }
-
   test("SQ8 quantization: codes in [0,255], extremes hit both ends, reconstruction bounded") {
     val codes = Ann.quantizeSq8(emb, "vec_id", "embedding").cache()
     val n = emb.count()
@@ -189,28 +172,9 @@ class AnnSpec extends AnyFunSuite {
     assert(out.map(_.getLong(0)).contains(1L))
   }
 
-  test("persisted IVF-PQ index: probe prunes partitions and matches the in-memory path") {
-    val (index, coarse, fine) =
-      Ann.ivfPqIndex(emb, "vec_id", "embedding", 4, 2, 8, 16, 2)
-    val path = "/tmp/graft-test-ivfpq"
-    Ann.ivfPqWrite(index, path)
-    val fromDisk = Ann.ivfPqProbeAdc(spark, path, coarse, fine, query, nprobe = 2)
-    val probes = Ann.probeLists(coarse, query, 2)
-    val mem = Ann.ivfPqAdc(index, coarse, fine, query, probes)
-      .select(col("vec_id"), col("adc")).collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val disk = fromDisk.select(col("vec_id"), col("adc")).collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(disk == mem)
-    val plan = fromDisk.queryExecution.executedPlan.toString
-    val pf = plan.linesIterator.find(_.contains("PartitionFilters")).getOrElse("")
-    assert(pf.contains("list"), s"list probe not a partition filter:\n$plan")
-  }
-
   test("AnnStore: append grows the IVF index without retraining; full probe = brute force") {
     import graft.ml.AnnStore
-    val dir = "/tmp/graft-test-ivfappend"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    val dir = java.nio.file.Files.createTempDirectory("graft-test-ivfappend").toString
     // train + persist on the FIRST HALF only, append the rest in two deltas
     val base = emb.filter(col("vec_id") < 250)
     val cents = Ann.ivfCentroids(base, "vec_id", "embedding", 8, 2)
@@ -246,8 +210,7 @@ class AnnSpec extends AnyFunSuite {
 
   test("AnnStore: fresh-session IVF-PQ probe serves from disk with zero training jobs") {
     import graft.ml.AnnStore
-    val dir = "/tmp/graft-test-annstore"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    val dir = java.nio.file.Files.createTempDirectory("graft-test-annstore").toString
     val (index, coarse, fine) =
       Ann.ivfPqIndex(emb, "vec_id", "embedding", 4, 2, 8, 16, 2)
     AnnStore.writeIvfPq(spark, dir, index, coarse, fine)

@@ -1,10 +1,13 @@
 package graft
 
+import java.nio.file.Files
+
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.ml.Packing
+import graft.pipeline.TableIO
 
 class PackingSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -49,10 +52,10 @@ class PackingSpec extends AnyFunSuite {
 
   test("at-rest shards: one-shard reads prune at directory level") {
     val packed = Packing.tokenBudgetShards(docs, "id", "toks", 100L, 8)
-    val path = "/tmp/graft-test-shards"
+    val dir = Files.createTempDirectory("graft-test-shards").toString
     Packing.writeShards(packed, docs.withColumnRenamed("toks", "payload"),
-      "id", path)
-    val one = spark.read.parquet(path).filter(col("shard") === 3)
+      "id", dir)
+    val one = TableIO.read(spark, dir, Packing.ShardStage).filter(col("shard") === 3)
     val expected = packed.filter(col("shard") === 3)
       .collect().map(_.getLong(0)).toSet
     assert(one.collect().map(_.getLong(0)).toSet == expected && expected.nonEmpty)
@@ -76,9 +79,9 @@ class PackingSpec extends AnyFunSuite {
       Bpe.tokenize(corpus, "doc_id", Derived.tokens(col("text")), trained)
         .select(col("doc_id"), col("bpe_len")),
       "doc_id", "bpe_len", budget = 6L, numPartitions = 4)
-    val path = "/tmp/graft-test-bpe-shards"
-    Packing.writeShards(packed, corpus, "doc_id", path)
-    val all = spark.read.parquet(path)
+    val dir = Files.createTempDirectory("graft-test-bpe-shards").toString
+    Packing.writeShards(packed, corpus, "doc_id", dir)
+    val all = TableIO.read(spark, dir, Packing.ShardStage)
     assert(all.count() == 5 && all.columns.contains("text"))
     val targetShard = packed.filter(col("doc_id") === 3L).head().getLong(3)
     val one = all.filter(col("shard") === targetShard)

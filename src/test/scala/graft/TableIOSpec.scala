@@ -154,4 +154,16 @@ class TableIOSpec extends AnyFunSuite {
     assert(computeRuns == 4)
     assert(TableIO.read(spark, dir, "multi", "agg").count() == 7)
   }
+
+  test("drop deletes listed, cut and missing stages; the rest stay listed") {
+    val dir = Files.createTempDirectory("graft_stage_drop").toString
+    for (n <- Seq("v_0", "v_1", "v_2"))
+      TableIO.stageWrite(spark, dir, n)((1 to 5).map(_.toLong).toDF("id"))
+    // v_1 is a cut write: data without its manifest
+    assert(TableIO.manifestPath(dir, "v_1").toFile.delete())
+    TableIO.drop(dir, Seq("v_0", "v_1", "v_9"))
+    assert(TableIO.stages(dir, "v_") == Seq("v_2"))
+    assert(new java.io.File(dir).list().toSeq == Seq("v_2"))
+    assert(TableIO.read(spark, dir, "v_2").count() == 5)
+  }
 }
