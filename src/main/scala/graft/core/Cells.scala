@@ -10,7 +10,8 @@ import scala.collection.mutable.ArrayBuffer
  * (/root/reference/pkg/datastructure/rtree.go:143-165) with a
  * space-filling-curve cell ID column:
  *  - R-tree insert            -> `encode(lat, lon, level)` column
- *  - R-tree range search      -> `coverBBox` / `coverPolygon` cell set + equi-join
+ *  - R-tree range search      -> the exact lat/lon filter; `coverBBox` lists
+ *    the tiles of the at-rest tile store, `coverPolygon` a PIP join's cells
  *  - R-tree incremental kNN   -> a per-query cap from point counts per cell
  *    (rtree.go:685-723's min-heap early termination becomes `blockLevel`:
  *    the finest 3x3 block holding k points, and `blockReachKm`, the
@@ -232,10 +233,8 @@ object Cells {
 
   val KmPerDegLat: Double = math.Pi * GeoMath.EarthRadiusKm / 180.0 // ~111.19
 
-  /** Height (km) of a cell at `level`; width additionally shrinks by cos(lat). */
+  /** Height (km) of a cell at `level`. */
   def cellHeightKm(level: Int): Double = 180.0 / (1L << level) * KmPerDegLat
-  def cellWidthKm(lat: Double, level: Int): Double =
-    360.0 / (1L << level) * KmPerDegLat * math.max(0.0, math.cos(GeoMath.degToRad(lat)))
 
   /**
    * The finest level in [1, finest] whose 3x3 block of cells around

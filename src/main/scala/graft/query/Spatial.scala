@@ -25,17 +25,17 @@ import graft.pipeline.TableIO
  *    [[reverseGeocode]] and [[nearestJoin]] are thin wrappers over the
  *    capped plan; [[knn]] folds the capped bounds for its one literal
  *    query into a filter over the points;
- *  - range/bbox search (rtree.go:505-531)              -> cell-cover equi-join;
- *    at rest, a tile-partitioned TableIO stage ([[tiledWrite]])
- *  - nearest-street join (indexer.go:986-1026)         -> cell-prefilter +
- *    min_by refine join
+ *  - range/bbox search (rtree.go:505-531)              -> the exact bbox
+ *    filter; at rest, a tile-partitioned TableIO stage ([[tiledWrite]])
+ *  - nearest-street join (indexer.go:986-1026)         -> the capped plan
+ *    with each way as a query, then the polyline refine and a top-1
  *  - region PIP join (indexer.go:1035-1061)            -> broadcast polygon
  *    cell cover + exact winding-number refine
  *
- * Scale design: the point table is assumed partitioned/sorted by `cell`
- * (see pipeline.TableIO), so the `isin` cover filters prune partitions and
- * row groups. The neighbour plans never pass query data through the
- * driver: covers are per-row expressions and the joins run in the plan.
+ * Scale design: bbox search is plain lat/lon comparisons, which Parquet
+ * and in-memory column stats prune on. The neighbour plans never pass
+ * query data through the driver: covers are per-row expressions and the
+ * joins run in the plan.
  */
 object Spatial {
 
@@ -76,8 +76,8 @@ object Spatial {
 
   /** The shared trade-level-for-radius rule: coarsen from `level` until the
    *  per-level radius is <= 2 (disk <= 25 cells) or the grid bottoms out.
-   *  The literal-cap covers, way covers and the fence-grid probes go
-   *  through this one invariant. */
+   *  The literal-cap covers (the way join's included) and the fence-grid
+   *  probes go through this one invariant. */
   private[query] def coarsen(level: Int, radAt: Int => Int): (Int, Int) = {
     var lvl = level
     while (radAt(lvl) > 2 && lvl > 1) lvl -= 1
@@ -120,15 +120,19 @@ object Spatial {
     case None => nearest(uncappedPairs(points, queries, k, level), k, col("qid"))
   }
 
-  /** [[cappedPairs]] with one cap for every query, at one literal level:
-   *  [[coarsen]]s `level` until the cover is at most 2 cells tall. */
+  /** [[cappedPairs]] with one cap for every query, at one literal level
+   *  ([[capLevel]]). */
   private def cappedAt(points: DataFrame, queries: DataFrame, level: Int, maxKm: Double): DataFrame = {
-    val (lvl, _) = coarsen(level, lv =>
-      math.max(1, math.ceil((maxKm + CapMarginKm) / Cells.cellHeightKm(lv)).toInt))
+    val lvl = capLevel(level, maxKm)
     cappedPairs(points.select(col("id"), col("lat"), col("lon"),
         cellEncode(col("lat"), col("lon"), lvl).as("jcell")),
       capCover(queries, lit(lvl), lit(maxKm)), lit(maxKm))
   }
+
+  /** The literal cover level of a `maxKm` cap: [[coarsen]]s `level` until
+   *  the cover is at most 2 cells tall. */
+  private def capLevel(level: Int, maxKm: Double): Int =
+    coarsen(level, lv => math.max(1, math.ceil((maxKm + CapMarginKm) / Cells.cellHeightKm(lv)).toInt))._1
 
   /**
    * Candidate pairs (qid, id, dist_km) that hold each query's k nearest
@@ -273,18 +277,14 @@ object Spatial {
       least(dLon, lit(360.0) - dLon) <= qspan
   }
 
-  /** Range (bbox) search — R-tree Search equivalent (rtree.go:505-531).
-   *  A box with lonMin > lonMax holds no rows: it does not wrap across the
-   *  antimeridian, and the cover ([[Cells.coverBBox]]) and the refine
-   *  filter agree on that. */
+  /** Range (bbox) search — R-tree Search equivalent (rtree.go:505-531):
+   *  the exact bbox filter, which scans prune on by their lat/lon stats. A
+   *  box with lonMin > lonMax holds no rows (it does not wrap across the
+   *  antimeridian), nor does a row with a null coordinate. */
   def rangeSearch(points: DataFrame, latMin: Double, lonMin: Double,
-                  latMax: Double, lonMax: Double,
-                  level: Int = Cells.DefaultLevel): DataFrame = {
-    val cells = Cells.coverBBox(latMin, lonMin, latMax, lonMax, level)
-    points.filter(col("cell").isin(cells.map(java.lang.Long.valueOf): _*))
-      .filter(col("lat") >= latMin && col("lat") <= latMax &&
-        col("lon") >= lonMin && col("lon") <= lonMax)
-  }
+                  latMax: Double, lonMax: Double): DataFrame =
+    points.filter(col("lat") >= latMin && col("lat") <= latMax &&
+      col("lon") >= lonMin && col("lon") <= lonMax)
 
   /** Coarse tile level for the at-rest spatial layout: level 7 is 64x
    *  coarser per axis than [[Cells.DefaultLevel]] 13 — ~16k populated
@@ -301,9 +301,9 @@ object Spatial {
    * the [[TileStage]] TableIO stage of `dir`, PARTITIONED BY their tile at
    * [[TileStoreLevel]], so a bbox query prunes at the DIRECTORY level and
    * the scan never opens tiles outside the query's cover. Within admitted
-   * tiles the usual fine-cell prefilter + exact bbox refine runs
-   * ([[rangeSearch]]). At 10^12 rows this is the difference between a
-   * full-table scan per query and reading cover/total of the data. The
+   * tiles the exact bbox filter runs ([[rangeSearch]]). At 10^12 rows this
+   * is the difference between a full-table scan per query and reading
+   * cover/total of the data. The
    * manifest rename commits the stage, and a complete stage is not
    * rewritten: delete it ([[TableIO.drop]]) to re-tile.
    */
@@ -314,19 +314,19 @@ object Spatial {
 
   /** Bbox search over the [[tiledWrite]] stage of `dir`, read with its
    *  manifest's DDL: coarse-tile partition pruning (asserted in
-   *  SpatialStoreSpec), then the exact [[rangeSearch]] refine. Result set
-   *  identical to [[rangeSearch]] over the full table; a stage whose write
-   *  was cut before its commit is refused, not served in part. */
+   *  SpatialStoreSpec) over a [[Cells.coverBBox]] of at most 2^14 tiles,
+   *  then the exact [[rangeSearch]] filter. Result set identical to
+   *  [[rangeSearch]] over the full table; a stage whose write was cut
+   *  before its commit is refused, not served in part. */
   def rangeSearchTiled(spark: org.apache.spark.sql.SparkSession, dir: String,
                        latMin: Double, lonMin: Double,
-                       latMax: Double, lonMax: Double,
-                       level: Int = Cells.DefaultLevel): DataFrame = {
+                       latMax: Double, lonMax: Double): DataFrame = {
     val tiles = Cells.coverBBox(latMin, lonMin, latMax, lonMax, TileStoreLevel)
     val pruned = TableIO.read(spark, dir, TileStage)
       .filter(col("tile").isin(tiles.map(java.lang.Long.valueOf): _*))
     // drop the synthetic partition column so the result schema really is
     // identical to rangeSearch over the original table
-    rangeSearch(pruned, latMin, lonMin, latMax, lonMax, level).drop("tile")
+    rangeSearch(pruned, latMin, lonMin, latMax, lonMax).drop("tile")
   }
 
   /**
@@ -388,44 +388,35 @@ object Spatial {
    *    (searcher.go:438-460) takes the min over the CLOSED ring of boundary
    *    segments.
    *
-   * Plan shape: ways are anchored at their first vertex and covered with
-   * disk(rad) cells at a level adapted so rad <= 2 ([[effectiveDisk]]-style
-   * coarsening; cover radius = maxKm + the longest vertex span, since any
-   * boundary point lies within that span of the anchor). The query side
-   * joins on its single exact cell and is broadcast; candidates then pay
-   * the exact projection refine ([[graft.functions.GeoFunctions
-   * .pointToPolylineKm]], codegen'd) and min_by picks the winner.
+   * Plan shape: the capped plan of [[knnJoin]] with the ways as its
+   * queries and the query rows as its points. Each way is anchored at its
+   * first vertex with the cap `maxKm` + its span (the longest
+   * anchor-to-vertex distance): the refine projects onto great-circle arcs
+   * between vertices, and a cap under a quarter circumference is convex,
+   * so every projected point lies within the span of the anchor (a longer
+   * span counts as half the circumference, the whole sphere). Each way
+   * gets its [[capCover]] at the literal level of `maxKm` ([[capLevel]]);
+   * the queries, encoded at that level, are broadcast and pass the exact
+   * [[capPrefilter]]. Candidates then pay the exact projection refine
+   * ([[graft.functions.GeoFunctions.pointToPolylineKm]], codegen'd) and a
+   * top-1 picks the winner in (dist, way_id) order.
    */
   def nearestWayJoin(queries: DataFrame, ways: DataFrame, maxKm: Double,
                      level: Int = Cells.DefaultLevel,
                      endpointsOnly: Boolean = false): DataFrame = {
-    val anchorLat = element_at(col("wlats"), 1)
-    val anchorLon = element_at(col("wlons"), 1)
-    // longest anchor->vertex span + ways' latitude band: one tiny agg
+    val lvl = capLevel(level, maxKm)
+    // each way row is a capped query (qlat, qlon, cap); the query rows are
+    // its points (lat, lon)
+    val quarterKm = math.Pi / 2 * GeoMath.EarthRadiusKm
     val span = aggregate(
-      zip_with(col("wlats"), col("wlons"),
-        (la, lo) => haversineKm(anchorLat, anchorLon, la, lo)),
+      zip_with(col("wlats"), col("wlons"), (la, lo) => haversineKm(col("qlat"), col("qlon"), la, lo)),
       lit(0.0), (acc, x) => greatest(acc, x))
-    val stats = ways.agg(max(span), min(anchorLat), max(anchorLat)).head()
-    if (stats.isNullAt(0)) // no ways at all: no pairs, keep the output schema
-      return queries.limit(0).select(col("qid"))
-        .crossJoin(ways.limit(0).select(col("way_id")))
-        .withColumn("dist_km", lit(0.0))
-    val spanKm = stats.getDouble(0)
-    val coverKm = maxKm + spanKm
-    val bandLat = math.min(89.9,
-      math.max(math.abs(stats.getDouble(1)), math.abs(stats.getDouble(2))) +
-        coverKm / Cells.KmPerDegLat)
-    def radAt(lv: Int): Int = math.max(1, math.ceil(coverKm /
-      math.min(Cells.cellWidthKm(bandLat, lv), Cells.cellHeightKm(lv))).toInt)
-    val (lvl, rad) = coarsen(level, radAt)
-
-    val rhs = ways
-      .withColumn("jcell",
-        explode(cellDisk(cellEncode(anchorLat, anchorLon, lit(lvl)), lit(rad))))
-    val lhs = queries
-      .select(col("qid"), col("qlat"), col("qlon"),
-        cellEncode(col("qlat"), col("qlon"), lit(lvl)).as("jcell"))
+    val covers = capCover(ways.withColumn("qlat", element_at(col("wlats"), 1))
+        .withColumn("qlon", element_at(col("wlons"), 1))
+        .withColumn("cap", lit(maxKm) + when(span < quarterKm, span).otherwise(2 * quarterKm)),
+      lit(lvl), col("cap"))
+    val points = queries.select(col("qid"), col("qlat").as("lat"), col("qlon").as("lon"),
+      cellEncode(col("qlat"), col("qlon"), lvl).as("jcell"))
     val refLats =
       if (endpointsOnly) array(element_at(col("wlats"), 1), element_at(col("wlats"), -1))
       else col("wlats")
@@ -435,8 +426,13 @@ object Spatial {
     // same TopK-for-min_by swap as [[knnJoin]]'s capped plan: hash aggregation with
     // map-side combine instead of a two-phase SortAggregate over every
     // candidate (way, query) row
-    rhs.join(broadcast(lhs), Seq("jcell"))
-      .withColumn("dist_km", pointToPolylineKm(col("qlat"), col("qlon"), refLats, refLons))
+    covers.join(broadcast(points), Seq("jcell"))
+      // null drops the row either way; the coalesce keeps Catalyst from
+      // inferring not-null filters on the cover columns, which it pushes
+      // under the explode with the per-way span inlined seven times
+      // (j2b on sf0.01: ~0.5 s more per run)
+      .filter(coalesce(capPrefilter(col("qlat"), col("qlon"), col("qspan"), col("cap")), lit(false)))
+      .withColumn("dist_km", pointToPolylineKm(col("lat"), col("lon"), refLats, refLons))
       .filter(col("dist_km") <= maxKm)
       .groupBy(col("qid"))
       .agg(TopK.topKByDist(1)(col("dist_km"), col("way_id")).as("nn"))

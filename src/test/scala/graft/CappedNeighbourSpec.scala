@@ -15,7 +15,9 @@ import graft.sources.Derived
  * (dist, id) order: capped through its three wrappers — [[Spatial.knn]]
  * with a radius, [[Spatial.reverseGeocode]] and [[Spatial.nearestJoin]] —
  * and uncapped, where each query's cap comes from the cell-count
- * histogram, through `knnJoin` itself and [[Spatial.knn]] without a radius.
+ * histogram, through `knnJoin` itself and [[Spatial.knn]] without a radius;
+ * and [[Spatial.nearestWayJoin]], the capped plan with ways as its queries,
+ * against brute-force polyline distance in (dist, way_id) order.
  * Points and queries mix in the edges where a cover that clamps longitude,
  * or takes its span from the centre's cos(lat), misses true neighbours:
  * |lat| > 89.5 and lon within 0.05 of ±180.
@@ -215,15 +217,67 @@ class CappedNeighbourSpec extends AnyFunSuite {
     }
   }
 
+  type Way = (Long, Option[Seq[Double]], Option[Seq[Double]])
+
+  /** A way of 1-4 vertices: its anchor, then vertices up to 3 km from it. */
+  private def way(anchor: (Double, Double)): Gen[(Seq[Double], Seq[Double])] = for {
+    n <- Gen.choose(0, 3)
+    vs <- Gen.listOfN(n, for (b <- Gen.choose(0.0, 360.0); d <- Gen.choose(0.0, 3.0))
+      yield GeoMath.destinationPoint(anchor._1, anchor._2, b, d))
+  } yield ((anchor +: vs).map(_._1), (anchor +: vs).map(_._2))
+
+  /** Ways anchored around one site and at edge sites, two duplicated under
+   *  new ids (ties on distance) and two with a null coordinate array. */
+  private val ways: Gen[(Seq[Way], (Double, Double))] = for {
+    c <- site
+    n <- Gen.choose(1, 12)
+    anchors <- Gen.listOfN(n, Gen.frequency(4 -> near(c), 1 -> site))
+    geoms <- Gen.sequence[List[(Seq[Double], Seq[Double])], (Seq[Double], Seq[Double])](anchors.map(way))
+  } yield {
+    val ws = geoms.zipWithIndex.map { case ((la, lo), i) => (i + 1L, Option(la), Option(lo)) }
+    (ws ++ ws.take(2).map(w => w.copy(_1 = w._1 + 1000)) ++
+      Seq((2001L, None, ws.head._3), (2002L, ws.head._2, None)), c)
+  }
+
+  test("nearestWayJoin == brute-force nearest way within maxKm, both refine modes") {
+    val args = for {
+      (ws, c) <- ways
+      qs <- Gen.listOfN(8, Gen.frequency(3 -> near(c), 1 -> site, 1 -> anywhere,
+        1 -> Gen.oneOf(ws.collect { case (_, Some(la), Some(lo)) => la.zip(lo) }.flatten)))
+      km <- capKm
+    } yield (ws, qs, km)
+    check(Prop.forAll(args) { case (ws, qs, km) =>
+      val queries = qs.zipWithIndex.map { case ((la, lo), i) => (i.toLong, Option(la), Option(lo)) } ++
+        Seq((100L, None, Some(qs.head._2)), (101L, Some(qs.head._1), None))
+      Seq(true, false).forall { endpointsOnly =>
+        val got = Spatial.nearestWayJoin(queries.toDF("qid", "qlat", "qlon"),
+            ws.toDF("way_id", "wlats", "wlons"), km, endpointsOnly = endpointsOnly)
+          .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
+        queries.forall {
+          case (qid, Some(la), Some(lo)) =>
+            val exp = ws.collect { case (id, Some(lats), Some(lons)) =>
+              val (rl, ro) = if (endpointsOnly) (Seq(lats.head, lats.last), Seq(lons.head, lons.last))
+                else (lats, lons)
+              (id, GeoMath.pointToPolylineKm(la, lo, rl.toArray, ro.toArray))
+            }.filter(_._2 <= km).minByOption(p => (p._2, p._1))
+            same(got.get(qid).toSeq, exp.toSeq)
+          case (qid, _, _) => !got.contains(qid)
+        }
+      }
+    }, 12)
+  }
+
   test("capped plans start no job until an action, and answer one query in a few") {
     val objs = Derived.objects(spark, TestSpark.Sf)
     val first = objs.select("lat", "lon", "feature").head()
     val (lat, lon, feature) = (first.getDouble(0), first.getDouble(1), first.getString(2))
     val query = Seq((1L, lat + 0.001, lon)).toDF("qid", "qlat", "qlon")
     val left = objs.select("id", "lat", "lon")
+    val ways = Derived.ways(spark, TestSpark.Sf)
     val (_, build) = TestSpark.jobsOf(Seq(
       Spatial.nearestJoin(left, objs, 5.0),
       Spatial.reverseGeocode(objs, query),
+      Spatial.nearestWayJoin(query, ways, 30.0),
       Spatial.knn(objs, lat, lon, 5, radiusKm = Some(3.0), feature = Some(feature))))
     assert(build == 0, s"building the capped plans ran $build jobs")
     val (rev, revJobs) = TestSpark.jobsOf(Spatial.reverseGeocode(objs, query).collect())

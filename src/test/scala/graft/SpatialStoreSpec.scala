@@ -139,19 +139,18 @@ class SpatialStoreSpec extends AnyFunSuite {
   private def ids(df: DataFrame): Seq[Long] = df.select("id").as[Long].collect().sorted.toSeq
 
   test("rangeSearch == brute-force bbox filter at the poles, ±180° and box edges (property)") {
-    // the cover enumerates every cell of the box, so fine levels get
-    // boxes of a few degrees and coarse ones the whole sphere; shrinking
-    // would break that bound, so a failure reports the generated case
+    // boxes within a degree or anywhere, and the whole sphere, over a
+    // `cell` column at any level (the filter does not read it)
     val args = for {
-      level <- Gen.oneOf(0, 4, 7, Cells.DefaultLevel)
-      spread = if (level <= 7) 360.0 else 1.0
+      level <- Gen.oneOf(0, 4, 7, Cells.DefaultLevel, Cells.MaxLevel)
+      spread <- Gen.oneOf(1.0, 360.0)
       (c, pts) <- world(spread)
       bs <- Gen.listOfN(4, box(c, spread, pts))
-    } yield (pts, bs, level)
+    } yield (pts, bs :+ ((-90.0, -180.0, 90.0, 180.0)), level)
     val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(40),
-      Prop.forAllNoShrink(args) { case (pts, bs, level) =>
+      Prop.forAll(args) { case (pts, bs, level) =>
         val f = frame(pts, level)
-        bs.forall(b => ids(Spatial.rangeSearch(f, b._1, b._2, b._3, b._4, level)) == brute(pts, b))
+        bs.forall(b => ids(Spatial.rangeSearch(f, b._1, b._2, b._3, b._4)) == brute(pts, b))
       })
     assert(res.passed, Pretty.pretty(res))
   }
@@ -165,11 +164,8 @@ class SpatialStoreSpec extends AnyFunSuite {
       .zipWithIndex.map { case ((la, lo), i) => (i + 1L, Option(la), Option(lo)) }
     val all = pts ++ pts.take(3).map(p => p.copy(_1 = p._1 + 1000)) ++
       Seq((2001L, None, Some(20.0)), (2002L, Some(10.0), None), (2003L, None, None))
-    // fine cells at the tile level: the whole-sphere box's cover then
-    // enumerates 2^13 cells, not 2^25
-    val level = Spatial.TileStoreLevel
     val dir = Files.createTempDirectory("graft_tiles_edges").toString
-    Spatial.tiledWrite(frame(all, level), dir)
+    Spatial.tiledWrite(frame(all), dir)
     val boxes: Seq[Box] = Seq(
       (-90.0, -180.0, 90.0, 180.0), // the whole sphere
       (89.0, -180.0, 90.0, 180.0), // the north cap, touching +90
@@ -180,7 +176,7 @@ class SpatialStoreSpec extends AnyFunSuite {
       (0.0, 0.0, 12.0, 180.0),
       (-50.0, 179.0, -40.0, -179.0)) // lonMin > lonMax: empty
     boxes.foreach { b =>
-      val got = ids(Spatial.rangeSearchTiled(spark, dir, b._1, b._2, b._3, b._4, level))
+      val got = ids(Spatial.rangeSearchTiled(spark, dir, b._1, b._2, b._3, b._4))
       assert(got == brute(all, b), s"box $b")
     }
     assert(brute(all, boxes.head).size == all.size - 3)

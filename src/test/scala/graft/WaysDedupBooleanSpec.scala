@@ -89,6 +89,38 @@ class WaysDedupBooleanSpec extends AnyFunSuite {
     }
   }
 
+  // a cover that picks one level for every way from the ways' latitude band
+  // (clamped below the pole) or clamps longitude drops ways within maxKm
+  // here; (query, expected distance) against one way, in both refine modes
+  private def nearestWay(wlats: Seq[Double], wlons: Seq[Double], maxKm: Double,
+                         qs: Seq[((Double, Double), Double)]): Unit = {
+    val ways = Seq((7L, wlats, wlons)).toDF("way_id", "wlats", "wlons")
+    val queries = qs.zipWithIndex.map { case (((la, lo), _), i) => (i.toLong, la, lo) }
+      .toDF("qid", "qlat", "qlon")
+    for (endpointsOnly <- Seq(true, false)) {
+      val got = Spatial.nearestWayJoin(queries, ways, maxKm, endpointsOnly = endpointsOnly)
+        .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
+      for ((((la, lo), km), i) <- qs.zipWithIndex) {
+        val d = GeoMath.pointToPolylineKm(la, lo, wlats.toArray, wlons.toArray)
+        assert(math.abs(d - km) < 1e-3 && d <= maxKm, s"fixture drift: $d km")
+        assert(got.get(i.toLong) == Some((7L, d)),
+          s"way at $d km from ($la, $lo) dropped, endpointsOnly = $endpointsOnly: $got")
+      }
+    }
+  }
+
+  test("nearestWayJoin keeps a way within maxKm near the pole") {
+    nearestWay(Seq(89.99, 89.99), Seq(0.0, 0.001), 5.0,
+      Seq((89.99, 90.0) -> 1.573, (89.99, 180.0) -> 2.224))
+  }
+
+  test("nearestWayJoin keeps a way within maxKm across the antimeridian") {
+    nearestWay(Seq(0.0, 0.0), Seq(179.99, 179.995), 5.0, Seq((0.0, -179.99) -> 1.668))
+    // a way crossing it: the refine projects onto the arc over ±180
+    nearestWay(Seq(0.0, 0.0), Seq(179.99, -179.995), 5.0,
+      Seq((0.0, -179.99) -> 0.556, (0.0, 179.98) -> 1.112))
+  }
+
   // ---- spatial (name + bbox) dedup -----------------------------------------
 
   test("spatialClusters: nested same-name boxes collapse to min id, either containment direction counts") {
