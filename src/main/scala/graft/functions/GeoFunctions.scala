@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.graftbridge.ColumnBridge.{column => toCol, expression => toExpr}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, TernaryExpression, QuaternaryExpression, SeptenaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, TernaryExpression, QuaternaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, CodegenFallback}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
@@ -139,33 +139,6 @@ case class PointToPolylineKmExpr(first: Expression, second: Expression,
     copy(first = a, second = b, third = c, fourth = d)
 }
 
-/** line_circle_intersect(centerLat, centerLon, radiusKm, lat1, lon1,
- *  lat2, lon2): segment-vs-circle crossing as one codegen'd static call
- *  into [[graft.core.GeoMath.lineCircleIntersect]] — see the Column
- *  wrapper's scaladoc for why the built-in-arithmetic tree was replaced. */
-case class LineCircleIntersectExpr(
-    cLat: Expression, cLon: Expression, rKm: Expression,
-    lat1: Expression, lon1: Expression, lat2: Expression, lon2: Expression)
-    extends SeptenaryExpression {
-  override def children: Seq[Expression] = Seq(cLat, cLon, rKm, lat1, lon1, lat2, lon2)
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "line_circle_intersect"
-  override def nullSafeEval(a: Any, b: Any, c: Any, d: Any, e: Any, f: Any,
-                            g: Option[Any]): Any =
-    GeoMath.lineCircleIntersect(
-      a.asInstanceOf[Double], b.asInstanceOf[Double], c.asInstanceOf[Double],
-      d.asInstanceOf[Double], e.asInstanceOf[Double], f.asInstanceOf[Double],
-      g.get.asInstanceOf[Double])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b, c, d, e, f, g) =>
-      s"graft.core.GeoMath.lineCircleIntersect($a, $b, $c, $d, $e, $f, ${g.get})")
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression =
-    copy(cLat = newChildren(0), cLon = newChildren(1), rKm = newChildren(2),
-      lat1 = newChildren(3), lon1 = newChildren(4), lat2 = newChildren(5),
-      lon2 = newChildren(6))
-}
-
 /**
  * Column-level geo functions. Everything expressible with built-in
  * `org.apache.spark.sql.functions` stays built-in (full whole-stage
@@ -263,31 +236,7 @@ object GeoFunctions {
   def pointToPolylineKm(lat: Column, lon: Column, polyLats: Column, polyLons: Column): Column =
     toCol(PointToPolylineKmExpr(toExpr(lat.cast(DoubleType)), toExpr(lon.cast(DoubleType)), toExpr(polyLats), toExpr(polyLons)))
 
-  /** Segment-circle intersection (reference circle.go:54-96) as ONE
-   *  codegen'd static call into [[GeoMath.lineCircleIntersect]].
-   *
-   *  Optimization-round replacement for the previous built-in-arithmetic
-   *  Column tree: every reference of beta/alpha/disc in that tree
-   *  duplicated its whole radians/cos subtree, and because the caller's
-   *  CASE evaluates the `crossed` branch lazily, codegen subexpression
-   *  elimination could not factor them — measured as ~3.2 s of the st2
-   *  status projection at sf0.1, vs ~0.3 s for everything else.
-   *  Semantics are unchanged: the scalar twin is the same equirectangular-
-   *  projection quadratic; its Java division yields Inf/NaN on a
-   *  zero-length segment (alpha = 0), whose comparisons are false — the
-   *  same final CROSS/OUTSIDE outcome the previous try_divide-NULL form
-   *  produced (NULL collapses to false in the caller's CASE). The
-   *  streaming path (GeofenceStream) has always called this scalar, and
-   *  the batch/stream parity spec pinned the two forms equal already. */
-  def lineCircleIntersect(centerLat: Column, centerLon: Column, radiusKm: Column,
-                          lat1: Column, lon1: Column, lat2: Column, lon2: Column): Column =
-    toCol(LineCircleIntersectExpr(
-      toExpr(centerLat.cast(DoubleType)), toExpr(centerLon.cast(DoubleType)),
-      toExpr(radiusKm.cast(DoubleType)), toExpr(lat1.cast(DoubleType)),
-      toExpr(lon1.cast(DoubleType)), toExpr(lat2.cast(DoubleType)),
-      toExpr(lon2.cast(DoubleType))))
-
-  /** SQL twin of [[lineCircleIntersect]] for the DuckDB oracle. */
+  /** SQL twin of [[GeoMath.lineCircleIntersect]] for the DuckDB oracle. */
   def lineCircleIntersectSql(centerLat: String, centerLon: String, radiusKm: String,
                              lat1: String, lon1: String, lat2: String, lon2: String): String = {
     val eR = GeoMath.EarthRadiusM

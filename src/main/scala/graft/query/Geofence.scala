@@ -1,10 +1,8 @@
 package graft.query
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-
-import graft.functions.GeoFunctions._
 
 /**
  * Geofencing: circle fences vs a stream of per-point positions, with the
@@ -21,26 +19,37 @@ import graft.functions.GeoFunctions._
  * OUTSIDE (fence_index.go:61-64). "Contains" is haversine <= radius
  * (circle.go:40-42).
  *
- * Batch semantics: the reference processes one API call at a time and reads
- * the previous position from a KV store (kv_db.go:109-137) — the batch
- * equivalent is lag() over (point, ts). The fence set is tiny and broadcast.
  * The reference evaluates only the 3 fences nearest to the current point
- * (geofence.go:65); `nearestFences` reproduces that cap (ordered by center
- * distance — the reference orders by R-tree bbox min-dist, identical for
- * point-like circle bounds of equal radius).
+ * (geofence.go:65), found in its fence R-tree. Here one [[FenceGrid]]
+ * picks them and [[FenceGrid.statuses]] applies the rule above, for the
+ * batch operator [[fenceStatus]] and the streaming operator
+ * [[graft.streaming.GeofenceStream]] alike, at every fence count. Batch
+ * reads the previous position with lag() over (point, ts), the batch
+ * equivalent of the reference's KV store (kv_db.go:109-137); the stream
+ * keeps it as keyed state.
  */
 object Geofence {
 
   case class Fence(key: String, lat: Double, lon: Double, radiusKm: Double)
 
+  /** One emitted status; `seq` orders the two of EXIT/OUTSIDE and
+   *  ENTER/INSIDE. */
+  case class FenceStatus(fence_key: String, seq: Int, status: String)
+
+  /** Fences evaluated per position (geofence.go:65). */
+  val NearestFences = 3
+
+  /** Latitude and longitude of the previous position a point's first
+   *  position is given (fence_index.go:61-64). */
+  val NoPosition = -999.0
+
   /**
    * Broadcastable cell-grid index over a fence set: the engine's
    * counterpart of the reference's fence R-tree (fence_index.go:33-48),
-   * used by [[fenceStatus]] past [[LiteralFenceMax]] fences and by the
-   * streaming operator, where each task holds the fence set and a
-   * per-point O(|fences|) scan would multiply a 10^12-point stream by a
-   * 10^4-fence set. Fence CENTERS are kept sorted by their cell at
-   * `level`, so a coarser cell's fences are one id range
+   * shipped to every task of [[fenceStatus]] and of the streaming
+   * operator, where a per-point O(|fences|) scan would multiply a
+   * 10^12-point stream by a 10^4-fence set. Fence CENTERS are kept sorted
+   * by their cell at `level`, so a coarser cell's fences are one id range
    * ([[graft.core.Cells.childRange]]). [[nearest]] probes disks around the
    * point on the [[Spatial.effectiveDisk]] schedule (at most 25 cells a
    * probe, the whole grid last) and stops when the kth distance is within
@@ -51,7 +60,8 @@ object Geofence {
       extends Serializable {
     import graft.core.{Cells, GeoMath}
 
-    /** The k nearest fences to (lat, lon) in (haversine, key) order. */
+    /** The k nearest fences to (lat, lon) in (haversine, key) order. When
+     *  k covers the whole set there is nothing to prune: every fence, sorted. */
     def nearest(lat: Double, lon: Double, k: Int): Seq[Fence] = {
       @annotation.tailrec
       def probe(r: Int): Seq[Fence] = {
@@ -75,8 +85,33 @@ object Geofence {
           Seq.fill(top.size)(top.poll()._2).reverse
         else probe(2 * r)
       }
-      probe(1)
+      if (k >= fences.length)
+        fences.map(f => (GeoMath.haversineKm(lat, lon, f.lat, f.lon), f))
+          .sorted(FenceGrid.Nearest).map(_._2).toSeq
+      else probe(1)
     }
+
+    /** The rule for a move (prevLat, prevLon) -> (lat, lon), against each
+     *  of the k fences [[nearest]] (lat, lon) in turn. A previous position
+     *  at [[NoPosition]] is OUTSIDE every fence, but the CROSS test still
+     *  sees it, exactly like the reference (geofence.go:108-113). */
+    def statuses(prevLat: Double, prevLon: Double, lat: Double, lon: Double,
+                 k: Int): Seq[FenceStatus] =
+      nearest(lat, lon, k).flatMap { f =>
+        val prevIn = prevLat != NoPosition &&
+          GeoMath.circleContains(f.lat, f.lon, f.radiusKm, prevLat, prevLon)
+        val currIn = GeoMath.circleContains(f.lat, f.lon, f.radiusKm, lat, lon)
+        val st = (prevIn, currIn) match {
+          case (true, true) => Seq("INSIDE")
+          case (true, false) => Seq("EXIT", "OUTSIDE")
+          case (false, true) => Seq("ENTER", "INSIDE")
+          case (false, false) =>
+            if (GeoMath.lineCircleIntersect(f.lat, f.lon, f.radiusKm, prevLat, prevLon, lat, lon))
+              Seq("CROSS")
+            else Seq("OUTSIDE")
+        }
+        st.zipWithIndex.map { case (s, i) => FenceStatus(f.key, i, s) }
+      }
 
     /** Index of the first fence whose cell is >= c. */
     private def from(c: Long): Int = {
@@ -90,8 +125,9 @@ object Geofence {
   }
 
   object FenceGrid {
-    private val Farthest: Ordering[(Double, Fence)] =
-      Ordering.by[(Double, Fence), (Double, String)](t => (t._1, t._2.key)).reverse
+    private val Nearest: Ordering[(Double, Fence)] =
+      Ordering.by[(Double, Fence), (Double, String)](t => (t._1, t._2.key))
+    private val Farthest = Nearest.reverse
 
     def build(fences: Seq[Fence],
               level: Int = graft.core.Cells.DefaultLevel): FenceGrid = {
@@ -185,116 +221,34 @@ object Geofence {
 
     /** FenceIndex.Search recast for batch: status of a track against the
      *  named persisted collection (fence_index.go:49-72). */
-    def search(name: String, track: DataFrame, nearestFences: Int = 3): DataFrame =
+    def search(name: String, track: DataFrame, nearestFences: Int = NearestFences): DataFrame =
       fenceStatus(track, fences(name), nearestFences)
   }
-
-  /** Above this fence count the literal-array plan stops being the right
-   *  shape (plan-size blowup from an N-element literal in every task) and
-   *  [[fenceStatus]] picks the nearest fences from a broadcast
-   *  [[FenceGrid]] instead — the engine equivalent of the reference's
-   *  fence R-tree (fence_index.go:33-48). */
-  val LiteralFenceMax = 64
 
   /**
    * track: (event_id, user_id, ts, lat, lon); fences broadcast.
    * Returns one row per emitted status: (event_id, user_id, ts, fence_key,
    * seq, status) where seq orders multi-status emissions (EXIT/OUTSIDE,
-   * ENTER/INSIDE). Fence sets up to [[LiteralFenceMax]] evaluate map-side
-   * as a literal array; larger sets select each row's nearest fences from
-   * a broadcast [[FenceGrid]] (same rows, no fence literals in the plan).
+   * ENTER/INSIDE). A row with a null lat or lon emits nothing and is not
+   * the previous position of the next row. One projection over the `lag`
+   * window: a UDF over a broadcast [[FenceGrid]] applies
+   * [[FenceGrid.statuses]], the rule the streaming operator applies too,
+   * so building the plan runs no job and puts no fence literal in it.
    */
-  def fenceStatus(track: DataFrame, fences: Seq[Fence], nearestFences: Int = 3): DataFrame = {
-    // empty fence set (a supported FenceStore state: collection exists, no
-    // circles yet): no statuses, like the reference's FenceIndex.Search
-    // over an empty index. Without this guard the zero-struct literal
-    // array() types as array<null> and the transform lambda's field
-    // extraction fails analysis.
-    if (fences.isEmpty)
-      return track
-        .select(col("event_id"), col("user_id"), col("ts"),
-          lit("").as("fence_key"), lit(0).as("seq"), lit("").as("status"))
-        .limit(0)
-
-    if (fences.size > LiteralFenceMax) return fenceStatusByGrid(track, fences, nearestFences)
-
-    // keep the `nearestFences` fences per point, by center distance — the
-    // fence set is a literal array, so per-row sort + slice selects the
-    // nearest MAP-SIDE: no track x fences cross product through a
-    // row_number window (that shape shuffles every candidate row; this one
-    // adds zero shuffles beyond the lag window above). struct field order
-    // (fdist, fence_key) makes array_sort reproduce ORDER BY fdist, key.
-    val fenceArr = array(fences.map(f => struct(
-      lit(f.key).as("fence_key"), lit(f.lat).as("flat"),
-      lit(f.lon).as("flon"), lit(f.radiusKm).as("fradius"))): _*)
-    statusOfNearest(track, slice(withDist(fenceArr), 1, nearestFences))
-  }
-
-  /** The past-[[LiteralFenceMax]] plan of [[fenceStatus]], callable at any
-   *  fence count so specs can compare it with the literal plan: a UDF over
-   *  a broadcast [[FenceGrid]] picks each row's nearest fences, in one
-   *  projection with no job at build time. A row with a null lat or lon
-   *  gets no fences (the UDF is not called), so no status. */
-  private[graft] def fenceStatusByGrid(track: DataFrame, fences: Seq[Fence],
-                                       nearestFences: Int): DataFrame = {
+  def fenceStatus(track: DataFrame, fences: Seq[Fence],
+                  nearestFences: Int = NearestFences): DataFrame = {
     val grid = track.sparkSession.sparkContext.broadcast(FenceGrid.build(fences))
-    val nearest = udf((lat: Double, lon: Double) => grid.value.nearest(lat, lon, nearestFences))
-    statusOfNearest(track, withDist(transform(nearest(col("lat"), col("lon")), f => struct(
-      f("key").as("fence_key"), f("lat").as("flat"),
-      f("lon").as("flon"), f("radiusKm").as("fradius")))))
-  }
-
-  /** (fence_key, flat, flon, fradius) structs -> (fdist, fence_key, flat,
-   *  flon, fradius), fdist the column haversine from the row's point. */
-  private def withDist(fences: Column): Column = array_sort(transform(fences, f => struct(
-    haversineKm(col("lat"), col("lon"), f("flat"), f("flon")).as("fdist"),
-    f("fence_key").as("fence_key"), f("flat").as("flat"),
-    f("flon").as("flon"), f("fradius").as("fradius"))))
-
-  /** One row per (track row, fence in `nearest`), then the statuses. */
-  private def statusOfNearest(track: DataFrame, nearest: Column): DataFrame =
-    statusFromNearest(withPrev(track)
-      .withColumn("nf", explode(nearest))
-      .select(col("*"), col("nf.fence_key").as("fence_key"), col("nf.flat").as("flat"),
-        col("nf.flon").as("flon"), col("nf.fradius").as("fradius"),
-        col("nf.fdist").as("fdist"))
-      .drop("nf"))
-
-  /** lag() previous position per user — shared by both plans. */
-  private def withPrev(track: DataFrame): DataFrame = {
+    val statuses = udf((prevLat: Double, prevLon: Double, lat: Double, lon: Double) =>
+      grid.value.statuses(prevLat, prevLon, lat, lon, nearestFences))
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    track
-      .withColumn("prev_lat", lag(col("lat"), 1, -999.0).over(w))
-      .withColumn("prev_lon", lag(col("lon"), 1, -999.0).over(w))
+    located(track)
+      .withColumn("prev_lat", lag(col("lat"), 1, NoPosition).over(w))
+      .withColumn("prev_lon", lag(col("lon"), 1, NoPosition).over(w))
+      .select(col("event_id"), col("user_id"), col("ts"),
+        inline(statuses(col("prev_lat"), col("prev_lon"), col("lat"), col("lon"))))
   }
 
-  /** Status projection over per-(point, fence) candidate rows — the shared
-   *  tail of both plans. Input columns: event_id, user_id, ts, lat, lon,
-   *  prev_lat, prev_lon, fence_key, flat, flon, fradius, fdist. */
-  private def statusFromNearest(nearest: DataFrame): DataFrame = {
-    // each predicate is computed ONCE as a boolean column before the CASE:
-    // CaseWhen branches are lazily evaluated, so Catalyst cannot eliminate
-    // a subexpression shared ACROSS branches — inlining these re-evaluated
-    // the prev-position haversine in every branch condition (measured 1.7 s
-    // vs 0.3 s for the whole status projection at sf0.1). curr_in reuses
-    // the nearest-fence distance already computed for the ranking.
-    val prevIn = col("prev_lat") =!= -999.0 &&
-      haversineKm(col("flat"), col("flon"), col("prev_lat"), col("prev_lon")) <= col("fradius")
-    val currIn = col("fdist") <= col("fradius")
-    val crosses = lineCircleIntersect(col("flat"), col("flon"), col("fradius"),
-      col("prev_lat"), col("prev_lon"), col("lat"), col("lon"))
-
-    val statuses = when(col("prev_in") && col("curr_in"), array(lit("INSIDE")))
-      .when(col("prev_in") && !col("curr_in"), array(lit("EXIT"), lit("OUTSIDE")))
-      .when(!col("prev_in") && col("curr_in"), array(lit("ENTER"), lit("INSIDE")))
-      .otherwise(when(col("crossed"), array(lit("CROSS"))).otherwise(array(lit("OUTSIDE"))))
-
-    nearest
-      .withColumn("prev_in", prevIn)
-      .withColumn("curr_in", currIn)
-      .withColumn("crossed", crosses)
-      .withColumn("statuses", statuses)
-      .select(col("event_id"), col("user_id"), col("ts"), col("fence_key"),
-        posexplode(col("statuses")).as(Seq("seq", "status")))
-  }
+  /** The track rows that have a position: both lat and lon non-null. */
+  private[graft] def located(track: DataFrame): DataFrame =
+    track.filter(col("lat").isNotNull && col("lon").isNotNull)
 }

@@ -12,10 +12,10 @@ import graft.query.Geofence.{Fence, FenceGrid}
 import graft.streaming.GeofenceStream
 
 /**
- * [[FenceGrid.nearest]], the one nearest-fence index of the batch operator
- * past [[Geofence.LiteralFenceMax]] fences and of the streaming operator,
- * against brute force in (GeoMath distance, key) order. Fence sets are
- * clustered around one site or spread over a continent-sized band, mixed
+ * [[FenceGrid.nearest]], the one nearest-fence picker of the batch and the
+ * streaming operator at every fence count, against brute force in (GeoMath
+ * distance, key) order. Fence sets of 0-300 fences are clustered around
+ * one site or spread over a continent-sized band, mixed
  * with fences at |lat| > 89.5 and lon within 0.05 of ±180, where the probe
  * disks wrap and the stop bound goes to 0, and with duplicate centres,
  * which tie by key.
@@ -39,14 +39,14 @@ class FenceGridSpec extends AnyFunSuite {
   private val band: Gen[(Double, Double)] =
     for (lat <- Gen.choose(-60.0, 60.0); lon <- Gen.choose(-180.0, 180.0)) yield (lat, lon)
 
-  /** 65-300 fences, clustered within 30 km of a site or continent-sparse,
+  /** 0-300 fences, clustered within 30 km of a site or continent-sparse,
    *  a seventh of them at edge sites, plus up to 5 duplicate centres. Keys
    *  are scrambled so that key order is not position order. Also returns
    *  the cluster site. */
   private val fenceSet: Gen[(Seq[Fence], (Double, Double))] = for {
     c <- site
     clustered <- Gen.oneOf(true, false)
-    n <- Gen.choose(65, 300)
+    n <- Gen.choose(0, 300)
     locs <- Gen.listOfN(n, Gen.frequency(6 -> (if (clustered) near(c, 30.0) else band), 1 -> site))
     dups <- Gen.choose(0, 5)
   } yield {
@@ -67,12 +67,12 @@ class FenceGridSpec extends AnyFunSuite {
       (fences, c) <- fenceSet
       pts <- Gen.listOfN(8, Gen.frequency(3 -> near(c, 50.0), 2 -> site, 1 -> band))
       antipode = (-c._1, if (c._2 > 0) c._2 - 180.0 else c._2 + 180.0)
-    } yield (fences, pts :+ antipode :+ ((fences.head.lat, fences.head.lon)))
+    } yield (fences, pts ++ (antipode +: fences.take(1).map(f => (f.lat, f.lon))))
     check(Prop.forAllNoShrink(args) { case (fences, pts) =>
       val grid = FenceGrid.build(fences)
       val failures = for {
         (lat, lon) <- pts
-        k <- Seq(1, 3, 7, fences.size + 2)
+        k <- Seq(1, 3, 7, fences.size, fences.size + 2)
         got = grid.nearest(lat, lon, k).map(_.key)
         exp = brute(fences, lat, lon, k)
         if got != exp
@@ -108,7 +108,6 @@ class FenceGridSpec extends AnyFunSuite {
     def keys(df: org.apache.spark.sql.DataFrame) =
       df.select("event_id", "fence_key", "seq", "status").collect()
         .map(r => (r.getLong(0), r.getString(1), r.getInt(2), r.getString(3))).toSet
-    assert(fences.size > Geofence.LiteralFenceMax)
     val batch = keys(Geofence.fenceStatus(track, fences))
     val stream = keys(GeofenceStream.runBatchAsStream(spark, track, fences,
       queryName = "fence_grid_edges"))

@@ -13,7 +13,8 @@ import graft.streaming.GeofenceStream
 
 /**
  * Geofence transition truth table (/root/reference/pkg/geofence/
- * geofence.go:97-116) and batch-vs-streaming parity.
+ * geofence.go:97-116), the batch operator against a brute-force reference,
+ * and batch-vs-streaming parity.
  */
 class GeofenceSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -78,48 +79,124 @@ class GeofenceSpec extends AnyFunSuite {
     assert(out == Set("a", "b", "c"))
   }
 
-  /** 40 fences over the derived track's region: at most LiteralFenceMax,
-   *  so both plans can run on the same input. */
+  /** 40 fences over the derived track's region. */
   private val grid40 = (for (i <- 0 until 8; j <- 0 until 5) yield
     Fence(f"g$i%02d_$j", -8.2 + i * 0.35, 110.0 + j * 0.5, 20.0 + (i + j) % 3 * 10)).toSeq
+
+  /** grid40 shifted by a tenth of a degree, twice over: 80 fences. */
+  private val grid80 = grid40 ++ grid40.map(f => f.copy(key = f.key + "b", lat = f.lat + 0.1))
 
   /** 10k fences on a 0.02 x 0.05 degree lattice, about one per level-13 cell. */
   private val lattice10k = (0 until 10000).map(i =>
     Fence(f"k$i%05d", -8.5 + (i % 100) * 0.02, 105.5 + (i / 100) * 0.05, 5.0))
 
-  private def statusKeys(df: org.apache.spark.sql.DataFrame) =
+  private type Status = (Long, String, Int, String)
+
+  private def statusKeys(df: org.apache.spark.sql.DataFrame): Set[Status] =
     df.select("event_id", "fence_key", "seq", "status").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getInt(2), r.getString(3))).toSet
 
-  test("grid path == literal path row-for-row at 40 fences") {
-    val track = Derived.track(spark, TestSpark.Sf)
-    val lit = statusKeys(Geofence.fenceStatus(track, grid40))
-    val byGrid = statusKeys(Geofence.fenceStatusByGrid(track, grid40, 3))
-    assert(byGrid == lit, s"grid plan diverged: ${byGrid.diff(lit).take(3)} vs ${lit.diff(byGrid).take(3)}")
-    assert(lit.nonEmpty)
+  /** The operator by brute force on the driver: rows without a position
+   *  dropped, each user's rows in (ts, event_id) order, every fence sorted
+   *  by (GeoMath haversine, key) and the first k kept, then the truth
+   *  table with GeoMath's circleContains and lineCircleIntersect. */
+  private def reference(track: org.apache.spark.sql.DataFrame, fences: Seq[Fence],
+                        k: Int = 3): Set[Status] = {
+    val located = track
+      .select(col("event_id"), col("user_id"), col("ts").cast("timestamp"), col("lat"), col("lon"))
+      .collect().toSeq
+      .filterNot(r => r.isNullAt(3) || r.isNullAt(4))
+      .map(r => (r.getLong(0), r.getLong(1), r.getTimestamp(2).getTime, r.getDouble(3), r.getDouble(4)))
+    located.groupBy(_._2).values.flatMap { rows =>
+      val byTime = rows.sortBy(p => (p._3, p._1))
+      byTime.zip(None +: byTime.map(p => Some((p._4, p._5)))).flatMap {
+        case ((id, _, _, lat, lon), prev) =>
+          fences.sortBy(f => (GeoMath.haversineKm(lat, lon, f.lat, f.lon), f.key)).take(k).flatMap { f =>
+            def in(p: (Double, Double)) = GeoMath.circleContains(f.lat, f.lon, f.radiusKm, p._1, p._2)
+            val (pLat, pLon) = prev.getOrElse((-999.0, -999.0))
+            val st = (prev.exists(in), in((lat, lon))) match {
+              case (true, true) => Seq("INSIDE")
+              case (true, false) => Seq("EXIT", "OUTSIDE")
+              case (false, true) => Seq("ENTER", "INSIDE")
+              case (false, false) =>
+                if (GeoMath.lineCircleIntersect(f.lat, f.lon, f.radiusKm, pLat, pLon, lat, lon)) Seq("CROSS")
+                else Seq("OUTSIDE")
+            }
+            st.zipWithIndex.map { case (s, i) => (id, f.key, i, s) }
+          }
+      }
+    }.toSet
   }
 
-  test("past LiteralFenceMax: building runs 0 jobs, collect() no more jobs than the literal path") {
+  private def diverged(got: Set[Status], exp: Set[Status]) =
+    s"extra ${got.diff(exp).take(3)}, missing ${exp.diff(got).take(3)}"
+
+  test("fenceStatus == brute-force reference at 0, 1, 2, 3, 40 and 80 fences") {
     val track = Derived.track(spark, TestSpark.Sf)
-    // grid40 shifted by a tenth of a degree, twice over: 80 fences
-    val many = grid40 ++ grid40.map(f => f.copy(key = f.key + "b", lat = f.lat + 0.1))
-    assert(many.size > Geofence.LiteralFenceMax)
-    val (out, buildJobs) = TestSpark.jobsOf(Geofence.fenceStatus(track, many))
-    assert(buildJobs == 0, s"building the grid plan ran $buildJobs jobs")
-    val (rows, gridJobs) = TestSpark.jobsOf(out.collect())
-    val (_, litJobs) = TestSpark.jobsOf(Geofence.fenceStatus(track, grid40).collect())
-    assert(rows.nonEmpty)
-    assert(gridJobs <= litJobs, s"grid path collect() ran $gridJobs jobs, the literal path $litJobs")
+    for (fences <- Seq(Nil, grid40.take(1), grid40.take(2), grid40.take(3), grid40, grid80)) {
+      val got = statusKeys(Geofence.fenceStatus(track, fences))
+      val exp = reference(track, fences)
+      assert(got == exp, s"${fences.size} fences: ${diverged(got, exp)}")
+      if (fences.size >= 40) assert(exp.exists(_._4 == "INSIDE"), "no track point came inside a fence")
+    }
   }
 
-  test("past LiteralFenceMax: a track row with a null lat or lon gives no status rows") {
-    val track = Seq[(Long, Long, Timestamp, Option[Double], Option[Double])](
+  test("building the plan runs 0 jobs at 2, 40 and 80 fences; collect() at most 2") {
+    val track = Derived.track(spark, TestSpark.Sf)
+    for (fences <- Seq(grid40.take(2), grid40, grid80)) {
+      val (out, buildJobs) = TestSpark.jobsOf(Geofence.fenceStatus(track, fences))
+      assert(buildJobs == 0, s"building the plan at ${fences.size} fences ran $buildJobs jobs")
+      val (rows, jobs) = TestSpark.jobsOf(out.collect())
+      assert(rows.nonEmpty)
+      // 2: what the literal-array plan this one replaced ran at 40 fences
+      assert(jobs <= 2, s"collect() at ${fences.size} fences ran $jobs jobs")
+    }
+  }
+
+  test("a null lat or lon emits nothing and is no previous position, batch and stream") {
+    // at 40 fences, (-8.2, 110.0) is the centre of g00_0; at 10k fences,
+    // (-7.4, 108.1) is the centre of k05255
+    val cases = Seq(
+      (grid40, Seq[(Long, Long, Timestamp, Option[Double], Option[Double])](
+        (1L, 1L, ts(0), Some(-8.2), None), (2L, 1L, ts(1), Some(-8.2), Some(110.0)),
+        (3L, 2L, ts(2), Some(-7.5), Some(110.5)), (4L, 2L, ts(3), None, None),
+        (5L, 2L, ts(4), Some(-7.5), Some(110.6))), (2L, "g00_0")),
+      (lattice10k, Seq[(Long, Long, Timestamp, Option[Double], Option[Double])](
         (1L, 1L, ts(0), Some(-7.5), Some(108.0)), (2L, 1L, ts(1), None, Some(108.1)),
-        (3L, 2L, ts(2), Some(-7.4), None), (4L, 2L, ts(3), Some(-7.4), Some(108.1)))
+        (3L, 2L, ts(2), Some(-7.4), None), (4L, 2L, ts(3), Some(-7.4), Some(108.1))), (4L, "k05255")))
+    for (((fences, rows, (centred, fence)), i) <- cases.zipWithIndex) {
+      val track = rows.toDF("event_id", "user_id", "ts", "lat", "lon")
+      val batch = statusKeys(Geofence.fenceStatus(track, fences))
+      val stream = statusKeys(GeofenceStream.runBatchAsStream(spark, track, fences,
+        queryName = s"geofence_null_$i"))
+      val exp = reference(track, fences)
+      assert(batch == exp, s"${fences.size} fences, batch: ${diverged(batch, exp)}")
+      assert(stream == exp, s"${fences.size} fences, stream: ${diverged(stream, exp)}")
+      assert(batch.map(_._1) == rows.filter(r => r._4.nonEmpty && r._5.nonEmpty).map(_._1).toSet)
+      // the first located row of its user, at a fence centre
+      assert(Set((centred, fence, 0, "ENTER"), (centred, fence, 1, "INSIDE")).subsetOf(batch))
+    }
+  }
+
+  test("ties rank by key in batch and stream, at k = 1 and k = 3") {
+    // four fences on one centre; and a pair the same distance from
+    // `tiePoint` up to rounding, which GeoMath's haversine puts ta first
+    // and the column form of the same formula tb first
+    val tiePoint = (-6.811697496874067, 110.22311108787784)
+    val fences = Seq("d", "b", "c", "a").map(Fence(_, -7.5, 110.8, 2.0)) ++ Seq(
+      Fence("ta", -6.676984077735144, 110.21600285390147, 5.0),
+      Fence("tb", -6.699855888824801, 110.29906386512008, 5.0))
+    val track = Seq((1L, 1L, ts(0), -7.5, 110.8), (2L, 2L, ts(0), tiePoint._1, tiePoint._2))
       .toDF("event_id", "user_id", "ts", "lat", "lon")
-    val events = Geofence.fenceStatus(track, lattice10k)
-      .select("event_id").distinct().collect().map(_.getLong(0)).toSet
-    assert(events == Set(1L, 4L))
+    for ((k, keys) <- Seq(1 -> Map(1L -> Set("a"), 2L -> Set("ta")),
+                          3 -> Map(1L -> Set("a", "b", "c"), 2L -> Set("ta", "tb", "a")))) {
+      val batch = statusKeys(Geofence.fenceStatus(track, fences, k))
+      val stream = statusKeys(GeofenceStream.runBatchAsStream(spark, track, fences,
+        queryName = s"geofence_ties_$k", nearestFences = k))
+      assert(batch.groupBy(_._1).view.mapValues(_.map(_._2)).toMap == keys, s"k=$k: $batch")
+      assert(batch == reference(track, fences, k), s"k=$k: batch differs from the reference")
+      assert(stream == batch, s"k=$k: stream ${diverged(stream, batch)}")
+    }
   }
 
   test("10k fences: no fence-key literal in the plan, 3 nearest per point") {
@@ -156,8 +233,9 @@ class GeofenceSpec extends AnyFunSuite {
     val batch = statusKeys(Geofence.fenceStatus(track, lattice10k))
     val stream = statusKeys(GeofenceStream.runBatchAsStream(spark, track, lattice10k,
       queryName = "geofence_stream_10k"))
-    assert(batch.nonEmpty && stream == batch,
-      s"stream/batch diverged: ${stream.diff(batch).take(3)} vs ${batch.diff(stream).take(3)}")
+    assert(batch.nonEmpty && stream == batch, s"stream: ${diverged(stream, batch)}")
+    val exp = reference(track, lattice10k)
+    assert(batch == exp, s"batch: ${diverged(batch, exp)}")
   }
 
   test("FenceStore: persisted named collections with MERGE upsert (fence_index.go:21-48,88-96)") {
